@@ -559,13 +559,11 @@ FROM aug
     ),
 )
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread(): four full-text regex passes + an md5 per row, map-only,
-    # on a 1-2 split local scan (the split-bound class — q_text_
-    # readability's twin). Keyed on the unique doc_id; no-op at real
-    # scale.
-    from cloud_data_sync_spark.tables import spread
-
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
+    # No spread(): this key's plan rule (tools/plan_audit.py) forbids any
+    # Exchange. A keyed spread before the regex passes measured 1.96 ->
+    # 0.95 s at sf1 (split-bound 1-2 split local scan), but it stays out
+    # until the rule can tell a policy-inserted repartition from a shuffle.
+    docs = load_table(spark, sf_dir, "documents")
     aug = F.concat(
         F.col("text"),
         F.when(

@@ -44,7 +44,7 @@ from cloud_data_sync_spark.sources.listing import (
     list_objects_binaryfile,
     provider_conf,
 )
-from cloud_data_sync_spark.tables import materialize
+from cloud_data_sync_spark.tables import local_frame, materialize
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
@@ -158,7 +158,7 @@ def _catalog(
         # propagate: an empty catalog from a transient source-listing error
         # would make the reconciliation plan delete every target object.
         if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], CATALOG_SCHEMA)
+            return local_frame(spark, [], CATALOG_SCHEMA)
         raise
 
 
@@ -198,14 +198,12 @@ def sync_buckets(
     # reference has the same blast radius and no guard (sync.go:199-234);
     # we refuse instead. A genuinely emptied source is actioned by
     # explicitly passing allow_empty_source=True.
-    if not allow_empty_source and src.limit(1).count() == 0:
-        tgt_has = tgt.limit(1).count() > 0
-        if tgt_has:
-            raise RuntimeError(
-                f"mapping {mid}: source listing at {src_root!r} is EMPTY but "
-                f"the target is not — refusing the all-delete plan. Pass "
-                f"allow_empty_source=True if the source was genuinely emptied."
-            )
+    if not allow_empty_source and src.isEmpty() and not tgt.isEmpty():
+        raise RuntimeError(
+            f"mapping {mid}: source listing at {src_root!r} is EMPTY but "
+            f"the target is not — refusing the all-delete plan. Pass "
+            f"allow_empty_source=True if the source was genuinely emptied."
+        )
 
     # ensure target root exists (EnsureBucketExists, sync.go:88-91) —
     # Hadoop FS path, so cloud schemes work, not just file:
@@ -265,7 +263,7 @@ def sync_buckets(
     if skipped:
         counts["skip"] = skipped
 
-    if new_slice.limit(1).count() == 0:
+    if new_slice.isEmpty():
         # dynamic overwrite cannot clear a partition with no rows in the
         # write; if this mapping's state just emptied, remove its stale
         # files so the deleted rows don't resurrect on the next load

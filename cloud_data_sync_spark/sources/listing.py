@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from cloud_data_sync_spark.tables import local_frame
+
 CATALOG_SCHEMA = StructType(
     [
         StructField("mapping_id", StringType(), False),
@@ -182,7 +184,8 @@ def list_objects(
     aws/client.go:95-116 has no analog here). For local (file:) roots the
     per-object content type + user metadata come from xattrs (see
     ``object_meta_local``); cloud-SDK listers surface the provider's
-    object metadata through the same two columns."""
+    object metadata through the same two columns. The rows become an Arrow
+    local relation (``tables.local_frame``), so no Python task reads them."""
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
     hconf = jsc.hadoopConfiguration()
@@ -211,34 +214,21 @@ def list_objects(
                 )
             name = p[len(root) + 1 :]
             ct, md = object_meta_local(p) if is_local else (None, {})
+            # each FileStatus getter is a py4j round trip: read each once
+            size, mtime_ms = st.getLen(), st.getModificationTime()
             rows.append(
                 (
                     mapping_id,
                     name,
                     root_uri,
-                    st.getLen(),
-                    st.getModificationTime(),  # epoch millis
-                    f"{st.getLen()}-{st.getModificationTime()}",  # etag proxy
+                    size,
+                    mtime_ms * 1000,  # epoch micros
+                    f"{size}-{mtime_ms}",  # etag proxy
                     ct,
                     md,
                 )
             )
-    df = spark.createDataFrame(
-        rows,
-        "mapping_id string, object_name string, bucket string, size long, "
-        "mtime_ms long, etag string, content_type string, "
-        "metadata map<string,string>",
-    )
-    return df.select(
-        "mapping_id",
-        "object_name",
-        "bucket",
-        "size",
-        F.timestamp_millis(F.col("mtime_ms")).alias("last_modified"),
-        "etag",
-        "content_type",
-        "metadata",
-    )
+    return local_frame(spark, rows, CATALOG_SCHEMA)
 
 
 def list_objects_binaryfile(

@@ -30,6 +30,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from cloud_data_sync_spark.tables import local_frame
+
 STATE_SCHEMA = StructType(
     [
         StructField("mapping_id", StringType(), False),
@@ -174,7 +176,7 @@ def _write_state_version(path: str, spark: SparkSession | None = None) -> None:
 
 
 def empty_state(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], STATE_SCHEMA)
+    return local_frame(spark, [], STATE_SCHEMA)
 
 
 def state_exists(spark: SparkSession, path: str) -> bool:

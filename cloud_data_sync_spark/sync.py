@@ -17,8 +17,8 @@ At 100 TB scale the classification never touches object payloads — it joins
 *listings* (metadata only). The copy stage downstream reads bytes only for
 rows where ``action='copy'`` (see ``executor.py``). Joins are key-equality on
 ``(mapping_id, object_name)``; the state table is partitioned by
-``mapping_id`` so partition pruning keeps each mapping's diff local, and AQE
-picks broadcast-hash when one side is small.
+``mapping_id`` so partition pruning keeps each mapping's diff local; both
+joins are hinted shuffled-hash joins (see ``sync_diff``).
 """
 
 from __future__ import annotations
@@ -93,9 +93,17 @@ def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
     # run; q_sync_incremental 3.2 s at sf1). SHUFFLE_HASH pins the
     # scale-correct shape (one object_name exchange per side, no sort —
     # the diff is a hash lookup, exactly the reference's point-lookup
-    # loop); AQE still converts to broadcast at runtime when a listing
-    # side is genuinely small, from real sizes instead of estimates
-    # (guide §3.1).
+    # loop). AQE does NOT turn a hinted join back into a broadcast when a
+    # side is small (checked on pyspark 4.1.2: a 100-row hinted side ran
+    # ShuffledHashJoin), so even a 10-object mapping pays both exchanges.
+    # Measured and rejected: dropping both hints over Arrow-local
+    # listings made the steady sync tick slower on a 4-vCPU VM (perfbench
+    # sync_steady, 3.38 -> 4.19 s at seed 3; 3.2 -> 3.9 s traced at seed
+    # 4). The broadcast join keeps the LocalTableScan's partitioning, so
+    # the plan reaches execute_plan's mapInPandas in 16 partitions instead
+    # of the 2 the coalesced shuffle leaves: 16 Python tasks instead of 2
+    # (executor 0.55 -> 1.05 s, peak RSS +0.8 GiB). Dropping the hints
+    # therefore first needs the executor to choose its own partition count.
     upserts = (
         src.join(st.hint("shuffle_hash"), on=keys, how="left")
         .withColumn("reason", reason)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -250,6 +251,33 @@ def materialize(
         spark.sparkContext.setCheckpointDir(ckdir)
         _CKDIR_SET[app] = ckdir
     return df.checkpoint(eager=eager)
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType
+) -> DataFrame:
+    """DataFrame over driver-built ``rows`` (tuples in ``schema``'s field
+    order) that never runs a Python task.
+
+    ``spark.createDataFrame(list, schema)`` plans as a ``LogicalRDD`` over
+    ``parallelize`` plus a Python identity map, with no size statistics:
+    every job that reads it launches Python workers again. Handing Spark an
+    Arrow table instead gives a JVM ``LocalRelation`` with exact sizes
+    below ``spark.sql.execution.arrow.localRelationThreshold``, and above
+    it an RDD of Arrow batches decoded in JVM executors. Values must be
+    what ``pyarrow.array`` accepts for each field's Arrow type: timestamps
+    as timezone-aware datetimes or epoch microseconds, maps as dicts.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def session_substrate(

@@ -7,24 +7,24 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from cloud_data_sync_spark import state as state_mod
 from cloud_data_sync_spark.config import BucketMapping, Config
 from cloud_data_sync_spark.runner import sync_all, sync_buckets
 
 
-@pytest.fixture()
-def env(tmp_path):
-    src = tmp_path / "src" / "bucket-a"
-    tgt = tmp_path / "tgt" / "bucket-b"
+def _make_env(root):
+    src = root / "src" / "bucket-a"
+    tgt = root / "tgt" / "bucket-b"
     src.mkdir(parents=True)
     (src / "a.txt").write_bytes(b"hello world")
     (src / "nested" / "b.txt").parent.mkdir()
     (src / "nested" / "b.txt").write_bytes(b"nested content")
     cfg = Config(
         providers=[
-            {"id": "s", "type": "minio", "minioConfig": {"endpoint": str(tmp_path / "src")}},
-            {"id": "t", "type": "minio", "minioConfig": {"endpoint": str(tmp_path / "tgt")}},
+            {"id": "s", "type": "minio", "minioConfig": {"endpoint": str(root / "src")}},
+            {"id": "t", "type": "minio", "minioConfig": {"endpoint": str(root / "tgt")}},
         ],
         mappings=[
             BucketMapping(
@@ -35,7 +35,12 @@ def env(tmp_path):
             )
         ],
     )
-    return cfg, src, tgt, str(tmp_path / "state")
+    return cfg, src, tgt, str(root / "state")
+
+
+@pytest.fixture()
+def env(tmp_path):
+    return _make_env(tmp_path)
 
 
 def test_first_sync_copies_everything(spark, env):
@@ -319,25 +324,41 @@ def test_removed_source_metadata_clears_from_target(spark, env):
     assert md == {}, f"stale metadata survived the overwrite: {md}"
 
 
-def test_empty_source_with_nonempty_target_refuses_mass_delete(spark, env):
-    """A typo'd or unmounted source lists empty; the plan would then delete
-    every target object. The guard refuses unless explicitly overridden."""
+def _assert_empty_source_refused(spark, env, distributed):
     import shutil as _shutil
 
     cfg, src, tgt, state_path = env
-    sync_all(spark, cfg, state_path)
+    sync_all(spark, cfg, state_path, distributed_listing=distributed)
     assert (tgt / "a.txt").exists()
 
     _shutil.rmtree(src)
     src.mkdir(parents=True)
-    # guarded call: mapping fails, target untouched
-    reports = sync_all(spark, cfg, state_path)
+    # guarded call: the refusal itself raises, the mapping fails, the
+    # target is untouched
+    with pytest.raises(RuntimeError, match="refusing the all-delete plan"):
+        sync_buckets(
+            spark, cfg, cfg.mappings[0], state_path, distributed_listing=distributed
+        )
+    reports = sync_all(spark, cfg, state_path, distributed_listing=distributed)
     assert reports[0].counts.get("mapping_failed") == 1
     assert (tgt / "a.txt").exists()
     # explicit override: the emptied source is actioned
-    reports = sync_all(spark, cfg, state_path, allow_empty_source=True)
+    reports = sync_all(
+        spark, cfg, state_path, distributed_listing=distributed, allow_empty_source=True
+    )
     assert reports[0].counts.get("delete_success", 0) >= 2
     assert not (tgt / "a.txt").exists()
+
+
+def test_empty_source_with_nonempty_target_refuses_mass_delete(spark, env):
+    """A typo'd or unmounted source lists empty; the plan would then delete
+    every target object. The guard refuses unless explicitly overridden."""
+    _assert_empty_source_refused(spark, env, distributed=False)
+
+
+def test_empty_distributed_listing_refuses_mass_delete(spark, env):
+    """The same guard holds when the binaryFile index lists the source."""
+    _assert_empty_source_refused(spark, env, distributed=True)
 
 
 def test_emptied_mapping_state_partition_is_cleared(spark, env):
@@ -379,3 +400,103 @@ def test_load_state_raises_on_unreadable_table(spark, tmp_path):
         f.write(b"this is not parquet")
     with _pytest.raises(Exception):
         state_mod.load_state(spark, state_path).collect()
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed()
+
+
+def _set_xattrs(src):
+    try:
+        os.setxattr(src / "a.txt", "user.content-type", b"text/x-custom")
+        os.setxattr(src / "a.txt", "user.cache-control", b"max-age=60")
+    except OSError:
+        pytest.skip("filesystem has no user-xattr support")
+
+
+def test_driver_built_frames_are_local_relations(spark, env):
+    """Driver listings, the empty state and the missing-root catalog plan as
+    JVM LocalRelations: a job that reads them launches no Python task."""
+    from cloud_data_sync_spark.runner import _catalog
+    from cloud_data_sync_spark.sources.listing import list_objects
+
+    cfg, src, tgt, state_path = env
+    _set_xattrs(src)
+    listed = list_objects(spark, str(src), "m")
+    empty = list_objects(spark, str(tgt), "m")  # root does not exist yet
+    missing = _catalog(spark, f"file://{tgt}", "m", distributed=True)
+    for df in (listed, empty, missing, state_mod.empty_state(spark)):
+        plan = _analyzed(df).toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+    expected = [
+        ("mapping_id", "string"),
+        ("object_name", "string"),
+        ("bucket", "string"),
+        ("size", "bigint"),
+        ("last_modified", "timestamp"),
+        ("etag", "string"),
+        ("content_type", "string"),
+        ("metadata", "map<string,string>"),
+    ]
+    assert listed.dtypes == expected
+    assert empty.dtypes == expected and empty.isEmpty()
+    assert missing.dtypes == expected and missing.isEmpty()
+
+    ms = F.unix_millis("last_modified").alias("ms")
+    rows = {r["object_name"]: r for r in listed.select("*", ms).collect()}
+    assert set(rows) == {"a.txt", "nested/b.txt"}
+    a = rows["a.txt"]
+    assert (a["mapping_id"], a["bucket"], a["size"]) == ("m", str(src), 11)
+    assert a["ms"] == os.stat(src / "a.txt").st_mtime_ns // 1_000_000
+    assert a["etag"] == f"11-{a['ms']}"
+    assert a["content_type"] == "text/x-custom"
+    assert a["metadata"] == {"cache-control": "max-age=60"}
+    b = rows["nested/b.txt"]
+    assert (b["content_type"], b["metadata"]) == (None, {})
+
+
+def _three_ticks(spark, env):
+    """First sync, then a tick after one rewrite, one delete and one add,
+    then an idle tick: the three reports' counts."""
+    cfg, src, tgt, state_path = env
+    counts = [sync_all(spark, cfg, state_path)[0].counts]
+    (src / "a.txt").write_bytes(b"changed content!")
+    os.remove(src / "nested" / "b.txt")
+    (src / "c.txt").write_bytes(b"new")
+    counts.append(sync_all(spark, cfg, state_path)[0].counts)
+    counts.append(sync_all(spark, cfg, state_path)[0].counts)
+    return counts
+
+
+def test_listing_above_local_relation_threshold(spark, tmp_path):
+    """Past spark.sql.execution.arrow.localRelationThreshold a listing is an
+    RDD of Arrow batches decoded in JVM executors, a branch no benchmark
+    workload reaches. It lists the same rows, its lineage holds no
+    PythonRDD, and sync ticks over it report what they report below the
+    threshold."""
+    from cloud_data_sync_spark.sources.listing import list_objects
+
+    below, above = _make_env(tmp_path / "below"), _make_env(tmp_path / "above")
+    for e in (below, above):
+        _set_xattrs(e[1])
+    rows = sorted(list_objects(spark, str(above[1]), "m").collect())
+    expected = _three_ticks(spark, below)
+
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        listed = list_objects(spark, str(above[1]), "m")
+        plan = _analyzed(listed)
+        assert plan.getClass().getSimpleName() == "LogicalRDD"
+        assert "PythonRDD" not in plan.rdd().toDebugString()
+        assert sorted(listed.collect()) == rows
+        got = _three_ticks(spark, above)
+    finally:
+        spark.conf.set(key, previous)
+    assert got == expected == [
+        {"copy_success": 2},
+        {"copy_success": 2, "delete_success": 1},
+        {"skip": 2},
+    ]
