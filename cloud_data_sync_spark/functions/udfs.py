@@ -572,9 +572,6 @@ _OVERLAP_SOURCES = ("src1", "src2", "src3", "src4")
 
 _OVERLAP_SOURCES_SQL = ", ".join(f"'{s}'" for s in _OVERLAP_SOURCES)
 
-_OVERLAP_PERSRC_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 @register(
     "q_hll_pair_overlap",
     oracle=f"""
@@ -643,7 +640,6 @@ def q_hll_pair_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_src = session_substrate(
         spark,
-        _OVERLAP_PERSRC_SUBSTRATE,
         sf_dir,
         "hll.pair_persrc",
         "documents",

@@ -1446,9 +1446,6 @@ def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 # types × days rows, KB at any corpus size. plan= on each consumer
 # keeps the audit pinned to the builder pipeline (the plan that
 # executes at scale, where the substrate is a written rollup table).
-_DAILY_EVENTS_SUBSTRATE: dict = {}
-
-
 def _daily_events_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         load_table(spark, sf_dir, "events")
@@ -1462,7 +1459,6 @@ def daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return session_substrate(
         spark,
-        _DAILY_EVENTS_SUBSTRATE,
         sf_dir,
         "analytics.daily_events",
         "events",
@@ -2929,9 +2925,6 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GLOBAL rank, computed in the distributed two-phase form (see the
 # q_spend_gini doc), consumed by the Gini coefficient and the Lorenz
 # curve. plan= on each consumer pins the audit to this builder.
-_RANKED_SPEND_SUBSTRATE: dict = {}
-
-
 def _ranked_spend_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
         load_table(spark, sf_dir, "orders")
@@ -2980,7 +2973,6 @@ def ranked_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return session_substrate(
         spark,
-        _RANKED_SPEND_SUBSTRATE,
         sf_dir,
         "analytics.ranked_spend",
         "orders",

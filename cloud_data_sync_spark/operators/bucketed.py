@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_sync_spark.registry import register
-from cloud_data_sync_spark.tables import load_table, table_path
+from cloud_data_sync_spark.tables import input_vintage, load_table
 
 # Bucket count, overridable per deployment via conf (r6 verdict item 6):
 # the right value is ~cluster-core scale (hundreds to thousands) so every
@@ -58,17 +58,11 @@ def _bucket_count(spark: SparkSession) -> int:
 # vintages) -> {table: catalog name}. Names embed the key hash, so a fresh
 # session (new applicationId), a rewritten input (new vintage), or a new
 # bucket count writes fresh tables instead of trusting a stale catalog entry.
+# Not in tables.session_cached's store: every hit is revalidated against the
+# catalog, so a dropped table is rewritten instead of served.
 _LAYOUT_CACHE: dict[tuple, dict[str, str]] = {}
 
 _FACTS = (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
-
-
-def _vintage(sf_dir: str, name: str) -> tuple:
-    try:
-        st = os.stat(table_path(sf_dir, name))
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return ()
 
 
 def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
@@ -80,7 +74,7 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         spark.sparkContext.applicationId,
         sf_dir,
         buckets,
-        tuple(_vintage(sf_dir, t) for t, _ in _FACTS),
+        input_vintage(sf_dir, tuple(t for t, _ in _FACTS)),
     )
     hit = _LAYOUT_CACHE.get(key)
     if hit is not None and all(

@@ -192,13 +192,9 @@ def _shingle8(toks: Column) -> Column:
 # its eval and train sides) and q_ngram_dup_mass (its doc_id % 8 audit
 # sample — the filter commutes with the per-row shingle map, so the
 # sample reads the same table). Longs-only payload, ~1 long per token.
-_GRAM8_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def _aug_gram8(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_substrate(
         spark,
-        _GRAM8_SUBSTRATE,
         sf_dir,
         "corpus.aug_gram8",
         "documents",

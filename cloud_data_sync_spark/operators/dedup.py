@@ -32,6 +32,7 @@ from cloud_data_sync_spark.registry import floor_ratio, register
 from cloud_data_sync_spark.tables import (
     load_table,
     materialize,
+    session_cached,
     session_substrate,
     spread as _spread,
 )
@@ -52,9 +53,6 @@ AUG_OFFSET = 1 << 42
 # -- augmented corpus (identical construction in Spark and oracle SQL) -------
 
 
-_AUG_ID_GUARD: dict[tuple, bool] = {}
-
-
 def guard_augment_id_space(spark: SparkSession, sf_dir: str) -> None:
     """Fail LOUDLY if original doc_ids reach the 1M augmentation offset.
 
@@ -71,26 +69,21 @@ def guard_augment_id_space(spark: SparkSession, sf_dir: str) -> None:
     campaign) that raises instead of letting the campaign mis-attribute
     (r8 ADVICE, generalized from q_dup_inflation — which now carries
     `source` through the branches and needs no recovery)."""
-    from cloud_data_sync_spark.tables import _file_vintage, _session_key, table_path
 
-    key = (
-        _session_key(spark),
-        sf_dir,
-        _file_vintage(table_path(sf_dir, "documents")),
-    )
-    if _AUG_ID_GUARD.get(key):
-        return
-    docs = load_table(spark, sf_dir, "documents")
-    mx = docs.agg(F.max("doc_id").alias("m")).collect()[0].m
-    if mx is not None and mx >= AUG_OFFSET:
-        raise ValueError(
-            f"augment id-space guard: max(doc_id)={mx} >= {AUG_OFFSET} "
-            "(2^42) — the augmentation branch offsets (k * 2^42) would "
-            "collide with original ids; offset-based base-id recovery "
-            "and crawl-batch membership would mis-attribute. Raise "
-            "AUG_OFFSET before running dedup at this id scale"
-        )
-    _AUG_ID_GUARD[key] = True
+    def check() -> bool:
+        docs = load_table(spark, sf_dir, "documents")
+        mx = docs.agg(F.max("doc_id").alias("m")).collect()[0].m
+        if mx is not None and mx >= AUG_OFFSET:
+            raise ValueError(
+                f"augment id-space guard: max(doc_id)={mx} >= {AUG_OFFSET} "
+                "(2^42) — the augmentation branch offsets (k * 2^42) would "
+                "collide with original ids; offset-based base-id recovery "
+                "and crawl-batch membership would mis-attribute. Raise "
+                "AUG_OFFSET before running dedup at this id scale"
+            )
+        return True
+
+    session_cached(spark, sf_dir, "dedup-aug-id-guard", "documents", check)
 
 
 def augmented_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,9 +325,6 @@ def minhash_signatures(
     return hs.select("doc_id", "sh", sig.alias("sig"))
 
 
-_SIG_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The augmented corpus's ``(doc_id, shh, sig)`` signature table,
     materialized ONCE per (session, sf_dir, documents vintage).
@@ -351,7 +341,6 @@ def corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     return session_substrate(
         spark,
-        _SIG_SUBSTRATE,
         sf_dir,
         "dedup-sig",
         "documents",
@@ -521,13 +510,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_dedup_clusters builds its duplicate graph from exactly these pairs —
 # so it materializes once per (session, documents vintage). Pair-key rows
 # only (ids + one double), never signatures or text.
-_DUP_PAIR_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def _minhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_substrate(
         spark,
-        _DUP_PAIR_SUBSTRATE,
         sf_dir,
         "dedup.minhash_dups",
         "documents",
@@ -773,13 +758,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table — (doc_id, cluster_id) pairs, graph-node-sized — materializes
 # once. This also caches the iterative CC computation itself: label
 # propagation's per-round convergence counts run once per input vintage.
-_CLUSTER_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_substrate(
         spark,
-        _CLUSTER_SUBSTRATE,
         sf_dir,
         "dedup.cluster_labels",
         "documents",
@@ -1300,9 +1281,6 @@ WHERE round(list_sum(list_transform(range(1, len(a.v) + 1),
 """
 
 
-_EMB_PAIR_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def embedding_candidate_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_a, vec_b, label, cos_sim) for every (label × LSH-band) candidate
     pair, cosine rounded to 6 dp — the shared pair pipeline behind
@@ -1313,7 +1291,6 @@ def embedding_candidate_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set instead of re-running the band join + Arrow cosine batch."""
     return session_substrate(
         spark,
-        _EMB_PAIR_SUBSTRATE,
         sf_dir,
         "emb-pairs",
         "embeddings",
@@ -1738,15 +1715,11 @@ def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline to the audit
     return session_substrate(
         spark,
-        _PPJOIN_PAIR_SUBSTRATE,
         sf_dir,
         "dedup.ppjoin_pairs",
         "documents",
         lambda: exact_jaccard_pairs(spark, sf_dir, _PF_T),
     )
-
-
-_PPJOIN_PAIR_SUBSTRATE: dict[tuple, DataFrame] = {}
 
 
 def exact_jaccard_pairs(
@@ -2181,15 +2154,11 @@ def q_dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per build (~1 s at sf0.1) — cache it like the other audit substrates
     return session_substrate(
         spark,
-        _LSH_RECALL_SUBSTRATE,
         sf_dir,
         "dedup.lsh_recall",
         "documents",
         lambda: _lsh_recall_build(spark, sf_dir),
     )
-
-
-_LSH_RECALL_SUBSTRATE: dict[tuple, DataFrame] = {}
 
 
 def _lsh_recall_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2408,9 +2377,6 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CHUNK_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def substring_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, pos, h)`` per overlapping window of ``_SUB_CHUNK`` (100)
     chars at ``_SUB_STEP`` (50) stride — the substring chunk substrate
@@ -2442,7 +2408,7 @@ def substring_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return session_substrate(
-        spark, _CHUNK_SUBSTRATE, sf_dir, "dedup-substr-chunks", "documents", build
+        spark, sf_dir, "dedup-substr-chunks", "documents", build
     )
 
 
@@ -2938,9 +2904,6 @@ def q_dedup_sentence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SEG_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def sentence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, h, n_toks)`` per sentence-aligned segment of at least
     ``_SEG_MIN_TOKS`` tokens — the shared substrate behind the segment
@@ -3003,7 +2966,7 @@ def sentence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return session_substrate(
-        spark, _SEG_SUBSTRATE, sf_dir, "dedup-sentence-segs", "documents", build
+        spark, sf_dir, "dedup-sentence-segs", "documents", build
     )
 
 

@@ -243,9 +243,6 @@ def _trade_fact(spark: SparkSession, sf_dir: str):
 # substrate materializes it once per (session, input vintage) — ids and
 # a count only, KB-scale. plan= on each consumer keeps the audit pinned
 # to the builder pipeline (the plan that executes at scale).
-_TRADE_EDGE_SUBSTRATE: dict = {}
-
-
 def _trade_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _trade_fact(spark, sf_dir)
@@ -261,7 +258,6 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return session_substrate(
         spark,
-        _TRADE_EDGE_SUBSTRATE,
         sf_dir,
         "ml.trade_edges",
         ("lineitem", "orders", "customer", "supplier"),
@@ -606,15 +602,11 @@ def _probe_scored_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (session, embeddings vintage) — at 100 TB a pipeline writes the scored
 # probe output once and every audit reads it (guide §2.4: remove
 # repeated passes outright).
-_PROBE_SCORED_SUBSTRATE: dict = {}
-
-
 def _probe_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloud_data_sync_spark.tables import session_substrate
 
     return session_substrate(
         spark,
-        _PROBE_SCORED_SUBSTRATE,
         sf_dir,
         "ml.probe_scored",
         "embeddings",
@@ -1342,10 +1334,6 @@ _PAIR_TOPK = 20
 # substrate materializes the aggregates once per (session, input
 # vintage) — ids and counts only, far smaller than the fact table.
 # plan= on each consumer keeps the audit pinned to the builder pipeline.
-_ITEM_SUPPORT_SUBSTRATE: dict = {}
-_BASKET_PAIR_SUBSTRATE: dict = {}
-
-
 def _basket_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"), F.col("l_partkey").alias("item")
@@ -1365,7 +1353,6 @@ def item_support(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return session_substrate(
         spark,
-        _ITEM_SUPPORT_SUBSTRATE,
         sf_dir,
         "ml.item_support",
         "lineitem",
@@ -1403,7 +1390,6 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return session_substrate(
         spark,
-        _BASKET_PAIR_SUBSTRATE,
         sf_dir,
         "ml.basket_pairs",
         "lineitem",

@@ -701,9 +701,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RANKED_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def _ranked_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem prices ranked per l_returnflag (0-based) with the group
     count attached via the same partition window — THE distributed
@@ -734,7 +731,7 @@ def _ranked_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return session_substrate(
-        spark, _RANKED_SUBSTRATE, sf_dir, "ranked-prices", "lineitem", _build
+        spark, sf_dir, "ranked-prices", "lineitem", _build
     )
 
 

@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud_data_sync_spark.registry import floor_ratio, register
-from cloud_data_sync_spark.tables import load_table, session_substrate, spread
+from cloud_data_sync_spark.tables import (
+    input_vintage,
+    load_table,
+    session_substrate,
+    spread,
+)
 
 N_PLANES = 8
 DIM = 64
@@ -58,9 +63,6 @@ K_CENTROIDS = 32
 N_PROBE = 2
 
 
-_VEC_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, label, v double[], nrm) — the normalized-vector table every
     similarity query starts from, materialized once per (session,
@@ -85,7 +87,7 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).filter(F.col("nrm") > 0)
 
     return session_substrate(
-        spark, _VEC_SUBSTRATE, sf_dir, "sim-vectors", "embeddings", _build
+        spark, sf_dir, "sim-vectors", "embeddings", _build
     )
 
 
@@ -144,7 +146,7 @@ def _bf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline's rows verbatim (k×|queries| ids, KB-sized) instead of
     re-running the corpus×queries cosine pass."""
     return session_substrate(
-        spark, _VEC_SUBSTRATE, sf_dir, "sim-bf-topk", "embeddings",
+        spark, sf_dir, "sim-bf-topk", "embeddings",
         lambda: _bf_topk_build(spark, sf_dir),
     )
 
@@ -399,12 +401,10 @@ def ann_index_tables(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     stack recomputed all three per session). Values are identical to the
     in-flight pipeline by construction (the write runs that pipeline),
     so every oracle is unchanged."""
-    from cloud_data_sync_spark.tables import _file_vintage, table_path
-
     key = (
         spark.sparkContext.applicationId,
         sf_dir,
-        _file_vintage(table_path(sf_dir, "embeddings")),
+        input_vintage(sf_dir, ("embeddings",)),
     )
     hit = _ANN_LAYOUT_CACHE.get(key)
     if hit is not None and all(
@@ -568,7 +568,7 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force truth — the audit reads the audited pipeline's rows
     (k×|queries| ids, KB-sized) instead of re-running assignment+probe."""
     return session_substrate(
-        spark, _VEC_SUBSTRATE, sf_dir, "sim-ivf-topk", "embeddings",
+        spark, sf_dir, "sim-ivf-topk", "embeddings",
         lambda: _ivf_topk_build(spark, sf_dir),
     )
 
@@ -864,7 +864,7 @@ def _pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_sim_pq IS this table and q_sim_pq_recall scores it against the
     brute-force truth (the q_sim_ivf_recall scaffold)."""
     return session_substrate(
-        spark, _VEC_SUBSTRATE, sf_dir, "sim-pq-topk", "embeddings",
+        spark, sf_dir, "sim-pq-topk", "embeddings",
         lambda: _pq_topk_build(spark, sf_dir),
     )
 
@@ -1071,7 +1071,7 @@ def _ivf_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_substrate(
-        spark, _VEC_SUBSTRATE, sf_dir, "sim-ivfpq-topk", "embeddings",
+        spark, sf_dir, "sim-ivfpq-topk", "embeddings",
         lambda: _ivf_pq_build(spark, sf_dir),
     )
 

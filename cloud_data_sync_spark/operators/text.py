@@ -20,6 +20,7 @@ from cloud_data_sync_spark.registry import floor_ratio, register
 from cloud_data_sync_spark.tables import (
     load_table,
     materialize,
+    session_cached,
     session_substrate,
 )
 
@@ -652,12 +653,9 @@ def q_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (sampled doc_id, n_bigrams, avg_logp) — materializes once per (session,
 # documents vintage) rather than re-running the bigram count + join
 # pipeline per consumer.
-_LM_SUBSTRATE: dict = {}
-
-
 def _lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_substrate(
-        spark, _LM_SUBSTRATE, sf_dir, "text.lm_scored", "documents",
+        spark, sf_dir, "text.lm_scored", "documents",
         lambda: _lm_scored_build(spark, sf_dir),
     )
 
@@ -924,9 +922,6 @@ _BPE_PAIRS_SQL = (
 )
 
 
-_BPE_SEQS_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def _bpe_seqs0(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w, cnt, syms): the aggregated word-frequency dict, each word split
     into characters plus the '</w>' end marker — BPE trains on THIS
@@ -952,7 +947,7 @@ def _bpe_seqs0(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return session_substrate(
-        spark, _BPE_SEQS_SUBSTRATE, sf_dir, "bpe-seqs0", "documents", _build
+        spark, sf_dir, "bpe-seqs0", "documents", _build
     )
 
 
@@ -1102,35 +1097,18 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train_loop(_bpe_seqs0(spark, sf_dir), _BPE_TRAIN_ROUNDS)
 
 
-# learned merge pairs, cached per (session, sf_dir, documents vintage):
+# learned merge pairs, stored per (session, sf_dir, documents vintage):
 # q_bpe_train emits them as a result; q_bpe_encode re-derives them as a
 # MODEL to apply. The list is `rounds` tuples of short strings — a model
 # parameter pack, same class as a broadcast centroid table.
-_BPE_MERGE_CACHE: dict[tuple, list] = {}
-
-
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    from cloud_data_sync_spark.tables import (
-        _file_vintage,
-        _session_key,
-        table_path,
-    )
-
-    key = (
-        _session_key(spark),
-        sf_dir,
-        _file_vintage(table_path(sf_dir, "documents")),
-    )
-    got = _BPE_MERGE_CACHE.get(key)
-    if got is None:
+    def build() -> list[tuple[str, str]]:
         rows = bpe_train_loop(
             _bpe_seqs0(spark, sf_dir), _BPE_TRAIN_ROUNDS
         ).collect()
-        got = [(r["left_sym"], r["right_sym"]) for r in rows]
-        for stale in [k for k in _BPE_MERGE_CACHE if k[:2] == key[:2]]:
-            _BPE_MERGE_CACHE.pop(stale, None)
-        _BPE_MERGE_CACHE[key] = got
-    return got
+        return [(r["left_sym"], r["right_sym"]) for r in rows]
+
+    return session_cached(spark, sf_dir, "bpe-merges", "documents", build)
 
 
 @register(

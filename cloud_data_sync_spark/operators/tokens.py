@@ -18,9 +18,6 @@ def low_toks(col: str = "text") -> Column:
     return F.split(F.trim(F.lower(F.col(col))), r"\s+")
 
 
-_TOKS_SUBSTRATE: dict[tuple, DataFrame] = {}
-
-
 def toks_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``documents`` plus its ``toks`` (= ``low_toks()``) array column,
     materialized once per (session, documents vintage) via the shared
@@ -42,5 +39,5 @@ def toks_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         return docs.withColumn("toks", low_toks())
 
     return session_substrate(
-        spark, _TOKS_SUBSTRATE, sf_dir, "doc-toks", "documents", _build
+        spark, sf_dir, "doc-toks", "documents", _build
     )

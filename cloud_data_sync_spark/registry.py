@@ -25,6 +25,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cloud_data_sync_spark.tables import TABLE_NAMES, session_cached
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -59,7 +61,7 @@ class QuerySpec:
     plan_fn: QueryFn | None = None
 
 
-# Prepared-plan cache: the same (session, data-vintage)-keyed reuse
+# Prepared-plan cache: the session store (tables.session_cached) that
 # tables.load_table already applies to scans, lifted to whole registered
 # queries. A DataFrame is an immutable logical plan — re-invoking a
 # registered query on the SAME session and SAME table files can return
@@ -67,11 +69,10 @@ class QuerySpec:
 # run), but the build cost disappears: builders are py4j-bound (each
 # Column operator is a driver round trip) and profiling at r10 measured
 # ~36 s of the full registry's wall in plan construction alone. Real
-# engines call this a prepared-statement / plan cache. Keyed by
-# applicationId + realpath(sf_dir) + per-table (size, mtime) vintages,
-# so a rewritten/mutated input file misses the cache instead of serving
-# a stale plan (the gate suites rewrite tables in place); entries of
-# stopped sessions are purged on miss.
+# engines call this a prepared-statement / plan cache. The input vintage
+# covers all of TABLE_NAMES, so a rewritten/mutated input file misses the
+# cache instead of serving a stale plan (the gate suites rewrite tables
+# in place).
 #
 # Callers get a CLONE (a one-py4j-call `SELECT *` over the cached
 # analyzed plan), never the cached handle itself: an EXECUTED Dataset
@@ -83,27 +84,8 @@ class QuerySpec:
 # never executed (it holds only the analyzed tree; re-analysis of the
 # clone short-circuits on the resolved child) and each execution's
 # state dies with its transient clone — the pre-cache lifetime.
-_PREPARED: dict[tuple, DataFrame] = {}
-
-
 def _clone(df: DataFrame) -> DataFrame:
     return df.selectExpr("*")
-
-
-def _prepared_key(spark: SparkSession, sf_dir: str, name: str):
-    import os
-
-    from cloud_data_sync_spark import tables
-
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # noqa: BLE001 - stopped/odd session: don't cache
-        return None
-    # Glob-aware vintages (one scandir): split-file fixtures
-    # (events_000.parquet, ...) must miss the cache when they change, not
-    # hash to a constant () the way a single-file stat would (r10 ADVICE)
-    vintage = tables.all_table_vintages(sf_dir)
-    return (app, os.path.realpath(sf_dir), name, vintage)
 
 
 def register(
@@ -117,25 +99,12 @@ def register(
             raise ValueError(f"duplicate query name {name!r}")
 
         def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-            key = _prepared_key(spark, sf_dir, name)
-            if key is None:
-                return fn(spark, sf_dir)
-            hit = _PREPARED.get(key)
-            if hit is not None:
-                return _clone(hit)
-            from cloud_data_sync_spark import tables
-
-            tables.purge_dead_sessions(_PREPARED)
-            # Bound the cache: a miss with the same (app, sf_dir, name) but
-            # a different vintage means the inputs were rewritten in-session
-            # (the gate suites do this constantly) — the superseded entry
-            # can never hit again, so drop it instead of accumulating one
-            # dead plan per rewrite (r10 verdict item 2).
-            for stale in [k for k in _PREPARED if k[:3] == key[:3]]:
-                _PREPARED.pop(stale, None)
-            df = fn(spark, sf_dir)
-            _PREPARED[key] = df
-            return _clone(df)
+            return _clone(
+                session_cached(
+                    spark, sf_dir, f"query:{name}", TABLE_NAMES,
+                    lambda: fn(spark, sf_dir),
+                )
+            )
 
         prepared.__name__ = fn.__name__
         prepared.__doc__ = fn.__doc__

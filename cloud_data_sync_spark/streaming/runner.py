@@ -315,17 +315,6 @@ def run_available_now_group(
     )
 
 
-# drained-family cache: {(app, sf_dir, tag, events vintage) ->
-#   ({member -> memory-sink batch DataFrame}, {member -> final watermark})}.
-# The streaming analogue of tables.session_substrate — a family of
-# independent drains over the same immutable events file runs ONCE per
-# (session, input vintage), and every member key reads its own memory-sink
-# table from that one concurrent pass. Vintage-keyed like the batch
-# substrates: an in-session testdata rewrite misses the cache and evicts
-# the superseded entry.
-_FAMILY_CACHE: dict[tuple, tuple[dict[str, DataFrame], dict[str, str | None]]] = {}
-
-
 def drained_family(
     spark: SparkSession,
     sf_dir: str,
@@ -336,99 +325,73 @@ def drained_family(
     vintage_table: str = "events",
 ) -> tuple[dict[str, DataFrame], dict[str, str | None]]:
     """Run a FAMILY of independent availableNow drains concurrently, once
-    per (session, sf_dir, events vintage), and serve every member from
-    the cached memory-sink results. Returns ({member: batch DataFrame},
+    per (session, sf_dir, input vintage), and serve every member from
+    the stored memory-sink results. Returns ({member: batch DataFrame},
     {member: final watermark ISO string or None}).
 
     ``members`` maps a member name to ``(build, output_mode)`` where
-    ``build()`` returns the streaming result DataFrame. Memory-sink table
-    names embed a vintage digest so a same-session drain at another
-    sf_dir (tests at sf0.001, bench at sf0.1) cannot clobber a cached
-    family's sink tables.
+    ``build()`` returns the streaming result DataFrame. ``vintage_table``
+    names the family's input table (events for the window/join/stateful
+    families, documents for the crawl family). The drain is the streaming
+    analogue of tables.session_substrate and lives in the same session
+    store under ``tag``, so an in-session rewrite of the input misses and
+    evicts the superseded result.
+
+    Memory-sink views are named ``t_<tag>_<member>_<crc32(sf_dir)>``, so a
+    same-session drain at another sf_dir (tests at sf0.001, bench at
+    sf0.1) cannot clobber a stored family's sink tables. A miss drops
+    each member's view before it drains: the superseded vintage's sink
+    tables would otherwise pin their FULL result sets in driver memory
+    for the session's lifetime (r7 ADVICE).
 
     Why this exists: each bounded drain pays an irreducible ~0.5-1 s
     floor (query start/stop, per-micro-batch planning, state-store
     setup, checkpoint commit ceremony) that at sf0.1 dominated the
     stream family's 10 s bench total. Draining the family concurrently
-    collapses N floors into ~max-of-N, and the cache means the 2nd..Nth
+    collapses N floors into ~max-of-N, and the store means the 2nd..Nth
     member keys cost ~0 — without weakening the real-readStream claim:
     every member is still a genuine streaming query with its own
     watermark and state (r6 verdict item 2).
     """
     import zlib
 
-    from cloud_data_sync_spark.tables import (
-        _session_key,
-        table_files_vintage,
-    )
+    from cloud_data_sync_spark.tables import session_cached
 
-    # ``vintage_table`` names the family's input table (events for the
-    # window/join/stateful families, documents for the crawl family) so
-    # the cache keys on the right file's vintage. Glob-aware: the stream
-    # reader's pathGlobFilter is <table>*.parquet, so the vintage must
-    # cover split-file fixtures (events_000.parquet, ...) too — a
-    # single-file stat would hand every such dir the constant () vintage
-    # and serve stale drains after an in-session rewrite (r10 ADVICE).
-    vintage = table_files_vintage(sf_dir, vintage_table)
-    base = (_session_key(spark), sf_dir, tag)
-    key = base + (vintage,)
-    cached = _FAMILY_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _FAMILY_CACHE if k[:3] == base]:
-        _FAMILY_CACHE.pop(stale, None)
-        # also drop the superseded vintage's memory-sink temp views: the
-        # sink tables (t_<tag>_<member>_<suffix>) pin their FULL result
-        # sets in driver memory for the session's lifetime otherwise —
-        # the suffix is derivable from the stale key's (sf_dir, vintage)
-        # exactly as it was built below (r7 ADVICE)
-        stale_suffix = zlib.crc32(repr((stale[1], stale[3])).encode()) & 0xFFFFFFFF
-        for member in members:
-            try:
-                spark.catalog.dropTempView(f"t_{tag}_{member}_{stale_suffix:08x}")
-            except Exception:  # noqa: BLE001 - custom-sink members have no view
-                pass
-    # dead-session purge (same rationale as tables.purge_dead_sessions)
-    dead = []
-    for k, (dfs, _) in _FAMILY_CACHE.items():
-        try:
-            if next(iter(dfs.values())).sparkSession.sparkContext._jsc is None:
-                dead.append(k)
-        except Exception:  # noqa: BLE001
-            dead.append(k)
-    for k in dead:
-        _FAMILY_CACHE.pop(k, None)
-    suffix = zlib.crc32(repr((sf_dir, vintage)).encode()) & 0xFFFFFFFF
-    specs = []
-    finalizers: dict[str, object] = {}
-    for name, (build, output_mode) in members.items():
-        qname = f"t_{tag}_{name}_{suffix:08x}"
-        if output_mode == "custom":
-            # custom-sink member: build() -> (starter(ckpt) -> query,
-            # finalize() -> DataFrame). The starter owns its sink (e.g.
-            # foreachBatch to a parquet log); finalize reads the result
-            # back after the whole group terminates.
-            starter, finalize = build()
-            specs.append((starter, qname, output_mode))
-            finalizers[name] = finalize
-        else:
-            specs.append((build(), qname, output_mode))
-    drained, wms = run_available_now_group(
-        specs, drain_partitions=drain_partitions, no_data_batch=no_data_batch
-    )
-    out = (
-        {
-            name: (
-                finalizers[name]()
-                if name in finalizers
-                else drained[f"t_{tag}_{name}_{suffix:08x}"]
-            )
-            for name in members
-        },
-        {name: wms[f"t_{tag}_{name}_{suffix:08x}"] for name in members},
-    )
-    _FAMILY_CACHE[key] = out
-    return out
+    suffix = zlib.crc32(sf_dir.encode()) & 0xFFFFFFFF
+    views = {name: f"t_{tag}_{name}_{suffix:08x}" for name in members}
+
+    def drain():
+        for view in views.values():
+            spark.catalog.dropTempView(view)
+        specs = []
+        finalizers: dict[str, object] = {}
+        for name, (build, output_mode) in members.items():
+            if output_mode == "custom":
+                # custom-sink member: build() -> (starter(ckpt) -> query,
+                # finalize() -> DataFrame). The starter owns its sink (e.g.
+                # foreachBatch to a parquet log); finalize reads the result
+                # back after the whole group terminates.
+                starter, finalize = build()
+                specs.append((starter, views[name], output_mode))
+                finalizers[name] = finalize
+            else:
+                specs.append((build(), views[name], output_mode))
+        drained, wms = run_available_now_group(
+            specs, drain_partitions=drain_partitions, no_data_batch=no_data_batch
+        )
+        return (
+            {
+                name: (
+                    finalizers[name]()
+                    if name in finalizers
+                    else drained[views[name]]
+                )
+                for name in members
+            },
+            {name: wms[views[name]] for name in members},
+        )
+
+    return session_cached(spark, sf_dir, tag, vintage_table, drain)
 
 
 def keep_first(df: DataFrame, partition_cols, order_cols) -> DataFrame:

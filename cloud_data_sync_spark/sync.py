@@ -247,13 +247,9 @@ plan AS (
 # computes the counters while executing the plan, sync.go:97-99 — one
 # pass, not two), so sharing one lazily-checkpointed copy mirrors the
 # reference's single-pass semantics. Listing-sized rows, never payloads.
-_SYNC_SUBSTRATE: dict = {}
-
-
 def _synthetic_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_substrate(
         spark,
-        _SYNC_SUBSTRATE,
         sf_dir,
         "sync.plan",
         "orders",

@@ -33,13 +33,13 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# plan cache: building a scan DataFrame costs a driver round-trip for footer
-# schema inference; queries re-load the same tables constantly. Keyed by the
-# session's applicationId (unique per SparkContext — id() can be reused
-# after GC) plus the file's (size, mtime) vintage so an in-session rewrite
-# misses the cache instead of returning a stale file index. Entries of
-# stopped sessions are purged on each miss.
-_PLAN_CACHE: dict[tuple[str, str, str, tuple], DataFrame] = {}
+# The session store: every derived object the package reuses inside one
+# Spark session (scan plans, prepared query plans, materialized substrates,
+# drained stream families, model parameter packs) is one entry here, keyed
+# (applicationId, realpath(sf_dir), tag, input vintage). applicationId is
+# unique per SparkContext (id() can be reused after GC); the vintage makes
+# an in-session rewrite of an input miss instead of serving stale rows.
+_SESSION_STORE: dict[tuple, object] = {}
 
 
 def _session_key(spark: SparkSession) -> str:
@@ -49,36 +49,70 @@ def _session_key(spark: SparkSession) -> str:
         return f"id-{id(spark)}"
 
 
-def _file_vintage(path: str) -> tuple:
-    try:
-        st = os.stat(path.replace("file://", "").replace("file:", ""))
-        return (st.st_size, st.st_mtime_ns)
-    except OSError:
-        return ()
-
-
-def table_files_vintage(sf_dir: str, name: str) -> tuple:
-    """Vintage over ALL files matching ``<name>*.parquet`` — the streaming
-    file source's pathGlobFilter convention (multi-batch fixtures split
-    events into events_000.parquet, ...). A single-file stat of
-    <name>.parquet returns a constant () for such dirs, so adding or
-    rewriting split files in the same session would silently serve stale
-    cached drains / prepared plans (r10 ADVICE). One scandir, sorted
-    (filename, size, mtime_ns) tuples; fnmatch mirrors the reader's glob
-    exactly."""
+def input_vintage(sf_dir: str, names: tuple[str, ...]) -> tuple:
+    """Per-name vintages of ``sf_dir`` in ONE scandir: for each name, the
+    sorted ``(filename, size, mtime_ns)`` of every file matching
+    ``<name>*.parquet``. The glob is the streaming file source's
+    pathGlobFilter convention, so split-file fixtures (events_000.parquet,
+    ...) get a real, change-sensitive vintage where a single-file stat of
+    <name>.parquet would return a constant (). A missing dir gives () for
+    every name."""
     import fnmatch
 
     base = sf_dir.replace("file://", "").replace("file:", "")
+    found: dict[str, list] = {n: [] for n in names}
     try:
-        out = []
         with os.scandir(base) as it:
             for e in it:
-                if fnmatch.fnmatchcase(e.name, f"{name}*.parquet"):
-                    st = e.stat()
-                    out.append((e.name, st.st_size, st.st_mtime_ns))
-        return tuple(sorted(out))
+                if not e.name.endswith(".parquet"):
+                    continue
+                for n, files in found.items():
+                    if fnmatch.fnmatchcase(e.name, f"{n}*.parquet"):
+                        st = e.stat()
+                        files.append((e.name, st.st_size, st.st_mtime_ns))
     except OSError:
-        return ()
+        pass
+    return tuple(tuple(sorted(found[n])) for n in names)
+
+
+def session_cached(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    inputs: str | tuple[str, ...],
+    build,
+):
+    """``build()``'s value (never None), built at most once per (session,
+    sf_dir, tag, vintage of ``inputs``).
+
+    ``inputs`` must name EVERY table ``build`` reads (a single string is
+    accepted for the one-input case): a key over a subset would serve
+    values that are stale with respect to the unlisted inputs. ``tag``
+    names the value and must be unique across the package, since every
+    caller shares this one store.
+
+    On a miss, the superseded vintage of the same (session, sf_dir, tag)
+    is evicted, dropping the last driver-side reference so the
+    ContextCleaner can release what it pinned, and so is every entry of
+    another applicationId: classic PySpark runs one SparkContext per
+    process, so those belong to stopped sessions. A session whose
+    applicationId is unreadable builds and stores nothing.
+    """
+    try:
+        app = spark.sparkContext.applicationId
+    except Exception:  # noqa: BLE001 - stopped/odd session: don't cache
+        return build()
+    if isinstance(inputs, str):
+        inputs = (inputs,)
+    base = (app, os.path.realpath(sf_dir), tag)
+    key = base + (input_vintage(sf_dir, inputs),)
+    hit = _SESSION_STORE.get(key)
+    if hit is not None:
+        return hit
+    for k in [k for k in _SESSION_STORE if k[0] != app or k[:3] == base]:
+        del _SESSION_STORE[k]
+    value = _SESSION_STORE[key] = build()
+    return value
 
 
 def table_num_rows(sf_dir: str, name: str) -> int:
@@ -106,51 +140,6 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     except OSError:
         return 0
     return total
-
-
-def all_table_vintages(sf_dir: str) -> tuple:
-    """Per-TABLE_NAMES glob vintages in ONE scandir pass — the prepared-plan
-    cache key calls this once per query invocation, so it must not cost ten
-    directory walks. Same glob semantics as table_files_vintage."""
-    import fnmatch
-
-    base = sf_dir.replace("file://", "").replace("file:", "")
-    buckets: dict[str, list] = {t: [] for t in TABLE_NAMES}
-    try:
-        with os.scandir(base) as it:
-            for e in it:
-                if not e.name.endswith(".parquet"):
-                    continue
-                for t in TABLE_NAMES:
-                    if fnmatch.fnmatchcase(e.name, f"{t}*.parquet"):
-                        st = e.stat()
-                        buckets[t].append((e.name, st.st_size, st.st_mtime_ns))
-    except OSError:
-        pass
-    return tuple(tuple(sorted(buckets[t])) for t in TABLE_NAMES)
-
-
-def purge_dead_sessions(cache: dict) -> None:
-    """Drop cache entries whose DataFrame belongs to a stopped session.
-
-    Shared by every session-scoped DataFrame cache in the package (the
-    plan cache here, the dedup signature substrate, the embedding pair
-    substrate): entries are keyed by applicationId, so a stopped session's
-    frames are unreachable garbage — holding them would pin JVM-side
-    references and grow the dict unboundedly across test sessions."""
-    dead = []
-    for k, df in cache.items():
-        try:
-            if df.sparkSession.sparkContext._jsc is None:
-                dead.append(k)
-        except Exception:  # noqa: BLE001
-            dead.append(k)
-    for k in dead:
-        cache.pop(k, None)
-
-
-def _purge_dead_sessions() -> None:
-    purge_dead_sessions(_PLAN_CACHE)
 
 
 # spark conf key: when set to a path, every lineage-truncation site in the
@@ -282,10 +271,9 @@ def local_frame(
 
 def session_substrate(
     spark: SparkSession,
-    cache: dict,
     sf_dir: str,
     tag: str,
-    table_names: str | tuple[str, ...],
+    inputs: str | tuple[str, ...],
     build,
 ) -> DataFrame:
     """Session-scoped materialization of a deterministic intermediate.
@@ -297,19 +285,8 @@ def session_substrate(
     sharing ONE lazily-materialized copy per (session, input vintage)
     is a materialized common subexpression — the session-scoped analogue of
     the signature/pair table a production pipeline at 100 TB writes once
-    and scans from many consumers — not a semantics change.
-
-    The cache key is computed HERE from the file vintages (size, mtime)
-    of EVERY table in ``table_names`` so no call site can forget the
-    staleness guard: an in-session testdata rewrite misses the cache
-    instead of serving stale rows, and the superseded same-(session,
-    sf_dir, tag) entry is evicted on that miss — dropping the last
-    driver-side reference so the ContextCleaner can unpersist its
-    materialized blocks instead of pinning them for the session's
-    lifetime. ``table_names`` must list ALL tables the builder reads
-    (a single string is accepted for the common one-input case): a
-    builder keyed on a subset would serve checkpointed rows that are
-    stale with respect to the unlisted inputs (r4 advice).
+    and scans from many consumers — not a semantics change. Keying,
+    eviction and the ``inputs`` contract are :func:`session_cached`'s.
 
     ``materialize(eager=False)`` (localCheckpoint, or a reliable
     checkpoint under ``spark.cloud_data_sync.checkpoint_dir``) computes
@@ -317,48 +294,12 @@ def session_substrate(
     scan the checkpoint instead of re-running tokenize/hash/sign
     pipelines.
     """
-    if isinstance(table_names, str):
-        table_names = (table_names,)
-    base = (_session_key(spark), sf_dir, tag)
-    key = base + tuple(
-        _file_vintage(table_path(sf_dir, t)) for t in table_names
+    return session_cached(
+        spark, sf_dir, tag, inputs, lambda: materialize(build(), eager=False)
     )
-    df = cache.get(key)
-    if df is not None:
-        return df
-    purge_dead_sessions(cache)
-    for stale in [k for k in cache if k[:3] == base]:
-        cache.pop(stale, None)
-    df = materialize(build(), eager=False)
-    cache[key] = df
-    return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLE_NAMES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    # The conf re-pin below must run on EVERY call, cache hit included — a
-    # harness that flips session timeZone between calls would otherwise
-    # render cached ltz timestamps in the wrong zone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (_session_key(spark), sf_dir, name, _file_vintage(table_path(sf_dir, name)))
-    cached = _PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _purge_dead_sessions()
-    # External harnesses hand us vanilla SparkSessions that never went through
-    # get_spark(), so the two confs correctness depends on are (re)pinned here
-    # at read time — both are runtime-settable:
-    # - nanosAsLong: older testdata vintages carried TIMESTAMP(NANOS) in
-    #   events.parquet, which Spark rejects outright without it (read as
-    #   bigint, normalized below). Current testdata is TIMESTAMP(MICROS),
-    #   read natively as timestamp_ntz — the conf is then a harmless no-op
-    #   and the bigint branch stays dormant;
-    # - session timeZone: collected timestamps render in session tz, and the
-    #   DuckDB oracle compares against naive-UTC wall times.
-    # (both confs were already pinned above, before the cache lookup)
+def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read via nanosAsLong — truncate ns → µs exactly as
@@ -367,8 +308,34 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _PLAN_CACHE[key] = df
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan of one test table, kept in the session store: building a scan
+    DataFrame costs a driver round trip for footer schema inference, and
+    queries re-load the same tables constantly."""
+    if name not in TABLE_NAMES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    # External harnesses hand us vanilla SparkSessions that never went through
+    # get_spark(), so the two confs correctness depends on are (re)pinned here
+    # at read time — both are runtime-settable, and the re-pin runs on EVERY
+    # call, store hit included (a harness that flips session timeZone between
+    # calls would otherwise render cached ltz timestamps in the wrong zone):
+    # - nanosAsLong: older testdata vintages carried TIMESTAMP(NANOS) in
+    #   events.parquet, which Spark rejects outright without it (read as
+    #   bigint, normalized in _scan_table). Current testdata is
+    #   TIMESTAMP(MICROS), read natively as timestamp_ntz — the conf is then
+    #   a harmless no-op and the bigint branch stays dormant;
+    # - session timeZone: collected timestamps render in session tz, and the
+    #   DuckDB oracle compares against naive-UTC wall times.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return session_cached(
+        spark, sf_dir, f"scan:{name}", name,
+        lambda: _scan_table(spark, sf_dir, name),
+    )
 
 
 def load_tables(

@@ -211,7 +211,7 @@ def test_prepared_cache_bounded_on_rewrite(spark, tmp_path):
     entry per name, not one per rewrite."""
     import shutil
 
-    from cloud_data_sync_spark import registry
+    from cloud_data_sync_spark import tables
     from cloud_data_sync_spark.tables import TABLE_NAMES, table_path
 
     d = str(tmp_path / "sfcopy")
@@ -224,8 +224,8 @@ def test_prepared_cache_bounded_on_rewrite(spark, tmp_path):
     def entries():
         return [
             k
-            for k in registry._PREPARED
-            if k[1] == os.path.realpath(d) and k[2] == "q_agg_stats"
+            for k in tables._SESSION_STORE
+            if k[1] == os.path.realpath(d) and k[2] == "query:q_agg_stats"
         ]
 
     spec.fn(spark, d).collect()
@@ -242,10 +242,10 @@ def test_events_vintage_covers_split_files(tmp_path):
     (events_000.parquet, ...) must produce a real, change-sensitive
     vintage — not the constant () a single-file stat of events.parquet
     returns."""
-    from cloud_data_sync_spark.tables import (
-        all_table_vintages,
-        table_files_vintage,
-    )
+    from cloud_data_sync_spark.tables import TABLE_NAMES, input_vintage
+
+    def events_vintage():
+        return input_vintage(str(d), ("events",))[0]
 
     d = tmp_path / "split"
     d.mkdir()
@@ -253,25 +253,22 @@ def test_events_vintage_covers_split_files(tmp_path):
         d / "events_000.parquet",
         [(1, pd.Timestamp("2024-01-01"), 1, "click", 1.0, "{}")],
     )
-    v0 = table_files_vintage(str(d), "events")
+    v0 = events_vintage()
     assert v0 != () and v0[0][0] == "events_000.parquet"
     # adding a split file MUST change the vintage
     _write_events(
         d / "events_001.parquet",
         [(2, pd.Timestamp("2024-01-02"), 1, "click", 1.0, "{}")],
     )
-    v1 = table_files_vintage(str(d), "events")
+    v1 = events_vintage()
     assert v1 != v0 and len(v1) == 2
     # rewriting one in place MUST change it too
     os.utime(d / "events_001.parquet", (1, 1))
-    assert table_files_vintage(str(d), "events") != v1
-    # the one-pass variant agrees with the per-table one
-    allv = all_table_vintages(str(d))
-    from cloud_data_sync_spark.tables import TABLE_NAMES
-
-    assert allv[TABLE_NAMES.index("events")] == table_files_vintage(
-        str(d), "events"
-    )
+    assert events_vintage() != v1
+    # the all-tables vintage (the prepared-plan key) agrees with the
+    # per-table one
+    allv = input_vintage(str(d), TABLE_NAMES)
+    assert allv[TABLE_NAMES.index("events")] == events_vintage()
 
 
 def test_bench_inline_line_carries_extras():

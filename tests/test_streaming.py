@@ -565,7 +565,10 @@ def test_drained_family_caches_and_evicts_on_vintage_change(spark, tmp_path):
     os.utime(os.path.join(sf, "events.parquet"))
     r3, _ = R.drained_family(spark, sf, "famtest", members)
     assert len(calls) == 2
-    keys = [k for k in R._FAMILY_CACHE if k[1] == sf and k[2] == "famtest"]
+    from cloud_data_sync_spark.tables import _SESSION_STORE
+
+    root = os.path.realpath(sf)
+    keys = [k for k in _SESSION_STORE if k[1] == root and k[2] == "famtest"]
     assert len(keys) == 1, "superseded vintage entry must be evicted"
 
 
@@ -601,15 +604,17 @@ def test_degenerate_stream_yields_empty_not_raise(spark, tmp_path):
 
 
 def test_family_eviction_drops_stale_sink_views(spark, tmp_path):
-    """r7 ADVICE: evicting a superseded family-cache entry must also drop
-    its memory-sink temp views — otherwise each vintage rewrite pins
-    another full result set in driver memory for the session's life."""
+    """r7 ADVICE: a superseded family drain must not leave its memory-sink
+    temp views behind — otherwise each vintage rewrite pins another full
+    result set in driver memory for the session's life. After an
+    in-session rewrite exactly one sink view exists, holding the
+    rewritten drain's rows."""
     import datetime as dt
     import time
-    import zlib
+
+    import pandas as pd
 
     from cloud_data_sync_spark.streaming import runner as R
-    from cloud_data_sync_spark.tables import table_files_vintage
 
     t = dt.datetime(2024, 1, 1, 10, 0, 0)
     sf = _write_events(tmp_path, [(1, t, 7), (2, t + dt.timedelta(hours=2), 9)])
@@ -621,18 +626,28 @@ def test_family_eviction_drops_stale_sink_views(spark, tmp_path):
             .dropDuplicates(["user_id", "event_type"])
         )
 
+    def probe_views():
+        return [
+            v.name
+            for v in spark.catalog.listTables()
+            if v.isTemporary and v.name.startswith("t_evictview_probe_")
+        ]
+
     members = {"probe": (build, "append")}
     R.drained_family(spark, sf, "evictview", members)
-    v1 = table_files_vintage(sf, "events")
-    sfx1 = zlib.crc32(repr((sf, v1)).encode()) & 0xFFFFFFFF
-    view1 = f"t_evictview_probe_{sfx1:08x}"
-    assert spark.catalog.tableExists(view1)
+    assert len(probe_views()) == 1
     time.sleep(0.01)
-    os.utime(os.path.join(sf, "events.parquet"))
-    R.drained_family(spark, sf, "evictview", members)
-    assert not spark.catalog.tableExists(view1), (
-        "stale vintage's memory-sink view must be dropped on eviction"
-    )
+    # rewrite in place with a third user: a new vintage, new rows
+    pdf = pd.read_parquet(os.path.join(sf, "events.parquet"))
+    pdf = pd.concat([pdf, pdf.iloc[[0]].assign(event_id=3, user_id=11)])
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    pdf.to_parquet(os.path.join(sf, "events.parquet"), index=False)
+    out, _ = R.drained_family(spark, sf, "evictview", members)
+    views = probe_views()
+    assert len(views) == 1, f"stale memory-sink views survive: {views}"
+    rows = sorted(tuple(r) for r in spark.table(views[0]).collect())
+    assert rows == [(7, "click"), (9, "click"), (11, "click")]
+    assert sorted(tuple(r) for r in out["probe"].collect()) == rows
 
 
 def test_streaming_minhash_matches_batch_incremental(spark):

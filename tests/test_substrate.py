@@ -1,81 +1,100 @@
-"""Session-substrate cache semantics (tables.session_substrate).
+"""Session-store semantics (tables.session_cached / session_substrate).
 
-The substrate contract: a deterministic intermediate is built + checkpointed
-at most once per (session, sf_dir, tag, input vintage); a changed input
-vintage misses the cache AND evicts the superseded entry; dead-session
-entries are purged rather than accumulating; the checkpoint genuinely
-materializes once (consumers scan it, they do not re-run the pipeline).
-The consumers' VALUE correctness is covered by the oracle gate — these
-tests pin the caching behavior itself.
+The store contract: a value is built at most once per (session, sf_dir,
+tag, input vintage); a changed input vintage misses AND evicts the
+superseded entry; a miss drops entries of other (stopped) sessions; a
+session without a readable applicationId builds and stores nothing; a
+substrate's checkpoint genuinely materializes once (consumers scan it, they
+do not re-run the pipeline). The consumers' VALUE correctness is covered by
+the oracle gate — these tests pin the caching behavior itself.
 """
 
 from __future__ import annotations
 
+import ast
 import os
+import pathlib
 import shutil
+from collections import Counter
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cloud_data_sync_spark.tables import purge_dead_sessions, session_substrate
+from cloud_data_sync_spark import tables
+from cloud_data_sync_spark.tables import (
+    load_table,
+    session_cached,
+    session_substrate,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _entries(sf_dir: str, tag: str) -> list[tuple]:
+    root = os.path.realpath(sf_dir)
+    return [k for k in tables._SESSION_STORE if k[1] == root and k[2] == tag]
+
+
+def _rewrite(path: str, mtime: int) -> None:
+    """Same path, new (size, mtime) vintage."""
+    with open(path, "ab") as f:
+        f.write(b"x")
+    os.utime(path, (mtime, mtime))
+
+
 def test_same_key_returns_cached_frame(spark):
-    cache: dict = {}
     calls = []
 
     def build():
         calls.append(1)
         return spark.range(5)
 
-    a = session_substrate(spark, cache, SF_DIR, "t1", "region", build)
-    b = session_substrate(spark, cache, SF_DIR, "t1", "region", build)
+    a = session_substrate(spark, SF_DIR, "test-same-key", "region", build)
+    b = session_substrate(spark, SF_DIR, "test-same-key", "region", build)
     assert a is b
     assert len(calls) == 1
     assert a.count() == 5
 
 
 def test_different_tag_rebuilds(spark):
-    cache: dict = {}
-    a = session_substrate(spark, cache, SF_DIR, "t1", "region", lambda: spark.range(3))
-    b = session_substrate(spark, cache, SF_DIR, "t2", "region", lambda: spark.range(4))
+    a = session_substrate(
+        spark, SF_DIR, "test-tag-a", "region", lambda: spark.range(3)
+    )
+    b = session_substrate(
+        spark, SF_DIR, "test-tag-b", "region", lambda: spark.range(4)
+    )
     assert a is not b
     assert (a.count(), b.count()) == (3, 4)
-    assert len(cache) == 2
+    assert len(_entries(SF_DIR, "test-tag-a")) == 1
+    assert len(_entries(SF_DIR, "test-tag-b")) == 1
 
 
 def test_stale_vintage_is_evicted_not_served(spark, tmp_path):
     # rewrite the input file between calls: the new vintage must rebuild,
-    # and the superseded entry must leave the cache (so its checkpoint
+    # and the superseded entry must leave the store (so its checkpoint
     # blocks become collectable instead of pinned for the session)
     sf = str(tmp_path)
-    src = os.path.join(SF_DIR, "region.parquet")
     dst = os.path.join(sf, "region.parquet")
-    shutil.copyfile(src, dst)
-    cache: dict = {}
+    shutil.copyfile(os.path.join(SF_DIR, "region.parquet"), dst)
     builds = []
 
     def build():
         builds.append(1)
         return spark.range(7)
 
-    a = session_substrate(spark, cache, sf, "t", "region", build)
-    assert a.count() == 7 and len(cache) == 1
-    # rewrite: same path, new (size, mtime) vintage
-    with open(dst, "ab") as f:
-        f.write(b"x")
-    os.utime(dst, (1, 1))
-    b = session_substrate(spark, cache, sf, "t", "region", build)
+    a = session_substrate(spark, sf, "test-stale", "region", build)
+    assert a.count() == 7 and len(_entries(sf, "test-stale")) == 1
+    _rewrite(dst, 1)
+    b = session_substrate(spark, sf, "test-stale", "region", build)
     assert len(builds) == 2
     assert b is not a
-    assert len(cache) == 1  # the stale entry was evicted, not accumulated
+    # the stale entry was evicted, not accumulated
+    assert len(_entries(sf, "test-stale")) == 1
 
 
 def test_multi_table_key_tracks_every_input_vintage(spark, tmp_path):
-    """A builder that reads TWO tables must miss the cache when EITHER
+    """A builder that reads TWO tables must miss the store when EITHER
     input is rewritten — keying on one table only would serve stale rows
     for the other (r4 advice)."""
     sf = str(tmp_path)
@@ -83,24 +102,114 @@ def test_multi_table_key_tracks_every_input_vintage(spark, tmp_path):
         shutil.copyfile(
             os.path.join(SF_DIR, f"{t}.parquet"), os.path.join(sf, f"{t}.parquet")
         )
-    cache: dict = {}
     builds = []
 
     def build():
         builds.append(1)
         return spark.range(3)
 
-    a = session_substrate(spark, cache, sf, "t2", ("region", "nation"), build)
+    inputs = ("region", "nation")
+    a = session_substrate(spark, sf, "test-multi", inputs, build)
     assert a.count() == 3 and builds == [1]
     # rewrite the SECOND input: the tuple key must miss
-    second = os.path.join(sf, "nation.parquet")
-    with open(second, "ab") as f:
-        f.write(b"x")
-    os.utime(second, (1, 1))
-    b = session_substrate(spark, cache, sf, "t2", ("region", "nation"), build)
+    _rewrite(os.path.join(sf, "nation.parquet"), 1)
+    b = session_substrate(spark, sf, "test-multi", inputs, build)
     assert len(builds) == 2
     assert b is not a
-    assert len(cache) == 1  # superseded entry evicted
+    assert len(_entries(sf, "test-multi")) == 1  # superseded entry evicted
+
+
+def test_load_table_keeps_one_scan_per_table(spark, tmp_path):
+    """Each in-place rewrite misses load_table's scan plan AND evicts the
+    superseded one: a rewrite must not pin one more scan plan for the
+    session's life."""
+    sf = str(tmp_path)
+    dst = os.path.join(sf, "region.parquet")
+    shutil.copyfile(os.path.join(SF_DIR, "region.parquet"), dst)
+    region = pd.read_parquet(dst)
+    seen = []
+    for n in (5, 3, 1):
+        region.head(n).to_parquet(dst, index=False)
+        os.utime(dst, (n, n))
+        seen.append(load_table(spark, sf, "region").count())
+        assert len(_entries(sf, "scan:region")) == 1
+    assert seen == [5, 3, 1]
+
+
+def test_purge_drops_dead_entries(spark):
+    # classic PySpark runs one SparkContext per process: an entry under
+    # another applicationId belongs to a stopped session and the next
+    # miss removes it
+    dead_key = ("dead-app", os.path.realpath(SF_DIR), "test-dead", ((),))
+    tables._SESSION_STORE[dead_key] = object()
+    session_cached(spark, SF_DIR, "test-dead-miss", "region", lambda: 1)
+    assert dead_key not in tables._SESSION_STORE
+    assert len(_entries(SF_DIR, "test-dead-miss")) == 1
+
+
+def test_unreadable_app_id_builds_without_storing():
+    class _NoContext:
+        @property
+        def sparkContext(self):  # noqa: N802 - SparkSession's attribute name
+            raise RuntimeError("stopped")
+
+    before = dict(tables._SESSION_STORE)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    fake = _NoContext()
+    assert session_cached(fake, SF_DIR, "test-no-app", "region", build) == 1
+    assert session_cached(fake, SF_DIR, "test-no-app", "region", build) == 2
+    assert tables._SESSION_STORE == before
+
+
+def test_input_vintage_one_entry_per_name(tmp_path):
+    d = tmp_path / "v"
+    d.mkdir()
+    for f in ("region.parquet", "nation.parquet", "nation_001.parquet", "x.txt"):
+        (d / f).write_bytes(b"abc")
+    v = tables.input_vintage(str(d), ("nation", "region", "orders"))
+    assert [[f for f, _, _ in files] for files in v] == [
+        ["nation.parquet", "nation_001.parquet"],
+        ["region.parquet"],
+        [],
+    ]
+    assert tables.input_vintage(str(d / "missing"), ("region",)) == ((),)
+
+
+def _cache_tags() -> list[str]:
+    """Every literal ``tag`` the package passes to the session store (the
+    third argument of session_cached, session_substrate and
+    drained_family, or ``tag=``)."""
+    pkg = pathlib.Path(tables.__file__).parent
+    fns = {"session_cached", "session_substrate", "drained_family"}
+    tags = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name not in fns:
+                continue
+            arg = node.args[2] if len(node.args) > 2 else next(
+                (k.value for k in node.keywords if k.arg == "tag"), None
+            )
+            if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                tags.append(arg.value)
+    return tags
+
+
+def test_session_store_tags_are_unique():
+    # one shared store: a reused tag would silently serve one caller's
+    # value to another
+    tags = _cache_tags()
+    assert len(tags) >= 31, tags
+    dup = [t for t, n in Counter(tags).items() if n > 1]
+    assert not dup, f"session-store tags used more than once: {dup}"
 
 
 def test_checkpoint_materializes_once(spark):
@@ -114,12 +223,10 @@ def test_checkpoint_materializes_once(spark):
         acc.add(len(s))
         return s
 
-    cache: dict = {}
     sub = session_substrate(
         spark,
-        cache,
         SF_DIR,
-        "t-acc",
+        "test-acc",
         "region",
         lambda: spark.range(100).select(bump("id").alias("id")),
     )
@@ -144,23 +251,6 @@ def test_corpus_signatures_cached_per_session(spark):
     from cloud_data_sync_spark.operators.dedup import corpus_signatures
 
     assert corpus_signatures(spark, SF_DIR) is corpus_signatures(spark, SF_DIR)
-
-
-def test_purge_drops_dead_entries(spark):
-    class _DeadCtx:
-        _jsc = None
-
-    class _DeadSession:
-        class sparkSession:  # noqa: N801 - attribute-shaped stand-in
-            pass
-
-    dead = _DeadSession()
-    dead.sparkSession = type("S", (), {"sparkContext": _DeadCtx()})()
-    live = spark.range(1)
-    cache = {("dead",): dead, ("live",): live}
-    purge_dead_sessions(cache)
-    assert ("dead",) not in cache
-    assert ("live",) in cache
 
 
 def test_substrate_matches_inline_pipeline(spark):
@@ -281,13 +371,11 @@ def test_session_substrate_honors_checkpoint_conf(spark, tmp_path):
         session_substrate,
     )
 
-    cache: dict = {}
     ckdir = str(tmp_path / "ck2")
     spark.conf.set(CHECKPOINT_DIR_CONF, ckdir)
     try:
         df = session_substrate(
             spark,
-            cache,
             SF_DIR,
             "ck-test-substrate",
             "region",
@@ -374,15 +462,9 @@ def test_side_effecting_materialize_prunes_superseded_generation(spark, tmp_path
 
 
 def _prepared_entry(name: str, sf_dir: str):
-    from cloud_data_sync_spark import registry
-
-    hits = [
-        (k, v)
-        for k, v in registry._PREPARED.items()
-        if k[2] == name and k[1] == __import__("os").path.realpath(sf_dir)
-    ]
+    hits = _entries(sf_dir, f"query:{name}")
     assert len(hits) <= 1
-    return hits[0] if hits else (None, None)
+    return (hits[0], tables._SESSION_STORE[hits[0]]) if hits else (None, None)
 
 
 def test_prepared_plan_cache_serves_cached_base(spark):
@@ -393,7 +475,6 @@ def test_prepared_plan_cache_serves_cached_base(spark):
     return a clone of the sentinel. Callers must get a CLONE, not the
     base itself — an executed Dataset pins its AQE execution state
     JVM-side, and handing out the base OOM'd the 1 GiB vanilla gate."""
-    from cloud_data_sync_spark import registry
     from cloud_data_sync_spark.registry import all_queries
 
     q = all_queries()["q_join_inner"]
@@ -403,23 +484,19 @@ def test_prepared_plan_cache_serves_cached_base(spark):
     # the handle handed to callers is a clone, never the cached base
     assert base_out is not cached
     sentinel = spark.range(3).toDF("sentinel_col")
-    registry._PREPARED[key] = sentinel
+    tables._SESSION_STORE[key] = sentinel
     try:
         out = q.fn(spark, SF_DIR)
         assert out.columns == ["sentinel_col"]  # served from cache
         assert out is not sentinel  # and cloned
     finally:
-        registry._PREPARED[key] = cached
+        tables._SESSION_STORE[key] = cached
 
 
 def test_prepared_plan_cache_misses_on_table_vintage_change(spark, tmp_path):
     """Mutating any input table file (the gate suites rewrite tables in
     place) must miss the cache — a stale plan would carry the old file
     index."""
-    import os
-    import shutil
-
-    from cloud_data_sync_spark import registry
     from cloud_data_sync_spark.registry import all_queries
     from cloud_data_sync_spark.tables import TABLE_NAMES, table_path
 
@@ -429,15 +506,15 @@ def test_prepared_plan_cache_misses_on_table_vintage_change(spark, tmp_path):
         shutil.copyfile(table_path(SF_DIR, t), table_path(d, t))
     q = all_queries()["q_join_inner"]
     q.fn(spark, d)
-    key, cached = _prepared_entry("q_join_inner", d)
+    key, _ = _prepared_entry("q_join_inner", d)
     assert key is not None
     # swap in a sentinel: a vintage change must BYPASS it (fresh build)
-    registry._PREPARED[key] = spark.range(3).toDF("sentinel_col")
+    tables._SESSION_STORE[key] = spark.range(3).toDF("sentinel_col")
     st = os.stat(table_path(d, "lineitem"))
     os.utime(table_path(d, "lineitem"), ns=(st.st_atime_ns, st.st_mtime_ns + 1))
     out = q.fn(spark, d)
     assert "sentinel_col" not in out.columns
-    registry._PREPARED.pop(key, None)
+    assert key not in tables._SESSION_STORE  # superseded vintage evicted
 
 
 def test_prepared_plan_cache_keys_by_sf_dir(spark):

@@ -36,7 +36,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from cloud_data_sync_spark import registry  # noqa: E402
+from cloud_data_sync_spark import tables  # noqa: E402
 from cloud_data_sync_spark.registry import all_queries  # noqa: E402
 from cloud_data_sync_spark.session import get_spark  # noqa: E402
 
@@ -149,8 +149,11 @@ def main() -> None:
             line += "  ERR " + str(row)
         print(line, flush=True)
         out[key] = row
-        # keep the prepared-plan cache bounded across the sweep
-        registry._PREPARED.clear()
+        # keep the prepared plans in the session store bounded across the
+        # sweep; scans and substrates stay for the keys that share them
+        store = tables._SESSION_STORE
+        for k in [k for k in store if k[2].startswith("query:")]:
+            del store[k]
     with open(a.out, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(f"wrote {a.out}")
