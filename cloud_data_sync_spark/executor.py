@@ -14,8 +14,8 @@ Scale notes:
 - A latent reference bug is deliberately NOT replicated: ``defer
   reader.Close()`` inside its object loop (sync.go:142) leaks all readers
   until function exit; here each file handle closes per object.
-- ``repartition(n)`` spreads objects across executors; per-object failures
-  never fail the task (try/except per row).
+- Objects run in the plan's own partitions; per-object failures never
+  fail the task (try/except per row).
 - Local/file: paths use direct OS streams. For s3a/gs/abfss, executors
   would use the same code over a FUSE mount, or cloud SDKs via
   ``opener``/``deleter`` injection — the control flow is identical.
@@ -139,7 +139,7 @@ def _delete_one(dst_path: str) -> tuple[str, str | None]:
         return STATUS_FAILED_DELETE, str(e)
 
 
-def execute_plan(plan: DataFrame, src_root: str, tgt_root: str, parallelism: int = 0) -> DataFrame:
+def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
     """Run copy/delete actions; returns the per-object result DataFrame.
 
     Lazy like any DataFrame — materialize once (e.g. ``.cache().count()``)
@@ -161,8 +161,6 @@ def execute_plan(plan: DataFrame, src_root: str, tgt_root: str, parallelism: int
                 "(distributed binaryFile copy mode) or a file: staging root"
             )
     work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE))
-    if parallelism:
-        work = work.repartition(parallelism)
 
     src_local = src_root.replace("file://", "").rstrip("/")
     tgt_local = tgt_root.replace("file://", "").rstrip("/")

@@ -407,9 +407,7 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 6000)
         .select("c_custkey")
     )
-    # spread(): d=3 md5 bit probes per order row, map-only, on a 1-2
-    # split local scan (the split-bound class). Keyed on the unique key;
-    # no-op at real scale.
+    # spread(): d=3 md5 bit probes per order row, map-only.
     from cloud_data_sync_spark.tables import spread
 
     orders = spread(

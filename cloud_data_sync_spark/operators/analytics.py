@@ -103,9 +103,10 @@ def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: same class as q_tpch_volume — the static estimate made the
     # planner BROADCAST the lineitem branch (BuildRight over the fact
     # scan in the sf1 plan dump). Pin the fact⋈fact join to SHUFFLE_HASH
-    # (the orderkey exchange the doc always described); AQE still
-    # upgrades to broadcast at runtime from real sizes when the filtered
-    # side genuinely fits.
+    # (the orderkey exchange the doc always described). AQE keeps the
+    # hinted SHJ even when a side is small; it stays unconditional because
+    # gating it on 500k orders (the q_join_left crossover) measured 1.36×
+    # slower at sf0.1 (0.392 -> 0.531 s min of 15).
     return (
         li.join(
             orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -164,10 +165,11 @@ def q_tpch_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact wrong side at 100 TB). Static join-order flips don't fix it
     # (the estimate still favors the fact side), so the fact join is
     # pinned to SHUFFLE_HASH: both sides exchange on orderkey — the
-    # plan the docstring always claimed — and AQE may still upgrade to a
-    # broadcast join at runtime from REAL sizes (estimate-robust in both
-    # directions; guide §3.1 "check which one you got / check the build
-    # side").
+    # plan the docstring always claimed (guide §3.1 "check which one you
+    # got / check the build side"). AQE keeps the hinted SHJ even when a
+    # side is small; it stays unconditional because gating it on 500k
+    # orders (the q_join_left crossover) measured 1.35× slower at sf0.1
+    # (0.503 -> 0.681 s min of 15).
     return (
         li.join(
             orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -543,12 +545,11 @@ GROUP BY e.event_type, m.med, d.mad
 )
 def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the exact-percentile partial buffers collect every value
-    # map-side, and the events parquet is one split locally — both
-    # median passes built their buffers on one core. Keyed; no-op at
-    # real scale.
-    from cloud_data_sync_spark.tables import spread
-
-    ev = spread(load_table(spark, sf_dir, "events"), "event_id")
+    # map-side, so both median passes built their buffers on one core.
+    # Ungated it cost 0.48 -> 0.62 s on the driver at sf0.1; gated at the
+    # q_decay_leaderboard events crossover: 0.723 -> 0.619 s at sf0.1
+    # (min of 15).
+    ev = spread(load_table(spark, sf_dir, "events"), "event_id", above_rows=500_000)
     med = ev.groupBy("event_type").agg(
         F.expr("percentile(value, 0.5)").alias("med")
     )
@@ -1062,11 +1063,8 @@ FROM bs
 def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0, t1, t2, t3 = _POIS8
     # spread(): the per-row hash/conv pipeline is CPU-bound and the local
-    # parquet arrives in 3 splits — hash-spread on the natural line key
-    # to cores (no-op at real scale where the scan already yields >=
-    # cores splits). Keyed, not round-robin: the keyless form pays a
-    # local sort of its input before the exchange (sortBeforeRepartition)
-    # — measured 0.97s vs 0.58s for this exchange at sf0.1 (r11).
+    # parquet arrives in 3 splits. Keyed: 0.58 s vs 0.97 s round-robin
+    # for this exchange at sf0.1 (r11).
     li = spread(
         load_table(spark, sf_dir, "lineitem").filter(
             F.col("l_extendedprice").isNotNull()
@@ -3217,21 +3215,15 @@ def q_decay_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # derived from the items-bounded groups (the grand-total-from-
     # partials shape, one events scan), so a leaderboard over
     # heavily-censored data is visibly censored.
-    # spread(): the JSON parse + exact-micro CASE is the per-row wall and
-    # the events parquet arrives in ONE split locally, serializing the
-    # scoring pass on one core. Keyed on the natural unique key; no-op at
-    # real scale. Row-count-adaptive (the q_percentiles_adaptive footer
-    # pattern): the aggregate here feeds two consumers, so the spread
-    # exchange materializes twice at small SFs and measured 1.23× WORSE
-    # at sf0.1 while winning 0.52× at sf1 — spread only past ~500k
-    # events (exact footer count, re-decided per vintage).
-    from cloud_data_sync_spark.tables import spread, table_num_rows
-
-    ev0 = load_table(spark, sf_dir, "events").filter(
-        F.col("props").isNotNull()
+    # spread(): the JSON parse + exact-micro CASE is the per-row wall. The
+    # aggregate here feeds two consumers, so the spread exchange
+    # materializes twice at small SFs and measured 1.23× WORSE at sf0.1
+    # while winning 0.52× at sf1 — spread only past 500k events.
+    ev0 = spread(
+        load_table(spark, sf_dir, "events").filter(F.col("props").isNotNull()),
+        "event_id",
+        above_rows=500_000,
     )
-    if table_num_rows(sf_dir, "events") > 500_000:
-        ev0 = spread(ev0, "event_id")
     scored = (
         ev0
         .selectExpr(
@@ -3425,11 +3417,7 @@ FROM beta ORDER BY event_type
 )
 def q_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the 10 DECIMAL(38) moment accumulators run on BigDecimal
-    # per row — the per-row wall — and the events parquet is one split
-    # locally, so the whole moment pass ran on one core (2.2 s at sf1).
-    # Keyed on the natural unique key (r11 rule); no-op at real scale.
-    from cloud_data_sync_spark.tables import spread
-
+    # per row, and the whole moment pass ran on one core (2.2 s at sf1).
     feat = spread(
         load_table(spark, sf_dir, "events"), "event_id"
     ).selectExpr(

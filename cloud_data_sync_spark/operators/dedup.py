@@ -204,15 +204,10 @@ SELECT * FROM grouped WHERE group_size > 1
     doc="Near-dup via order-insensitive token-set hash (catches reorderings).",
 )
 def q_dedup_tokenset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # adaptive spread: tokenize + sort + md5 per augmented row is the
-    # map wall on a few local splits (the q_dup_inflation class, same
-    # gating: past 20k footer documents; no-op at real scale).
-    from cloud_data_sync_spark.tables import spread, table_num_rows
-
+    # spread(): tokenize + sort + md5 per augmented row is the map wall
+    # (the q_dup_inflation class, same 20k-document gate).
     toks_col = low_toks()
-    aug = augmented_documents(spark, sf_dir)
-    if table_num_rows(sf_dir, "documents") > 20_000:
-        aug = spread(aug, "doc_id")
+    aug = _spread(augmented_documents(spark, sf_dir), "doc_id", above_rows=20_000)
     hashed = aug.select(
         "doc_id",
         F.md5(F.array_join(F.array_sort(F.array_distinct(toks_col)), " ")).alias(
@@ -3296,15 +3291,9 @@ GROUP BY f.doc_id
 )
 def q_dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the trigram build + per-gram md5 is the wall (measured at
-    # sf1: 5.5 s of the 6.3 s total runs in the gram projection) and the
-    # augmented union arrives in ~4-8 scan splits locally, leaving most
-    # cores idle through the most expensive map stage. Round-robin per
-    # the r11 corpus lesson (hash on coarse doc keys leaves 10-20%
-    # per-partition text-byte imbalance). No-op at real scale where the
-    # scan yields >= cores splits.
-    from cloud_data_sync_spark.tables import spread
-
-    docs = spread(augmented_documents(spark, sf_dir))
+    # sf1: 5.5 s of the 6.3 s total runs in the gram projection), and the
+    # augmented union arrives in ~4-8 scan splits locally.
+    docs = _spread(augmented_documents(spark, sf_dir))
     take = "greatest(size(toks) - 2, 0)"
     tri = (
         f"zip_with(zip_with(slice(toks, 1, {take}), slice(toks, 2, {take}),"
@@ -3434,23 +3423,19 @@ def q_dup_inflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # moment original doc_ids reach the augmentation's 1M id offset at
     # larger scale factors (r8 ADVICE).
     # spread(): tokenize + two full-text md5 per augmented row are the
-    # per-row wall on a 1-2 split local scan (the winnow gram-stage
-    # class). Keyed on the unique post-augmentation doc_id; no-op at
-    # real scale. Row-count-adaptive (exact footer count, the
-    # q_percentiles_adaptive pattern): the two dedup windows re-shuffle
-    # right after, so at wave-floor sizes the extra exchange measured
-    # 1.8× WORSE (sf0.1) while 0.59× at sf1 — spread only past 20k
-    # documents.
-    from cloud_data_sync_spark.tables import spread, table_num_rows
-
-    aug = augment_docs(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "source"
-        )
-    )
-    if table_num_rows(sf_dir, "documents") > 20_000:
-        aug = spread(aug, "doc_id")
-    aug = aug.select(
+    # per-row wall (the winnow gram-stage class). The two dedup windows
+    # re-shuffle right after, so at wave-floor sizes the extra exchange
+    # measured 1.8× WORSE (sf0.1) while 0.59× at sf1 — spread only past
+    # 20k documents.
+    aug = _spread(
+        augment_docs(
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id", "text", "source"
+            )
+        ),
+        "doc_id",
+        above_rows=20_000,
+    ).select(
         "doc_id",
         "source",
         F.size(toks_col).alias("n_toks"),

@@ -446,20 +446,12 @@ def q_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shows BroadcastHashJoin LeftOuter BuildRight over the orders
     # branch). Measured crossover: SHUFFLE_HASH is 0.44× at sf1 but
     # 1.31× at sf0.1 (a 150k-row pseudonym broadcast is genuinely
-    # cheaper than two exchanges). The strategy is therefore decided
-    # from the EXACT footer row count (the q_percentiles_adaptive
-    # sf-adaptive pattern — re-decided when the plan cache's vintage key
-    # changes), not from the static byte estimate that picked broadcast
-    # at every size: past ~500k orders the fact side shuffles (one pid
-    # exchange per side, no sort; the only right shape at 100 TB), under
-    # it the broadcast stands. Guide §3.1.
-    from cloud_data_sync_spark.tables import table_num_rows
+    # cheaper than two exchanges). So past 500k orders the fact side
+    # shuffles (one pid exchange per side, no sort; the only right shape
+    # at 100 TB), under it the broadcast stands. Guide §3.1.
+    from cloud_data_sync_spark.tables import input_rows
 
-    o_p_side = (
-        o_p.hint("shuffle_hash")
-        if table_num_rows(sf_dir, "orders") > 500_000
-        else o_p
-    )
+    o_p_side = o_p.hint("shuffle_hash") if input_rows(o_p) > 500_000 else o_p
     orders_joined = (
         c_p.join(o_p_side, c_p.pid == o_p.opid, "left")
         .groupBy(F.col("c_mktsegment").alias("seg"))

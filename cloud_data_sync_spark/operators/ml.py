@@ -979,18 +979,14 @@ def q_gaussian_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     # spread(): the map-side scoring (K x D interpreted log-likelihood
-    # folds per test row) runs before any exchange, and the embeddings
-    # parquet is one split locally — the scoring pass ran on one core.
-    # Keyed on the unique key; no-op at real scale. Row-count-adaptive
-    # (footer count, q_percentiles_adaptive pattern): at 2k vectors the
+    # folds per test row) runs before any exchange. At 2k vectors the
     # exchange + waves measured 1.76× WORSE (sf0.1) vs 0.47× at sf1 —
     # spread only past 10k vectors.
-    from cloud_data_sync_spark.tables import spread, table_num_rows
+    from cloud_data_sync_spark.tables import spread
 
-    vecs = load_table(spark, sf_dir, "embeddings")
-    if table_num_rows(sf_dir, "embeddings") > 10_000:
-        vecs = spread(vecs, "vec_id")
-    vecs = vecs.filter(
+    vecs = spread(
+        load_table(spark, sf_dir, "embeddings"), "vec_id", above_rows=10_000
+    ).filter(
         # the q_kmeans rule: NULL embeddings join neither split — a NULL
         # log-likelihood otherwise "classifies" by engine NULL tie-breaks
         F.col("embedding").isNotNull()

@@ -104,9 +104,8 @@ FROM exact e JOIN est s ON e.kn = s.kn
 )
 def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the 3-way explode + per-pair partial aggregation is the
-    # map wall and the lineitem parquet is ONE split locally (110 MB,
-    # single row group) — the 18M-pair stage ran on one core. Keyed on
-    # the natural fine-grained key (r11 rule); no-op at real scale.
+    # map wall — the 18M-pair stage ran on one core over the 110 MB
+    # single-row-group lineitem parquet.
     from cloud_data_sync_spark.tables import spread
 
     li = spread(

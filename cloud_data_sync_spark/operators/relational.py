@@ -85,18 +85,20 @@ GROUP BY c.c_custkey, c.c_name
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: LeftOuter forces BuildRight and the static planner BROADCAST
-    # the 1.5M-row orders fact at sf1 (plan dump). Adaptive strategy on
-    # the exact footer row count (q_percentiles_adaptive pattern):
-    # shuffle-hash past 500k orders, broadcast under (the measured
-    # crossover class of q_pseudonymize). Guide §3.1.
-    from cloud_data_sync_spark.tables import table_num_rows
+    # the 1.5M-row orders fact at sf1 (plan dump). Shuffle-hash past 500k
+    # orders, broadcast under (the measured crossover class of
+    # q_pseudonymize). Guide §3.1.
+    from cloud_data_sync_spark.tables import input_rows
 
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    if table_num_rows(sf_dir, "orders") > 500_000:
-        orders = orders.hint("shuffle_hash")
+    big = input_rows(orders) > 500_000
     return (
-        customer.join(orders, orders.o_custkey == customer.c_custkey, "left")
+        customer.join(
+            orders.hint("shuffle_hash") if big else orders,
+            orders.o_custkey == customer.c_custkey,
+            "left",
+        )
         .groupBy("c_custkey", "c_name")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
@@ -445,12 +447,8 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TRY_CAST) — DuckDB's json_extract_string RAISES on malformed
     # input, and a metadata column at corpus scale always carries some
     # garbage rows; extraction must degrade per-row, not kill the job.
-    # spread(): the JSON parse is the per-row wall and the events parquet
-    # arrives in ONE split locally (12 MB compressed at sf1), so the
-    # whole 1M-row Jackson pass ran on one core. Keyed on the natural
-    # unique key (fine-grained input — the r11 spread rule). Measured at
-    # sf1: 2.35 → 0.82 s. No-op at real scale (scan yields >= cores
-    # splits).
+    # spread(): the 1M-row Jackson parse is the per-row wall (12 MB
+    # compressed at sf1). Measured at sf1: 2.35 → 0.82 s.
     from cloud_data_sync_spark.tables import spread
 
     ev = spread(load_table(spark, sf_dir, "events"), "event_id").withColumn(
@@ -519,8 +517,7 @@ SELECT k, etag, last_synced, sync_status FROM merged WHERE rn = 1
 )
 def q_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the md5 etag projection and the map-side
-    # WindowGroupLimit sort both run before the key exchange, on the
-    # 1-split local orders scan. Keyed; no-op at real scale.
+    # WindowGroupLimit sort both run before the key exchange.
     from cloud_data_sync_spark.tables import spread
 
     orders = spread(load_table(spark, sf_dir, "orders"), "o_orderkey")
@@ -1474,20 +1471,16 @@ FROM lineitem GROUP BY l_returnflag
     ),
 )
 def q_percentiles_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
+    from cloud_data_sync_spark.tables import input_rows
 
-    from cloud_data_sync_spark.tables import table_num_rows
-
-    cutoff = int(_os.environ.get("SPARK_GRAFT_ADAPTIVE_EXACT_ROWS", 2_000_000))
-    if table_num_rows(sf_dir, "lineitem") <= cutoff:
+    li = load_table(spark, sf_dir, "lineitem")
+    if input_rows(li) <= 2_000_000:
         return _ranked_prices(spark, sf_dir).groupBy("l_returnflag").agg(
             F.round(_interp(0.5), 4).alias("p50"),
             F.round(_interp(0.9), 4).alias("p90"),
         ).select("l_returnflag", "p50", "p90", F.lit("exact").alias("mode"))
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_returnflag", "l_extendedprice")
-        .filter(F.col("l_extendedprice").isNotNull())
+    li = li.select("l_returnflag", "l_extendedprice").filter(
+        F.col("l_extendedprice").isNotNull()
     )
     agg = li.groupBy("l_returnflag").agg(
         F.approx_percentile(
@@ -1786,9 +1779,7 @@ JOIN customer c ON levenshtein(p.probe, c.c_name) <= 2
 )
 def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): 4 levenshtein evaluations per customer row are the wall
-    # (BroadcastNestedLoopJoin over the probe set) and the customer
-    # parquet is one split locally — the edit-distance pass ran on one
-    # core. Keyed on the unique key (r11 rule); no-op at real scale.
+    # (BroadcastNestedLoopJoin over the probe set).
     from cloud_data_sync_spark.tables import spread
 
     cust = spread(load_table(spark, sf_dir, "customer"), "c_custkey")

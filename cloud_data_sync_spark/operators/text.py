@@ -2043,8 +2043,7 @@ FROM pred GROUP BY lang
 )
 def q_langid_chargram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread(): the bigram fanout and map-side scoring are CPU-bound and
-    # the local parquet arrives in ~3 splits — round-robin to cores
-    # (no-op at real scale where the scan already yields >= cores splits)
+    # the local parquet arrives in ~3 splits.
     from cloud_data_sync_spark.tables import spread
 
     return chargram_langid(spread(load_table(spark, sf_dir, "documents")))
@@ -2212,10 +2211,8 @@ FROM scored GROUP BY lang
     ),
 )
 def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread(): three regex passes per document are the per-row wall and
-    # the documents parquet is 1-2 splits locally (the q_token_bpe /
-    # q_ols_regression split-bound class). Keyed on the unique doc_id
-    # (r11 rule); no-op at real scale.
+    # spread(): three regex passes per document are the per-row wall (the
+    # q_token_bpe / q_ols_regression split-bound class).
     from cloud_data_sync_spark.tables import spread
 
     feats = (

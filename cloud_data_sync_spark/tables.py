@@ -9,6 +9,7 @@ column pruning for every downstream query.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -113,33 +114,6 @@ def session_cached(
         del _SESSION_STORE[k]
     value = _SESSION_STORE[key] = build()
     return value
-
-
-def table_num_rows(sf_dir: str, name: str) -> int:
-    """Row count from parquet FOOTERS over ``<name>*.parquet`` — one
-    metadata read per file, no data scan. This is the input to
-    sf-adaptive plan choices (q_percentiles_adaptive): the decision is
-    re-made exactly when the prepared-plan cache's vintage key changes,
-    so a rewritten table re-decides instead of serving a stale branch.
-    Missing dir/files count as 0 (the degenerate gates' empty vintages
-    take the small-data branch, which handles empty inputs)."""
-    import fnmatch
-
-    import pyarrow.parquet as _pq
-
-    base = sf_dir.replace("file://", "").replace("file:", "")
-    total = 0
-    try:
-        with os.scandir(base) as it:
-            for e in it:
-                if fnmatch.fnmatchcase(e.name, f"{name}*.parquet"):
-                    try:
-                        total += _pq.ParquetFile(e.path).metadata.num_rows
-                    except Exception:  # noqa: BLE001 - unreadable: treat as 0
-                        pass
-    except OSError:
-        return 0
-    return total
 
 
 # spark conf key: when set to a path, every lineage-truncation site in the
@@ -350,13 +324,6 @@ def load_tables(
     return out
 
 
-# spread decision cache: keyed by (session, (file, size) pairs) so the
-# packing arithmetic happens once per table vintage per session, and a
-# rewritten file (same path, new size) misses the cache instead of reusing
-# a stale estimate. File-less frames never enter the cache.
-_SPREAD_CACHE: dict[tuple, int] = {}
-
-
 _BYTE_SUFFIX = {
     "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
     "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
@@ -383,106 +350,112 @@ def _parse_bytes(s: str, default: int) -> int:
         return default
 
 
-def _estimated_scan_splits(df: DataFrame) -> int:
-    """Estimate how many file splits Spark's scan will produce, using the
-    same packing rule as ``FilePartition.maxSplitBytes`` — without forcing
-    the plan through RDD conversion (``df.rdd`` triggers full physical
-    planning + codegen on the driver for every uncached call)."""
-    spark = df.sparkSession
-    files = df.inputFiles()
-    if not files:
-        # File-less frames (localCheckpoint'ed, in-memory relations) have no
-        # listing to estimate from, and they must NOT share a cache entry on
-        # the empty key — a checkpointed frame is already materialized, so
-        # its RDD partition count is available without the physical-planning
-        # cost the listing path exists to avoid.
-        return df.rdd.getNumPartitions()
+def _input_files(df: DataFrame, rows: bool) -> tuple[list[int], int] | None:
+    """Sizes of ``df``'s input files and, when ``rows`` is set, their total
+    parquet FOOTER row count (one metadata read per file, no data scan),
+    from one ``inputFiles()`` listing. None when an input is not a local
+    path: an object store is not stat'ed here, and every caller counts
+    such an input as large. Nothing is cached: a builder runs once per
+    input vintage (the prepared-plan cache), and an in-place rewrite
+    re-decides on the next build."""
     from urllib.parse import unquote
 
-    local = []
-    for f in files:
+    import pyarrow.parquet as pq
+
+    sizes: list[int] = []
+    total = 0
+    for uri in df.inputFiles():
         # inputFiles() returns percent-encoded URIs; decode so paths with
         # spaces/special chars stat correctly instead of contributing 0
-        if f.startswith("file:"):
-            local.append(unquote(f[len("file:"):]))
-        elif "://" not in f:
-            local.append(unquote(f))
+        if uri.startswith("file:"):
+            path = unquote(uri[len("file:"):])
+        elif "://" in uri:
+            return None
         else:
-            # non-local FS: can't stat cheaply; assume the scan already
-            # parallelizes (real clusters list >= cores splits)
-            return 1 << 30
-    sizes = []
-    for p in local:
+            path = unquote(uri)
         try:
-            sizes.append(os.path.getsize(p))
+            sizes.append(os.path.getsize(path))
         except OSError:
             sizes.append(0)
-    total = sum(sizes)
-    open_cost = _parse_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304"), 4 << 20
-    )
-    max_part = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)), 128 << 20
-    )
-    cores = spark.sparkContext.defaultParallelism
-    # sizes AND the confs/parallelism the estimate depends on participate
-    # in the key: files rewritten in-session at the same path, or an
-    # in-session maxPartitionBytes/openCostInBytes tune, must not reuse a
-    # stale split estimate (a wrong skip leaves cores idle on the very
-    # per-row pipelines spread() exists to parallelize)
-    key = (
-        _session_key(spark),
-        tuple(sorted(zip(local, sizes))),
-        open_cost,
-        max_part,
-        cores,
-    )
-    cached = _SPREAD_CACHE.get(key)
-    if cached is not None:
-        return cached
-    bytes_per_core = (total + open_cost * len(local)) / max(cores, 1)
-    max_split = min(max_part, max(open_cost, int(bytes_per_core)))
-    splits = 0
-    for sz in sizes:
-        splits += max(1, -(-sz // max(max_split, 1)))
-    splits = max(splits, 1)
-    _SPREAD_CACHE[key] = splits
-    return splits
+            continue
+        if rows:
+            try:
+                total += pq.ParquetFile(path).metadata.num_rows
+            except Exception:  # noqa: BLE001 - unreadable footer counts 0
+                pass
+    return sizes, total
 
 
-def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Repartition up to the cluster's parallelism when the input arrives
-    in fewer splits than there are cores — keyed by ``cols`` when given,
-    round-robin otherwise.
+def input_rows(df: DataFrame) -> int:
+    """Footer row count of ``df``'s input files: the input to every
+    row-gated plan choice (a broadcast-vs-shuffle-hash hint, an exact vs
+    sketch algorithm, :func:`spread`'s ``above_rows``). Pass the scan the
+    builder already holds; a filter or projection over it counts the same
+    files. A non-``file:`` input counts as large (``sys.maxsize``); a
+    file-less frame counts 0. Tests force every large branch by
+    monkeypatching this function."""
+    stats = _input_files(df, rows=True)
+    return sys.maxsize if stats is None else stats[1]
 
-    Pure per-row pipelines (shingle/md5/signature, hyperplane buckets) are
-    bounded by input split count; a small local table is one parquet file
-    (1-4 splits), leaving most cores idle (measured 6.4s -> 1.7s on the
-    minhash signature stage at sf0.1). At real scale the scan already
-    yields >= cores splits and this is a no-op — no shuffle is added.
 
-    Pass the row's natural unique key ONLY when the input is fine-grained
-    (many rows per core): a keyless round-robin repartition first pays a
-    LOCAL SORT of its input (sortBeforeRepartition, on by default since
-    SPARK-23207 so retried tasks reproduce the same row-to-partition
-    assignment), while hash partitioning on a deterministic key needs no
-    such sort and is retry-safe for free — measured r11 on the 600k-row
-    q_bootstrap_ci exchange: 0.97s round-robin vs 0.58s keyed. But for a
-    COARSE table (the 5k-doc corpus feeding CPU-heavy per-row pipelines)
-    the multinomial spread of a hash leaves ~10-20% partition imbalance
-    where round-robin is exactly even, and the measured A/B regressed
-    7-17% (q_dedup_simhash/suffix/langid, r11) — those sites stay
-    keyless; the tiny local sort of a 5k-row input is the cheaper side.
+def spread(df: DataFrame, *cols: str, above_rows: int = 0) -> DataFrame:
+    """Repartition to the cluster's parallelism when the input arrives in
+    fewer scan splits than there are cores and holds more than
+    ``above_rows`` rows (:func:`input_rows`) — hash-partitioned on
+    ``cols`` when given, round-robin otherwise.
 
-    The split count comes from the file listing (cached per session), not
-    ``df.rdd.getNumPartitions()`` — the RDD probe forced physical planning
-    per query build (r3 verdict finding).
+    Per-row pipelines (shingle/md5/signature, JSON parse, hyperplane
+    buckets) are bounded by the input's split count, and a local fixture
+    table is one single-row-group parquet file: 1-4 splits leave most
+    cores idle (measured 6.4 s -> 1.7 s on the minhash signature stage at
+    sf0.1). At real scale the scan already yields >= cores splits, and so
+    does a non-``file:`` input here, so this is a no-op there and adds no
+    exchange. ``above_rows`` is for sites where the added exchange costs
+    more than it buys below a measured size.
+
+    The split count follows ``FilePartition.maxSplitBytes`` over the file
+    listing, read live with the confs and ``defaultParallelism``; a
+    file-less frame (checkpointed, in-memory) reports its RDD partition
+    count. ``df.rdd`` is not probed for file scans because it forces
+    physical planning on every build.
+
+    Pass the row's unique key as ``cols`` only when the input is
+    fine-grained (many rows per core): a keyless round-robin repartition
+    first pays a LOCAL SORT of its input (sortBeforeRepartition, on by
+    default since SPARK-23207, so retried tasks reproduce the same
+    row-to-partition assignment), while hash partitioning on a
+    deterministic key needs no sort and is retry-safe for free (600k-row
+    q_bootstrap_ci exchange: 0.97 s round-robin vs 0.58 s keyed). For a
+    COARSE input (the 5k-doc corpus feeding CPU-heavy per-row pipelines)
+    a hash leaves ~10-20% partition imbalance where round-robin is exactly
+    even, and keyed measured 7-17% slower (q_dedup_simhash/suffix/langid),
+    so those sites stay keyless.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if _estimated_scan_splits(df) < target:
-        if cols:
-            from pyspark.sql import functions as F
+    if above_rows and input_rows(df) <= above_rows:
+        return df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    stats = _input_files(df, rows=False)
+    if stats is None:
+        return df
+    sizes = stats[0]
+    if sizes:
+        open_cost = _parse_bytes(
+            spark.conf.get("spark.sql.files.openCostInBytes", "4194304"), 4 << 20
+        )
+        max_part = _parse_bytes(
+            spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)),
+            128 << 20,
+        )
+        bytes_per_core = (sum(sizes) + open_cost * len(sizes)) / max(target, 1)
+        max_split = max(min(max_part, max(open_cost, int(bytes_per_core))), 1)
+        splits = sum(max(1, -(-sz // max_split)) for sz in sizes)
+    else:
+        splits = df.rdd.getNumPartitions()
+    if splits >= target:
+        return df
+    if cols:
+        from pyspark.sql import functions as F
 
-            return df.repartition(target, *[F.col(c) for c in cols])
-        return df.repartition(target)
-    return df
+        return df.repartition(target, *[F.col(c) for c in cols])
+    return df.repartition(target)

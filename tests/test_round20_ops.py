@@ -8,22 +8,27 @@ import duckdb
 import pandas as pd
 import pytest
 
+from cloud_data_sync_spark import tables
 from cloud_data_sync_spark.registry import all_queries
-from cloud_data_sync_spark.tables import table_num_rows
+from cloud_data_sync_spark.tables import input_rows
 
 from tests.conftest import SF_DIR
 
 
-def test_table_num_rows_reads_footers_across_glob(tmp_path):
+def test_input_rows_reads_footers_across_split_files(spark, tmp_path):
     d = tmp_path / "sf"
     d.mkdir()
     pd.DataFrame({"x": range(7)}).to_parquet(d / "events.parquet", index=False)
     pd.DataFrame({"x": range(5)}).to_parquet(
         d / "events_001.parquet", index=False
     )
-    assert table_num_rows(str(d), "events") == 12
-    assert table_num_rows(str(d), "lineitem") == 0
-    assert table_num_rows(str(d / "missing"), "events") == 0
+    split = spark.read.parquet(str(d / "events.parquet"), str(d / "events_001.parquet"))
+    assert input_rows(split) == 12
+    assert input_rows(split.filter("x > 3")) == 12  # footers, not a scan
+    assert input_rows(spark.range(3)) == 0  # no input files
+    for f in d.iterdir():
+        f.unlink()
+    assert input_rows(split) == 0  # listed files gone
 
 
 def test_percentiles_adaptive_exact_below_cutoff(spark):
@@ -52,18 +57,18 @@ def test_percentiles_adaptive_exact_below_cutoff(spark):
 
 
 def test_percentiles_adaptive_sketch_above_cutoff(spark, monkeypatch):
-    """Force the big-data branch with a 1-row cutoff: mode flips to
+    """Force the big-data branch through the row policy: mode flips to
     'sketch' and the sketch lands within 1% of the exact branch — the
     claim q_agg_approx_quantiles hash-certifies, held by the swap too."""
-    monkeypatch.setenv("SPARK_GRAFT_ADAPTIVE_EXACT_ROWS", "1")
     # the raw builder, not the prepared wrapper: the cache key is the data
     # VINTAGE (the real decision input — row count — is vintage-derived),
-    # so an env-only flip on identical files would legitimately hit the
-    # cached plan; the override exists to force the branch in tests.
+    # so a patched row count on identical files would legitimately hit the
+    # cached plan.
     fn = all_queries()["q_percentiles_adaptive"].fn.__wrapped__
+    monkeypatch.setattr(tables, "input_rows", lambda df: 2_000_001)
     sk = fn(spark, SF_DIR).toPandas().set_index("l_returnflag")
     assert set(sk["mode"]) == {"sketch"}
-    monkeypatch.delenv("SPARK_GRAFT_ADAPTIVE_EXACT_ROWS")
+    monkeypatch.undo()
     ex = fn(spark, SF_DIR).toPandas().set_index("l_returnflag")
     assert set(ex["mode"]) == {"exact"}
     for flag in ex.index:

@@ -5,7 +5,10 @@
 Default: every registered key (streaming drains excluded unless named —
 their first invocation runs the drain to build the family result, which
 is expensive and stateful; the batch-twin plan is what the files are
-for). One file per key: <out>/<key>.txt, containing explain("formatted").
+for). One file per key: <out>/<key>.txt, containing explain("formatted"),
+and <out>/digests.json mapping each key to ``plan_digest`` of its plan
+text. Two dumps of the same tree in fresh processes give the same
+digests, so a digest diff shows which keys' plans a change moved.
 
 ``--executed`` runs each query into the noop sink FIRST and dumps the
 plan after the action: with AQE the dump then shows the FINAL adaptive
@@ -20,13 +23,27 @@ Used by the optimization rounds to commit before/after plan evidence
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cloud_data_sync_spark.registry import all_queries  # noqa: E402
 from cloud_data_sync_spark.session import get_spark  # noqa: E402
+
+
+def plan_digest(txt: str) -> str:
+    """sha256 of a plan text with its per-session counters normalised:
+    expression ids (``#123``) and exchange ``plan_id``s count up with
+    build order, and the catalog layout tables (``bkt_*``, ``ann_*``)
+    carry a 10-hex tag derived from the application id."""
+    txt = re.sub(r"#\d+", "#", txt)
+    txt = re.sub(r"plan_id=\d+", "plan_id=", txt)
+    txt = re.sub(r"_[0-9a-f]{10}\b", "_<tag>", txt)
+    return hashlib.sha256(txt.encode()).hexdigest()
 
 
 def main() -> None:
@@ -62,6 +79,7 @@ def main() -> None:
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     n_err = 0
+    digests: dict[str, str] = {}
     for name in names:
         spec = qs[name]
         fn = spec.plan_fn or spec.fn
@@ -81,7 +99,10 @@ def main() -> None:
             n_err += 1
         with open(os.path.join(out_dir, f"{name}.txt"), "w", encoding="utf-8") as f:
             f.write(txt)
+        digests[name] = plan_digest(txt)
         print(f"wrote {name}", file=sys.stderr)
+    with open(os.path.join(out_dir, "digests.json"), "w", encoding="utf-8") as f:
+        json.dump(digests, f, indent=1, sort_keys=True)
     print(f"{len(names)} plans -> {out_dir} ({n_err} errors)")
 
 
