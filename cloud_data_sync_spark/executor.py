@@ -1,10 +1,11 @@
 """Copy/delete execution: the reference's per-object streaming copy loop
 (sync.go:130-163) and delete phase (sync.go:199-234), distributed.
 
-The action plan (``sync.sync_diff``) is a DataFrame; execution maps each
-partition through a Python worker that copies/deletes its objects and emits
-one status row per object — the reference's continue-on-error counters
-(sync.go:137,155,161) become a *result DataFrame* feeding the state upsert.
+The action plan (``sync.sync_diff``) is a DataFrame; ``mapInArrow`` hands
+each partition's Arrow batches to a Python worker that copies/deletes its
+objects and emits one status row per object — the reference's
+continue-on-error counters (sync.go:137,155,161) become a *result
+DataFrame* feeding the state upsert.
 
 Scale notes:
 - Payloads stream chunk-by-chunk (``shutil.copyfileobj``) — the reference's
@@ -16,9 +17,9 @@ Scale notes:
   until function exit; here each file handle closes per object.
 - Objects run in the plan's own partitions; per-object failures never
   fail the task (try/except per row).
-- Local/file: paths use direct OS streams. For s3a/gs/abfss, executors
-  would use the same code over a FUSE mount, or cloud SDKs via
-  ``opener``/``deleter`` injection — the control flow is identical.
+- I/O is local: both roots must be plain paths or ``file:`` URIs, which
+  the workers open with OS calls. ``execute_plan`` refuses any other
+  scheme (s3a, gs, abfss, ...) before running anything.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import shutil
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from cloud_data_sync_spark.sync import (
@@ -39,6 +40,7 @@ from cloud_data_sync_spark.sync import (
     STATUS_FAILED_UPLOAD,
     STATUS_SUCCESS,
 )
+from cloud_data_sync_spark.tables import arrow_schema
 
 RESULT_SCHEMA = (
     "mapping_id string, object_name string, action string, status string, "
@@ -74,17 +76,6 @@ def _copy_one(src_path: str, dst_path: str) -> tuple[str, str | None]:
     except OSError as e:
         return STATUS_FAILED_UPLOAD, str(e)
     return STATUS_SUCCESS, None
-
-
-def _as_meta_dict(cell) -> dict[str, str]:
-    """Normalize a plan row's metadata cell: Arrow hands MapType to pandas
-    as a dict or a list of (k, v) tuples depending on version; absent/null
-    cells arrive as None/NaN."""
-    if isinstance(cell, dict):
-        return cell
-    if isinstance(cell, (list, tuple)):
-        return dict(cell)
-    return {}
 
 
 def _apply_object_meta(
@@ -156,71 +147,61 @@ def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
             # them forever). Refuse instead of corrupting state.
             raise ValueError(
                 f"execute_plan got a {scheme!r}-scheme root {root!r}: the "
-                "streaming executor performs LOCAL file I/O only — run "
-                "object-store mappings through a cloud-capable executor "
-                "(distributed binaryFile copy mode) or a file: staging root"
+                "executor performs local file I/O only and accepts plain "
+                "paths or file: URIs — stage object-store mappings through "
+                "a local root"
             )
     work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE))
 
     src_local = src_root.replace("file://", "").rstrip("/")
     tgt_local = tgt_root.replace("file://", "").rstrip("/")
+    # built on the driver: parsing a DDL string needs the JVM
+    out_schema = arrow_schema(RESULT_SCHEMA)
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                now = datetime.now(timezone.utc).replace(tzinfo=None)
-                name = row.object_name
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # the columns this loop writes; every other result column is
+            # the plan's own, passed through
+            made: dict[str, list] = {
+                "status": [],
+                "error": [],
+                "content_type": [],
+                "metadata": [],
+                "last_synced": [],
+            }
+            for row in batch.to_pylist():
+                name = row["object_name"]
                 content_type = None
                 metadata: dict[str, str] = {}
-                if row.action == ACTION_COPY:
+                if row["action"] == ACTION_COPY:
                     dst = os.path.join(tgt_local, name)
                     status, err = _copy_one(os.path.join(src_local, name), dst)
                     # Content type: prefer the source catalog's (xattr/cloud
                     # HEAD), fall back to extension sniffing — the reference
                     # stores ContentType per object (database.go:144-157)
                     # and re-uploads with it (gcp/client.go:107-138).
-                    ct_cell = getattr(row, "content_type", None)
-                    content_type = (
-                        ct_cell
-                        if isinstance(ct_cell, str) and ct_cell
-                        else mimetypes.guess_type(name)[0]
-                    )
-                    metadata = _as_meta_dict(getattr(row, "metadata", None))
+                    content_type = row.get("content_type") or mimetypes.guess_type(
+                        name
+                    )[0]
+                    # an Arrow map arrives as a list of (key, value) pairs
+                    metadata = dict(row.get("metadata") or ())
                     if status == STATUS_SUCCESS:
                         _apply_object_meta(dst, content_type, metadata)
                 else:
                     status, err = _delete_one(os.path.join(tgt_local, name))
-                out.append(
-                    {
-                        "mapping_id": row.mapping_id,
-                        "object_name": name,
-                        "action": row.action,
-                        "status": status,
-                        "error": err,
-                        "size": getattr(row, "size", None),
-                        "last_modified": getattr(row, "last_modified", None),
-                        "etag": getattr(row, "etag", None),
-                        "content_type": content_type,
-                        "metadata": metadata,
-                        "last_synced": now,
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "mapping_id",
-                    "object_name",
-                    "action",
-                    "status",
-                    "error",
-                    "size",
-                    "last_modified",
-                    "etag",
-                    "content_type",
-                    "metadata",
-                    "last_synced",
+                made["status"].append(status)
+                made["error"].append(err)
+                made["content_type"].append(content_type)
+                made["metadata"].append(metadata)
+                made["last_synced"].append(datetime.now(timezone.utc))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(made[f.name], f.type)
+                    if f.name in made
+                    else batch.column(f.name).cast(f.type)
+                    for f in out_schema
                 ],
+                schema=out_schema,
             )
 
-    return work.mapInPandas(_run, schema=RESULT_SCHEMA)
+    return work.mapInArrow(_run, schema=RESULT_SCHEMA)

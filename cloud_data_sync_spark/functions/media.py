@@ -12,7 +12,7 @@ counts, brand/codec tags.
 Each parser reads ONLY fixed-offset headers and length-prefixed chunk
 tables — never the payload body — so decode cost is O(#chunks), not
 O(bytes), and a truncated/corrupt payload raises ``MediaFormatError``
-(never a worker crash: the mapInPandas caller tags the row as
+(never a worker crash: the mapInArrow caller tags the row as
 undecodable, the standard corpus-quarantine pattern).
 """
 

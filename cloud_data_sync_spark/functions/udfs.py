@@ -1,12 +1,13 @@
-"""Pandas-UDF surface: the sanctioned escape hatch for logic the built-in
+"""Arrow-UDF surface: the sanctioned escape hatch for logic the built-in
 functions can't express.
 
 Rules this engine follows (and the reference never needed — its extension
 point was a Go interface, interfaces/provider.go:26-34):
 
-- Arrow-batched ``@pandas_udf`` only — never row-at-a-time Python UDFs.
-  A scalar pandas UDF moves whole columnar batches across the
-  Python/JVM boundary (~10-100× less overhead per value).
+- Arrow-batched ``@arrow_udf`` only — never row-at-a-time Python UDFs.
+  A scalar Arrow UDF moves whole columnar batches across the
+  Python/JVM boundary (~10-100× less overhead per value) and sees SQL
+  NULL as ``None``.
 - Registered once per module, pure functions of their inputs —
   deterministic, so Spark may re-execute them freely (speculation, retries).
 """
@@ -15,7 +16,7 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -31,17 +32,14 @@ from cloud_data_sync_spark.tables import load_table, materialize
 _TOKEN_RE = re.compile(r"\w+|[^\w\s]", re.ASCII)
 
 
-@F.pandas_udf(LongType())
-def bpe_ish_token_count(texts: pd.Series) -> pd.Series:
+@F.arrow_udf(LongType())
+def bpe_ish_token_count(texts: pa.Array) -> pa.Array:
     """Vectorized token counter over an Arrow batch of strings. NULL text
     counts NULL (unknown), not 0 — matching the oracle's NULL-propagating
-    regexp_extract_all; nullable Int64 so pandas NA survives the Arrow
-    boundary as SQL NULL."""
-    return pd.Series(
-        pd.array(
-            [None if t is None else len(_TOKEN_RE.findall(t)) for t in texts],
-            dtype="Int64",
-        )
+    regexp_extract_all."""
+    return pa.array(
+        [None if t is None else len(_TOKEN_RE.findall(t)) for t in texts.to_pylist()],
+        pa.int64(),
     )
 
 
@@ -55,7 +53,7 @@ SELECT doc_id, lang,
 FROM documents
 """,
     doc=(
-        "Pandas-UDF token counting (BPE-ish regex pre-tokenizer); the oracle "
+        "Arrow-UDF token counting (BPE-ish regex pre-tokenizer); the oracle "
         "recomputes the same regex in SQL — proving the UDF boundary carries "
         "exact values."
     ),

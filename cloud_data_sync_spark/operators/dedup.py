@@ -22,9 +22,10 @@ driver.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from cloud_data_sync_spark.operators.tokens import low_toks, toks_documents
@@ -599,10 +600,10 @@ def _cc_local(sym: DataFrame) -> DataFrame:
     # toLocalIterator's sequential per-partition fetches cost a scheduling
     # round-trip each (measured ~1s at sf0.1), and collect() materializes
     # pyspark Row objects at ~150-250 B each — ~5-10x the "32 MB of longs"
-    # the guard was sized for. toPandas ships two int64 numpy columns:
-    # 16 B/edge, so the ≤2M-edge guard really is ~32 MB on the driver.
-    pdf = sym.select("a", "b").toPandas()
-    for a, b in zip(pdf["a"].to_numpy().tolist(), pdf["b"].to_numpy().tolist()):
+    # the guard was sized for. toArrow ships two int64 columns: 16
+    # B/edge, so the ≤2M-edge guard really is ~32 MB on the driver.
+    edges = sym.select("a", "b").toArrow()
+    for a, b in zip(edges.column("a").to_pylist(), edges.column("b").to_pylist()):
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -1293,35 +1294,29 @@ def embedding_candidate_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@F.arrow_udf(DoubleType())
+def _pair_cosine(
+    va: pa.Array, vb: pa.Array, na: pa.Array, nb: pa.Array
+) -> pa.Array:
+    """Cosine of each (va, vb) pair given the two norms. Degenerate rows —
+    a NULL embedding, a NULL element or a wrong length (no dot product
+    exists) or a NULL, zero or NaN norm product (0/0 would yield numpy
+    NaN, which Spark ORDERS AS GREATER than every double, silently passing
+    >= thresholds) — come back as SQL NULL, matching DuckDB's NULL-on-zero
+    division so threshold/rank consumers agree across engines."""
+    from cloud_data_sync_spark.operators.similarity import full_rows, stacked
+
+    denom = na.to_numpy(zero_copy_only=False) * nb.to_numpy(zero_copy_only=False)
+    valid = full_rows(va) & full_rows(vb) & np.isfinite(denom) & (denom > 0)
+    out = np.zeros(len(va))
+    if valid.any():
+        dots = np.einsum("ij,ij->i", stacked(va, valid), stacked(vb, valid))
+        out[valid] = dots / denom[valid]
+    return pa.array(out, pa.float64(), mask=~valid)
+
+
 def _embedding_candidate_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cloud_data_sync_spark.operators.similarity import _bucket_col
-
-    @F.pandas_udf("double")
-    def _pair_cosine(
-        va: pd.Series, vb: pd.Series, na: pd.Series, nb: pd.Series
-    ) -> pd.Series:
-        if len(va) == 0:
-            return pd.Series([], dtype="float64")
-        # Degenerate rows — NULL embedding (np.stack would raise) or a
-        # zero/NaN norm (0/0 would yield numpy NaN, which Spark ORDERS AS
-        # GREATER than every double, silently passing >= thresholds) —
-        # must come back as SQL NULL, matching DuckDB's NULL-on-zero
-        # division so threshold/rank consumers agree across engines.
-        denom = na.values * nb.values
-        valid = (
-            np.array([x is not None for x in va.values])
-            & np.array([x is not None for x in vb.values])
-            & np.isfinite(denom)
-            & (denom > 0)
-        )
-        out = np.zeros(len(va))
-        if valid.any():
-            A = np.stack(va.values[valid])
-            B = np.stack(vb.values[valid])
-            out[valid] = np.einsum("ij,ij->i", A, B) / denom[valid]
-        res = pd.Series(out, dtype="Float64")
-        res[~valid] = pd.NA
-        return res
 
     emb = _spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
@@ -1412,7 +1407,7 @@ def _embedding_candidate_cosines(spark: SparkSession, sf_dir: str) -> DataFrame:
         "module's 8-plane signature) bounds bucket size at ~N_label/2^4 per "
         "band — the standard recall/cost LSH trade, deterministic on both "
         "engines. The dot product is the hot loop, so it runs as a "
-        "vectorized Arrow pandas UDF (numpy einsum over the batch matrix — "
+        "vectorized Arrow UDF (numpy einsum over the batch matrix — "
         "measured ~5× the interpreted zip_with/aggregate HOF at 200k pairs). "
         "Products of float-origin doubles are exact; only the 64-term add "
         "order differs from the oracle's sequential sum, ulp-level noise "

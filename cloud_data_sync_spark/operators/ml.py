@@ -34,7 +34,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cloud_data_sync_spark.registry import floor_ratio, register
+from cloud_data_sync_spark.registry import (
+    VALID_EMBEDDING_SQL,
+    floor_ratio,
+    register,
+    valid_vector,
+)
 from cloud_data_sync_spark.tables import load_table
 
 _K = 8
@@ -95,7 +100,7 @@ def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     oracle=f"""
 WITH vecs AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  WHERE embedding IS NOT NULL
+  WHERE {VALID_EMBEDDING_SQL}
 ),
 seed AS (SELECT vec_id % {_K} AS k, e FROM vecs),
 c0d AS (
@@ -145,11 +150,9 @@ GROUP BY k
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = (
         load_table(spark, sf_dir, "embeddings")
-        # NULL embeddings carry no position: drop them from clustering on
-        # BOTH engines (oracle mirrors with WHERE embedding IS NOT NULL)
-        # rather than letting each engine's NULL-distance tie-break place
-        # the row in an arbitrary cluster.
-        .filter(F.col("embedding").isNotNull())
+        # an invalid vector has no position: kept, each engine's
+        # NULL-distance tie-break would place it in an arbitrary cluster
+        .filter(valid_vector("embedding"))
         .select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("e"),
@@ -444,7 +447,7 @@ _PROBE_CTES = f"""pts AS (
   SELECT CAST(embedding AS DOUBLE[]) AS x,
          CASE WHEN label < 4 THEN 1.0 ELSE 0.0 END AS y
   FROM embeddings
-  WHERE embedding IS NOT NULL
+  WHERE {VALID_EMBEDDING_SQL}
 ),
 g1 AS (
   SELECT k.i AS i, avg((0.5 - p.y) * p.x[k.i]) AS g
@@ -519,11 +522,9 @@ def _probe_weights(
     """(pts, w1, w2, s1): the unrolled 2-step GD chain's building blocks.
     w1/w2 are ONE-row weight-vector packs; s1 is pts scored with w1
     (carries x, needed by step 2's gradient)."""
-    # NULL embeddings carry no features — excluded from train/score on
-    # BOTH engines (the q_kmeans rule; DuckDB's list_inner_product raises
-    # on NULL-bearing operands rather than skipping them)
+    # the q_kmeans rule: invalid vectors carry no features
     pts = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
+        valid_vector("embedding")
     ).select(
         F.col("embedding").cast("array<double>").alias("x"),
         F.when(F.col("label") < 4, 1.0).otherwise(0.0).alias("y"),
@@ -920,7 +921,7 @@ _NB_SMOOTH = 1e-6
     oracle=f"""
 WITH vecs AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e, label FROM embeddings
-  WHERE embedding IS NOT NULL
+  WHERE {VALID_EMBEDDING_SQL}
 ),
 train AS (SELECT * FROM vecs WHERE vec_id % 3 <> 0),
 test AS (SELECT * FROM vecs WHERE vec_id % 3 = 0),
@@ -987,9 +988,9 @@ def q_gaussian_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = spread(
         load_table(spark, sf_dir, "embeddings"), "vec_id", above_rows=10_000
     ).filter(
-        # the q_kmeans rule: NULL embeddings join neither split — a NULL
+        # the q_kmeans rule: invalid vectors join neither split — a NULL
         # log-likelihood otherwise "classifies" by engine NULL tie-breaks
-        F.col("embedding").isNotNull()
+        valid_vector("embedding")
     ).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
@@ -1100,7 +1101,10 @@ _RP_SUMS_SQL = "[" + ",\n           ".join(
 
 
 def _rp_project_batch(e_col):
-    """Vectorized JL projection of one Arrow batch of embeddings.
+    """Vectorized JL projection of one Arrow batch of embeddings (a
+    list<double> array, which keeps a NULL element apart from a NaN one;
+    a NaN propagates like the oracle's) into struct<p: list<double>, nr:
+    double> rows.
 
     Exactness contract (must match the DuckDB oracle's flat
     `e[1]*s1 + e[2]*s2 + ...` chains AND the floor/NULL guards downstream):
@@ -1114,78 +1118,51 @@ def _rp_project_batch(e_col):
       NULLs so the downstream posexplode still emits 16 rows);
     - arrays LONGER than DIM project from their first DIM elements (the
       oracle indexes e[1..64]) while the norm denominator folds the FULL
-      array (the oracle's list_sum over e);
+      array (the oracle's list_sum over e), in element order
+      (``np.bincount`` adds each row's squares sequentially), NULL when
+      any element is NULL;
     - the norm ratio is returned RAW; the engine-portable floor_ratio /
       component guards stay in SQL so their LONG-floor semantics are
       byte-identical to the previous implementation.
-    Rows not on the fast path (wrong length / embedded NULLs) are
-    handled per-row with plain Python floats — same left folds, rare by
-    construction.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from cloud_data_sync_spark.operators.similarity import full_rows, stacked
 
     n = len(e_col)
-    ps = [None] * n
-    nrs = [None] * n
-    fast_idx, fast_rows = [], []
-    for i, arr in enumerate(e_col):
-        if arr is None:
-            ps[i] = [None] * _RP_OUT
-            continue
-        vals = list(arr)
-        if len(vals) == _DIM and not any(v is None for v in vals):
-            fast_idx.append(i)
-            fast_rows.append(vals)
-            continue
-        # slow exact path: mirror try_element_at/NULL-propagation folds
-        if len(vals) < _DIM or any(v is None for v in vals[:_DIM]):
-            ps[i] = [None] * _RP_OUT
-            # denominator fold is NULL too (NULL element or no elements
-            # reaches it only when one exists in the full array)
-            if any(v is None for v in vals) or len(vals) < _DIM:
-                nrs[i] = None
-            continue
-        p_row = []
-        for row in _RP_M:
-            acc = vals[0] * row[0]
-            for d in range(1, _DIM):
-                acc = acc + vals[d] * row[d]
-            p_row.append(acc * 0.25)
-        ps[i] = p_row
-        if any(v is None for v in vals):
-            # a NULL element past DIM still NULLs the full-array
-            # denominator fold (oracle list_sum NULL-propagates)
-            continue
-        pe = 0.0
-        for v in vals:
-            pe = pe + v * v
-        pp = 0.0
-        for v in p_row:
-            pp = pp + v * v
-        den = pe ** 0.5
-        nrs[i] = (pp ** 0.5) / den if den != 0.0 else None
-    if fast_rows:
-        E = np.asarray(fast_rows, dtype=np.float64)
-        S = np.asarray(_RP_M, dtype=np.float64)
-        P = np.empty((len(fast_rows), _RP_OUT), dtype=np.float64)
-        for j in range(_RP_OUT):
-            acc = E[:, 0] * S[j, 0]
-            for d in range(1, _DIM):
-                acc = acc + E[:, d] * S[j, d]
-            P[:, j] = acc * 0.25
-        pe = E[:, 0] * E[:, 0]
+    head = pc.list_slice(e_col, 0, _DIM)
+    fast = full_rows(head, _DIM)
+    E = stacked(head, fast, _DIM)
+    S = np.asarray(_RP_M, dtype=np.float64)
+    P = np.empty((len(E), _RP_OUT), dtype=np.float64)
+    for j in range(_RP_OUT):
+        acc = E[:, 0] * S[j, 0]
         for d in range(1, _DIM):
-            pe = pe + E[:, d] * E[:, d]
-        pp = P[:, 0] * P[:, 0]
-        for j in range(1, _RP_OUT):
-            pp = pp + P[:, j] * P[:, j]
-        den = np.sqrt(pe)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            nr = np.sqrt(pp) / den
-        for k, i in enumerate(fast_idx):
-            ps[i] = P[k].tolist()
-            nrs[i] = float(nr[k]) if den[k] != 0.0 else None
-    return ps, nrs
+            acc = acc + E[:, d] * S[j, d]
+        P[:, j] = acc * 0.25
+    pp = P[:, 0] * P[:, 0]
+    for j in range(1, _RP_OUT):
+        pp = pp + P[:, j] * P[:, j]
+    flat = e_col.flatten()
+    owner = pc.list_parent_indices(e_col).to_numpy()
+    x = flat.to_numpy(zero_copy_only=False)
+    den = np.sqrt(np.bincount(owner, weights=x * x, minlength=n))[fast]
+    no_null = np.ones(n, dtype=bool)
+    no_null[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    with np.errstate(divide="ignore", invalid="ignore"):
+        nr = np.sqrt(pp) / den
+    nr_ok = no_null[fast] & (den != 0.0)
+    ps = [[None] * _RP_OUT for _ in range(n)]
+    nrs = [None] * n
+    for k, i in enumerate(np.flatnonzero(fast)):
+        ps[i] = P[k].tolist()
+        nrs[i] = float(nr[k]) if nr_ok[k] else None
+    return pa.StructArray.from_arrays(
+        [pa.array(ps, pa.list_(pa.float64())), pa.array(nrs, pa.float64())],
+        names=["p", "nr"],
+    )
 
 
 
@@ -1228,7 +1205,7 @@ FROM proj, LATERAL unnest(generate_series(1, {_RP_OUT})) AS t(i)
 )
 def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: the 16×64 sign-matrix projection runs as ONE Arrow-vectorized
-    # pandas UDF (guide §4.2: hand whole batches to native vectorized
+    # UDF (guide §4.2: hand whole batches to native vectorized
     # code) instead of the r11 HOF fold. Why not built-ins: the HOF
     # transform/zip_with/aggregate form never enters whole-stage codegen
     # (interpreted lambda per element — 1024 per row; 3.4 s at sf1), and
@@ -1243,32 +1220,14 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _rp_project_batch's docstring (sequential adds, no numpy
     # reassociation; NULL/short/long-array semantics; raw ratio floored
     # in SQL below exactly as before).
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
-    @F.pandas_udf(
-        StructType(
-            [
-                StructField("p", ArrayType(DoubleType())),
-                StructField("nr", DoubleType()),
-            ]
-        )
-    )
-    def _rp(e):  # Series -> DataFrame(p: array<double>, nr: double)
-        ps, nrs = _rp_project_batch(e)
-        return pd.DataFrame({"p": ps, "nr": nrs})
-
     # guide §4.4: InferFiltersFromGenerate derives a `size(p) > 0` filter
     # from the downstream posexplode and pushes it BELOW the projection,
     # cloning the UDF into a second ArrowEvalPython (every row paid the
     # projection twice — verified in the plan dump). Non-deterministic
     # marks the expression un-copyable; the function is in fact pure.
-    _rp = _rp.asNondeterministic()
+    _rp = F.arrow_udf(
+        _rp_project_batch, "p array<double>, nr double"
+    ).asNondeterministic()
 
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1281,9 +1240,13 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             # floor in SQL (not the UDF) so the truncation keeps Spark's
             # LONG-floor semantics bit-identical to the previous
-            # implementation; try-divide NULLs (0/0) arrive as None.
+            # implementation; try-divide NULLs (0/0) arrive as None. A NaN
+            # element makes the ratio NaN, which stays NaN as in the
+            # oracle's DOUBLE floor (Spark's LONG floor would make it 0).
             "norm_ratio",
-            floor_ratio(F.col("nr_raw"), 4),
+            F.when(F.isnan("nr_raw"), F.col("nr_raw")).otherwise(
+                floor_ratio(F.col("nr_raw"), 4)
+            ),
         )
         # scalar-only output contract: the reduced vector is EXPLODED to one
         # (vec_id, dim, component) row per output dimension instead of an

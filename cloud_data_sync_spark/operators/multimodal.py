@@ -2,8 +2,8 @@
 
 Pattern for image/audio/video at 100 TB: payloads live as a ``binary``
 column (or as object-store paths for >2 GB blobs), metadata as typed
-columns; decode / feature-extraction runs in Arrow-batched ``mapInPandas``
-so each Python worker sees a columnar batch, never a row at a time.
+columns; decode / feature-extraction runs in ``mapInArrow`` so each Python
+worker sees a columnar Arrow batch, never a row at a time.
 
 The container has no codec *libraries*, so the default decode is a
 deterministic fake the DuckDB oracle replays; the opt-in real path
@@ -21,13 +21,13 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_sync_spark.operators.dedup import AUG_OFFSET
 from cloud_data_sync_spark.registry import register
-from cloud_data_sync_spark.tables import load_table
+from cloud_data_sync_spark.tables import arrow_schema, load_table
 
 # Real-decode opt-in: container-header decode (functions/media.py) in
 # pure Python. The gate is an EXPLICIT flag, not a probe for whether a
@@ -98,11 +98,12 @@ def decode_payload(content: bytes, media_type: str) -> dict:
 def extract_features(binary_df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary column.
 
-    mapInPandas: one Python worker per partition, columnar batches in/out —
+    mapInArrow: one Python worker per partition, columnar batches in/out —
     the scalable shape for per-payload Python work (vs. per-row UDFs)."""
+    out_schema = arrow_schema(FEATURE_SCHEMA)
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             # a NULL payload (missing/unfetchable object — routine at
             # corpus scale) must not crash the worker: its features are
             # NULL byte_len, 1 frame, checksum 0 — exactly what the
@@ -116,21 +117,22 @@ def extract_features(binary_df: DataFrame) -> DataFrame:
                     "head_checksum": 0,
                     "codec": f"fake-{m.split('/', 1)[0]}",
                 }
-                for c, m in zip(pdf["content"], pdf["media_type"])
+                for c, m in zip(
+                    batch.column("content").to_pylist(),
+                    batch.column("media_type").to_pylist(),
+                )
             ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": pd.array(
-                        [f["byte_len"] for f in feats], dtype="Int64"
-                    ),
-                    "n_frames": [f["n_frames"] for f in feats],
-                    "head_checksum": [f["head_checksum"] for f in feats],
-                    "codec": [f["codec"] for f in feats],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("doc_id").cast(f.type)
+                    if f.name == "doc_id"
+                    else pa.array([x[f.name] for x in feats], f.type)
+                    for f in out_schema
+                ],
+                schema=out_schema,
             )
 
-    return binary_df.mapInPandas(_extract, schema=FEATURE_SCHEMA)
+    return binary_df.mapInArrow(_extract, schema=FEATURE_SCHEMA)
 
 
 @register(
@@ -173,7 +175,7 @@ SELECT doc_id,
 FROM documents
 """,
     doc=(
-        "mapInPandas feature extraction over binary payloads (deterministic "
+        "mapInArrow feature extraction over binary payloads (deterministic "
         "fake decode; oracle recomputes the same features in SQL). byte_len/"
         "n_frames are byte-true; head_checksum sums the first 8 codepoints "
         "of the decoded payload so non-ASCII text replays identically."
@@ -189,7 +191,7 @@ FRAME_STRIDE = 4  # keep every 4th frame
 
 
 def sample_frames(binary_df: DataFrame) -> DataFrame:
-    """1→N frame sampling via mapInPandas: each payload expands to every
+    """1→N frame sampling via mapInArrow: each payload expands to every
     FRAME_STRIDE-th fixed-size chunk ("frame") with per-frame metadata.
 
     This is the video/audio frame-sampling shape: expansion happens
@@ -199,15 +201,14 @@ def sample_frames(binary_df: DataFrame) -> DataFrame:
     by decoded frames; the Spark plumbing is identical."""
     import hashlib
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "frame_idx": [],
-                "frame_len": [],
-                "frame_md5": [],
-            }
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
+    out_schema = arrow_schema(FRAME_SCHEMA)
+
+    def _frames(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out: dict[str, list] = {f.name: [] for f in out_schema}
+            for doc_id, content in zip(
+                batch.column("doc_id").to_pylist(), batch.column("content").to_pylist()
+            ):
                 if content is None:
                     # missing payload: one placeholder frame with NULL
                     # length/checksum (= the oracle's substr/md5 of NULL),
@@ -224,7 +225,7 @@ def sample_frames(binary_df: DataFrame) -> DataFrame:
                 # payloads (adversarial-corpus finding). A real codec
                 # replaces this chunking wholesale; the 1→N plumbing —
                 # the part under test — is unchanged.
-                text = bytes(content).decode("utf-8", errors="replace")
+                text = content.decode("utf-8", errors="replace")
                 n_frames = max(1, (len(text) + FRAME_BYTES - 1) // FRAME_BYTES)
                 for idx in range(0, n_frames, FRAME_STRIDE):
                     chunk = text[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
@@ -234,11 +235,12 @@ def sample_frames(binary_df: DataFrame) -> DataFrame:
                     out["frame_md5"].append(
                         hashlib.md5(chunk.encode("utf-8")).hexdigest()
                     )
-            df = pd.DataFrame(out)
-            df["frame_len"] = pd.array(out["frame_len"], dtype="Int64")
-            yield df
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out[f.name], f.type) for f in out_schema],
+                schema=out_schema,
+            )
 
-    return binary_df.mapInPandas(_frames, schema=FRAME_SCHEMA)
+    return binary_df.mapInArrow(_frames, schema=FRAME_SCHEMA)
 
 
 @register(

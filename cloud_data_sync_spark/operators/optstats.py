@@ -103,14 +103,12 @@ FROM exact e JOIN est s ON e.kn = s.kn
     ),
 )
 def q_join_card_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread(): the 3-way explode + per-pair partial aggregation is the
-    # map wall — the 18M-pair stage ran on one core over the 110 MB
-    # single-row-group lineitem parquet.
-    from cloud_data_sync_spark.tables import spread
-
-    li = spread(
-        load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_linenumber"
-    )
+    # No spread(): on 4 cores the lineitem scan already yields 4 splits
+    # at sf1, so spread is a no-op there, and at sf0.1 (3 splits) its
+    # exchange made the key slower: median of 8 alternating runs per side
+    # (each the min of 5 walls) 1.22 s with it vs 1.14 s without, 4-vCPU
+    # VM.
+    li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select(
         F.explode(
             F.array(

@@ -21,11 +21,19 @@ import hashlib
 import os
 import tempfile
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from cloud_data_sync_spark.registry import floor_ratio, register
+from cloud_data_sync_spark.registry import (
+    VALID_EMBEDDING_SQL,
+    floor_ratio,
+    register,
+    valid_vector,
+)
 from cloud_data_sync_spark.tables import (
     input_vintage,
     load_table,
@@ -36,6 +44,26 @@ from cloud_data_sync_spark.tables import (
 N_PLANES = 8
 DIM = 64
 TOP_K = 5
+
+
+def full_rows(vecs: pa.Array, dim: int = DIM) -> np.ndarray:
+    """Mask of the rows of an Arrow batch of list<double> vectors that are
+    non-NULL, hold no NULL element and have ``dim`` elements — the rows
+    :func:`stacked` can turn into a matrix. NaN elements count as present."""
+    lengths = pc.list_value_length(vecs).fill_null(-1).to_numpy()
+    full = lengths == dim
+    flat = vecs.flatten()
+    if flat.null_count:
+        owner = pc.list_parent_indices(vecs).to_numpy()
+        full[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    return full
+
+
+def stacked(vecs: pa.Array, rows: np.ndarray, dim: int = DIM) -> np.ndarray:
+    """The :func:`full_rows` ``rows`` of ``vecs`` as a float64
+    ``(len, dim)`` matrix read from the Arrow value buffer."""
+    kept = vecs.filter(pa.array(rows)).flatten()
+    return kept.to_numpy(zero_copy_only=False).reshape(-1, dim)
 
 
 def _rank_topk(scored):
@@ -77,14 +105,14 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
         )
-        # nrm > 0 excludes degenerate rows — NULL embeddings (NULL nrm)
-        # and zero vectors — from the index and query sets on BOTH
-        # engines (oracle `n` CTE carries the same WHERE): a row with no
-        # direction has no meaningful neighbors, and keeping it would
-        # pin engine-specific NULL bucket/rank tie-breaks into results.
+        # valid_vector and nrm > 0 exclude degenerate rows (invalid or
+        # zero vectors) on BOTH engines (oracle `n` CTE carries the same
+        # WHERE): a row with no direction has no meaningful neighbors,
+        # and keeping it would pin engine-specific NULL bucket/rank
+        # tie-breaks into results.
         return emb.withColumn(
             "nrm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-        ).filter(F.col("nrm") > 0)
+        ).filter(valid_vector("v") & (F.col("nrm") > 0))
 
     return session_substrate(
         spark, sf_dir, "sim-vectors", "embeddings", _build
@@ -103,10 +131,10 @@ def _cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
     return F.try_divide(dot, na * nb)
 
 
-_ORACLE_VECS = """
+_ORACLE_VECS = f"""
 vecs AS (
   SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
+  FROM embeddings WHERE {VALID_EMBEDDING_SQL}
 ),
 n AS (
   SELECT vec_id, label, v,
@@ -1379,11 +1407,11 @@ def q_sim_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_vector_stats",
-    oracle="""
+    oracle=f"""
 WITH flat AS (
   SELECT unnest(range(0, len(embedding))) AS dim,
          unnest(list_transform(embedding, x -> CAST(x AS DOUBLE))) AS v
-  FROM embeddings
+  FROM embeddings WHERE {VALID_EMBEDDING_SQL}
 )
 SELECT CAST(dim AS BIGINT) AS dim,
        CAST(count(*) AS BIGINT) AS n,
@@ -1403,7 +1431,7 @@ FROM flat GROUP BY dim
     ),
 )
 def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings").filter(valid_vector("embedding"))
     flat = emb.select(
         F.posexplode(F.col("embedding")).alias("dim", "vf")
     ).select("dim", F.col("vf").cast("double").alias("v"))
@@ -1422,7 +1450,7 @@ def q_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_vector_quantize",
-    oracle="""
+    oracle=f"""
 SELECT vec_id,
        round(mn, 6) AS v_min,
        round(mx, 6) AS v_max,
@@ -1447,7 +1475,7 @@ FROM (
                            'max')
             - list_aggregate(list_transform(embedding, x -> CAST(x AS DOUBLE)),
                              'min')) / 255.0 AS sc
-    FROM embeddings
+    FROM embeddings WHERE {VALID_EMBEDDING_SQL}
   )
 )
 WHERE sc > 0
@@ -1466,8 +1494,12 @@ WHERE sc > 0
     ),
 )
 def q_vector_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(valid_vector("embedding"))
+        .select(
+            "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+        )
     )
     mn, mx = F.array_min("v"), F.array_max("v")
     based = emb.select(
@@ -1623,7 +1655,7 @@ FROM (
         "clustering), label-propagation QA, and kNN-classifier eval. "
         "Reuses the SAME candidate pipeline as q_dedup_embedding "
         "(dedup.embedding_candidate_cosines: pair keys shuffle ~16 B/row, "
-        "vectors attach after pair-dedup, einsum pandas-UDF cosine), so "
+        "vectors attach after pair-dedup, einsum Arrow-UDF cosine), so "
         "the graph is consistent with the dedup pass by construction. "
         "Symmetrization is a map-only explode of a 2-element struct "
         "array over the scored pair set (each pair cosine-scored once, "
@@ -1649,7 +1681,7 @@ def q_sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-only symmetrization: explode a 2-element struct array so every
     # pair is cosine-scored exactly once and emitted twice. (A union of
     # two projections of `pairs` would compile to two physical branches —
-    # the candidate join and the pandas-UDF cosine would run twice.)
+    # the candidate join and the Arrow-UDF cosine would run twice.)
     sym = pairs.select(
         F.explode(
             F.array(
@@ -1684,7 +1716,7 @@ _DRIFT_TOP = 8  # per-dim rows emitted: the top-drifted dimensions
 WITH n AS (
   SELECT vec_id, label,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings WHERE embedding IS NOT NULL
+  FROM embeddings WHERE {VALID_EMBEDDING_SQL}
 ),
 flat AS (
   SELECT label % 2 AS side, t.i AS dim, n.v[t.i] AS x
@@ -1736,9 +1768,7 @@ FROM scored WHERE rn <= {_DRIFT_TOP}
     ),
 )
 def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
+    emb = load_table(spark, sf_dir, "embeddings").filter(valid_vector("embedding"))
     flat = emb.select(
         (F.col("label") % 2).alias("side"),
         F.posexplode(

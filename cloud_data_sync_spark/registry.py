@@ -42,6 +42,21 @@ def floor_ratio(expr, digits: int):
     p = 10 ** digits
     return F.floor(expr * p) / p
 
+
+def valid_vector(col: str):
+    """True when array ``col`` is not NULL and holds no NULL or NaN
+    element. Embedding readers drop other rows on both engines, whose
+    NULL/NaN rules differ: DuckDB's list sums skip NULL elements and its
+    inner product and variance raise on NULL or NaN, where Spark's folds
+    return NULL or NaN. SQL twin: ``VALID_EMBEDDING_SQL``."""
+    from pyspark.sql import functions as F
+
+    return F.forall(col, lambda x: x.isNotNull() & ~F.isnan(x))
+
+
+# DuckDB twin of valid_vector("embedding"); a NULL list gives NULL, false.
+VALID_EMBEDDING_SQL = "len(list_filter(embedding, x -> x IS NULL OR isnan(x))) = 0"
+
 _REGISTRY: dict[str, "QuerySpec"] = {}
 
 

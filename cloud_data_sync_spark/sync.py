@@ -100,7 +100,7 @@ def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
     # listings made the steady sync tick slower on a 4-vCPU VM (perfbench
     # sync_steady, 3.38 -> 4.19 s at seed 3; 3.2 -> 3.9 s traced at seed
     # 4). The broadcast join keeps the LocalTableScan's partitioning, so
-    # the plan reaches execute_plan's mapInPandas in 16 partitions instead
+    # the plan reaches execute_plan's mapInArrow in 16 partitions instead
     # of the 2 the coalesced shuffle leaves: 16 Python tasks instead of 2
     # (executor 0.55 -> 1.05 s, peak RSS +0.8 GiB). Dropping the hints
     # therefore first needs the executor to choose its own partition count.

@@ -216,6 +216,20 @@ def materialize(
     return df.checkpoint(eager=eager)
 
 
+def arrow_schema(schema: StructType | str):
+    """The ``pyarrow.Schema`` Spark expects back from Python code that
+    returns Arrow data for ``schema`` (a ``StructType`` or a DDL string):
+    ``local_frame`` tables, ``mapInArrow`` batches, ``arrow_udf`` structs.
+    Parsing DDL goes through the JVM, so call this on the driver and let
+    the closure carry the result to the workers."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return to_arrow_schema(schema)
+
+
 def local_frame(
     spark: SparkSession, rows: list[tuple], schema: StructType
 ) -> DataFrame:
@@ -232,13 +246,12 @@ def local_frame(
     as timezone-aware datetimes or epoch microseconds, maps as dicts.
     """
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow_schema = to_arrow_schema(schema)
+    target = arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
     table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
-        schema=arrow_schema,
+        [pa.array(col, type=f.type) for col, f in zip(columns, target)],
+        schema=target,
     )
     return spark.createDataFrame(table, schema)
 

@@ -232,6 +232,8 @@ ADVERSARIAL_VECS = [
     (6, [1e-30] * _DIM, 3),                       # tiny magnitudes
     (7, [-1.0] * _DIM, 4),
     (8, [1.0] * _DIM, 4),
+    (9, [0.5] * 31 + [None] + [0.5] * 32, 1),    # NULL element
+    (10, [0.5] * 31 + [float("nan")] + [0.5] * 32, 1),  # NaN element
 ]
 
 _T0 = __import__("datetime").datetime(2025, 1, 1)

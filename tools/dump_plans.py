@@ -37,9 +37,12 @@ from cloud_data_sync_spark.session import get_spark  # noqa: E402
 
 def plan_digest(txt: str) -> str:
     """sha256 of a plan text with its per-session counters normalised:
-    expression ids (``#123``) and exchange ``plan_id``s count up with
+    expression ids (``#123``), exchange ``plan_id``s and the suffix of
+    higher-order-function lambda variables (``x_321``) count up with
     build order, and the catalog layout tables (``bkt_*``, ``ann_*``)
     carry a 10-hex tag derived from the application id."""
+    for var in set(re.findall(r"lambda (\w+_\d+)#", txt)):
+        txt = re.sub(rf"\b{var}\b", var.rsplit("_", 1)[0] + "_", txt)
     txt = re.sub(r"#\d+", "#", txt)
     txt = re.sub(r"plan_id=\d+", "plan_id=", txt)
     txt = re.sub(r"_[0-9a-f]{10}\b", "_<tag>", txt)
