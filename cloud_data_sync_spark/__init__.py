@@ -8,7 +8,7 @@ Public API — everything a library embedder uses (SURVEY.md §3.3):
 
     spark = get_spark("my-app")
     cfg = load_config("config.json")
-    reports = sync_all(spark, cfg, state_root="/state")
+    reports = sync_all(spark, cfg, state_path="/state")
 
 The query registry (the driver contract's backing store) is exported for
 programmatic access to every named operator:

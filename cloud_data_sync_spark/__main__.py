@@ -38,12 +38,6 @@ def main(argv: list[str] | None = None) -> int:
         help="write a starter config to --config and exit",
     )
     p.add_argument(
-        "--distributed-listing",
-        action="store_true",
-        help="list buckets via the cluster-parallel binaryFile index "
-        "(for very large buckets; default is driver-side listing)",
-    )
-    p.add_argument(
         "--allow-empty-source",
         action="store_true",
         help="permit a sync whose SOURCE lists empty while the target has "
@@ -84,11 +78,7 @@ def main(argv: list[str] | None = None) -> int:
     try:
         if args.once:
             reports = sync_all(
-                spark,
-                cfg,
-                state_path,
-                args.distributed_listing,
-                args.allow_empty_source,
+                spark, cfg, state_path, allow_empty_source=args.allow_empty_source
             )
         else:
             reports = [
@@ -98,7 +88,6 @@ def main(argv: list[str] | None = None) -> int:
                     cfg,
                     state_path,
                     interval_sec=args.interval,
-                    distributed_listing=args.distributed_listing,
                     allow_empty_source=args.allow_empty_source,
                 )
                 for r in tick

@@ -38,13 +38,11 @@ from cloud_data_sync_spark.executor import (
     execute_plan,
 )
 from cloud_data_sync_spark.sources.listing import (
-    CATALOG_SCHEMA,
     ensure_bucket_exists,
     list_objects,
-    list_objects_binaryfile,
     provider_conf,
 )
-from cloud_data_sync_spark.tables import local_frame, materialize
+from cloud_data_sync_spark.tables import materialize
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
@@ -140,34 +138,12 @@ def count_actions(results: DataFrame) -> dict[str, int]:
     return counts
 
 
-def _catalog(
-    spark: SparkSession, root_uri: str, mapping_id: str, distributed: bool
-) -> DataFrame:
-    """Listing for one bucket root: driver-side remote-iterator by default,
-    or the cluster-parallel binaryFile index for very large buckets
-    (``distributed=True``). Missing roots list as empty either way."""
-    if not distributed:
-        return list_objects(spark, root_uri, mapping_id)
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        return list_objects_binaryfile(spark, root_uri, mapping_id)
-    except AnalysisException as exc:
-        # ONLY a missing root (first run, target not created yet) may list
-        # as empty. Any other failure (auth, network, permissions) must
-        # propagate: an empty catalog from a transient source-listing error
-        # would make the reconciliation plan delete every target object.
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return local_frame(spark, [], CATALOG_SCHEMA)
-        raise
-
-
 def sync_buckets(
     spark: SparkSession,
     cfg: Config,
     mapping: BucketMapping,
     state_path: str,
-    distributed_listing: bool = False,
+    *,
     allow_empty_source: bool = False,
 ) -> SyncReport:
     mid = mapping.mapping_id
@@ -188,9 +164,11 @@ def sync_buckets(
         spark, _provider(cfg, mapping.target_provider_id), mapping.target_bucket
     )
 
-    # 1. catalogs (metadata only — no payload reads)
-    src = _catalog(spark, src_root, mid, distributed_listing)
-    tgt = _catalog(spark, tgt_root, mid, distributed_listing)
+    # 1. catalogs (metadata only — no payload reads); a missing root (first
+    # run, target not created yet) lists as empty, any other listing
+    # failure propagates
+    src = list_objects(spark, src_root, mid)
+    tgt = list_objects(spark, tgt_root, mid)
 
     # SAFETY GATE: an empty SOURCE combined with a non-empty target/state
     # turns the whole plan into deletes. A typo'd bucket URI, an unmounted
@@ -278,7 +256,7 @@ def sync_all(
     spark: SparkSession,
     cfg: Config,
     state_path: str,
-    distributed_listing: bool = False,
+    *,
     allow_empty_source: bool = False,
 ) -> list[SyncReport]:
     """FOREACH mapping, continue-on-error (sync.go:32-53)."""
@@ -291,8 +269,7 @@ def sync_all(
                     cfg,
                     mapping,
                     state_path,
-                    distributed_listing,
-                    allow_empty_source,
+                    allow_empty_source=allow_empty_source,
                 )
             )
         except Exception as e:  # noqa: BLE001 - per-mapping isolation
@@ -315,7 +292,7 @@ def run_continuous(
     interval_sec: int = 300,
     max_ticks: int | None = None,
     stop_file: str | None = None,
-    distributed_listing: bool = False,
+    *,
     allow_empty_source: bool = False,
 ) -> list[list[SyncReport]]:
     """main.go:85-115: initial run + fixed-interval re-runs until stopped.
@@ -346,7 +323,7 @@ def run_continuous(
             # otherwise get real copies/deletes and a state rewrite
             return []
         all_reports = [
-            sync_all(spark, cfg, state_path, distributed_listing, allow_empty_source)
+            sync_all(spark, cfg, state_path, allow_empty_source=allow_empty_source)
         ]
         ticks = 1
         while (
@@ -369,7 +346,7 @@ def run_continuous(
             if stop_requested or (stop_file and os.path.exists(stop_file)):
                 break
             all_reports.append(
-                sync_all(spark, cfg, state_path, distributed_listing, allow_empty_source)
+                sync_all(spark, cfg, state_path, allow_empty_source=allow_empty_source)
             )
             ticks += 1
         return all_reports

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cloud_data_sync_spark.tables import hadoop_fs
+
 FORMATS = ("parquet", "orc", "csv", "json", "xml")
 
 
@@ -101,10 +103,7 @@ def compact_table(
     (rename or catalog pointer flip) stays with the caller, keeping the
     rewrite atomic-or-absent.
     """
-    jvm = spark.sparkContext._jvm
-    jconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = jpath.getFileSystem(jconf)
+    fs, jpath = hadoop_fs(spark, src_path)
     total_bytes = fs.getContentSummary(jpath).getLength()
     n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil div
     # Partition-layout detection: a source written with partitionBy has
@@ -184,12 +183,11 @@ def compact_table(
         # same read_table call as the original)
         writer = writer.option("rootTag", "rows").option("rowTag", "row")
     writer.save(dst_path)
-    dst = jvm.org.apache.hadoop.fs.Path(dst_path)
     # the DESTINATION's own filesystem: reusing the source-scheme fs
     # throws "Wrong FS" when src and dst live on different schemes.
     # Recursive walk: a partitioned output nests data files under
     # key=value directories, which a top-level listStatus would miss.
-    dst_fs = dst.getFileSystem(jconf)
+    dst_fs, dst = hadoop_fs(spark, dst_path)
     n_out = 0
     it = dst_fs.listFiles(dst, True)
     while it.hasNext():

@@ -6,17 +6,11 @@ same code lists ``file:``, ``s3a://``, ``gs://``, ``abfss://`` buckets;
 credentials/endpoints are *configuration* (``spark.hadoop.fs.*``), not code
 (storage/factory.go:24-77 becomes ``provider_conf`` below).
 
-Two listing paths:
-
-- ``list_objects``: driver-side Hadoop ``FileSystem.listFiles`` (recursive,
-  remote-iterator) → DataFrame. Metadata only — never reads payloads. Fine
-  into the millions of objects; the iterator is streamed, not materialized
-  twice.
-- ``list_objects_binaryfile``: Spark's ``binaryFile`` source, whose
-  InMemoryFileIndex parallelizes listing across the cluster when a
-  directory has many children — the very-large-bucket path, and the one
-  that also carries payload bytes (``content`` column) for copy-through-
-  DataFrame mode.
+One lister: ``list_objects``, a driver-side Hadoop ``FileSystem.listFiles``
+(recursive remote-iterator) → DataFrame. Metadata only — never reads
+payloads. Like the reference's in-memory ``map[string]*ObjectInfo`` per
+bucket, the listing is held on the driver, and every listed object
+(dot- and underscore-prefixed names included) is diffed, copied and deleted.
 
 Catalog schema matches interfaces/provider.go:9-17 (ObjectInfo).
 """
@@ -26,7 +20,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     MapType,
@@ -36,7 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from cloud_data_sync_spark.tables import local_frame
+from cloud_data_sync_spark.tables import hadoop_fs, local_frame
 
 CATALOG_SCHEMA = StructType(
     [
@@ -114,13 +107,11 @@ def ensure_bucket_exists(spark: SparkSession, root_uri: str) -> bool:
     SDK-level operation with no FileSystem analog, so a genuinely missing
     bucket surfaces as a clear error naming that gap rather than the
     store's raw NoSuchBucket. Returns True if it had to create."""
-    if path_exists(spark, root_uri):
+    fs, path = hadoop_fs(spark, root_uri)
+    if fs.exists(path):
         return False
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(root_uri)
     try:
-        path.getFileSystem(hconf).mkdirs(path)
+        fs.mkdirs(path)
     except Exception as e:  # noqa: BLE001 - py4j raises JavaError wrappers
         scheme = path.toUri().getScheme()
         if scheme not in (None, "file"):
@@ -138,10 +129,8 @@ def ensure_bucket_exists(spark: SparkSession, root_uri: str) -> bool:
 def path_exists(spark: SparkSession, uri: str) -> bool:
     """Existence probe through Hadoop FS (the reference's tableExists-style
     introspection, database.go:319-344 point lookups / catalog checks)."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(uri)
-    return bool(path.getFileSystem(hconf).exists(path))
+    fs, path = hadoop_fs(spark, uri)
+    return bool(fs.exists(path))
 
 
 CONTENT_TYPE_XATTR = "user.content-type"
@@ -186,11 +175,7 @@ def list_objects(
     ``object_meta_local``); cloud-SDK listers surface the provider's
     object metadata through the same two columns. The rows become an Arrow
     local relation (``tables.local_frame``), so no Python task reads them."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hconf = jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(root_uri)
-    fs = path.getFileSystem(hconf)
+    fs, path = hadoop_fs(spark, root_uri)
     rows = []
     if fs.exists(path):
         scheme = path.toUri().getScheme()
@@ -229,46 +214,3 @@ def list_objects(
                 )
             )
     return local_frame(spark, rows, CATALOG_SCHEMA)
-
-
-def list_objects_binaryfile(
-    spark: SparkSession, root_uri: str, mapping_id: str = "", with_content: bool = False
-) -> DataFrame:
-    """Cluster-parallel listing via the binaryFile source.
-
-    Column-prunes to metadata unless ``with_content`` — Spark's binaryFile
-    reader only materializes ``content`` when the column is referenced, so
-    the metadata-only plan never reads payload bytes.
-
-    KNOWN DIVERGENCE from ``list_objects``: Spark's file index filters
-    hidden entries (names starting with ``_`` or ``.``, at any depth)
-    with no conf to disable, so such objects are INVISIBLE to this
-    lister while the driver-side lister (and the reference's
-    ListObjects) returns them. A bucket relying on dot-/underscore-
-    prefixed keys must use the default driver-side listing; do NOT flip
-    a mapping between modes across ticks or those objects will oscillate
-    between synced and delete-candidates."""
-    df = spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(
-        root_uri
-    )
-    root = root_uri.rstrip("/")
-    # \Q...\E: quote the root literally — bucket paths may contain regex
-    # metacharacters ('(', '+', '.', ...) which would otherwise corrupt the
-    # prefix-strip pattern and with it every object_name key in the diff
-    root_part = root.split("://")[-1]
-    name = F.regexp_replace(F.col("path"), f"^.*?\\Q{root_part}\\E/", "")
-    out = df.select(
-        F.lit(mapping_id).alias("mapping_id"),
-        name.alias("object_name"),
-        F.lit(root_uri).alias("bucket"),
-        F.col("length").alias("size"),
-        F.col("modificationTime").alias("last_modified"),
-        F.concat_ws("-", F.col("length"), F.unix_millis(F.col("modificationTime"))).alias(
-            "etag"
-        ),
-        F.lit(None).cast("string").alias("content_type"),
-        F.create_map().cast("map<string,string>").alias("metadata"),
-        *(["content"] if with_content else []),
-    )
-    return out
-

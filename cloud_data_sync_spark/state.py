@@ -16,7 +16,6 @@ metadata table: ~100 bytes/object), never payloads.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,7 +29,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from cloud_data_sync_spark.tables import local_frame
+from cloud_data_sync_spark.tables import hadoop_fs, local_frame
 
 STATE_SCHEMA = StructType(
     [
@@ -71,33 +70,19 @@ class StateVersionError(RuntimeError):
     """State table on disk was written by an incompatible schema version."""
 
 
-def _version_path(path: str) -> str:
-    return os.path.join(path.replace("file://", ""), _VERSION_FILE)
-
-
-def _read_marker(path: str, spark: SparkSession | None = None) -> str | None:
+def _read_marker(spark: SparkSession, path: str) -> str | None:
     """Marker text, or None when cleanly absent (pre-versioning / new path).
 
-    With a session, I/O goes through the Hadoop FileSystem API so the same
-    one-file protocol works on any scheme the sync machinery writes to
-    (file:, s3a://, gs://, abfss://); without one (bare-path test callers),
-    plain local I/O.
+    I/O goes through the Hadoop FileSystem API so the same one-file
+    protocol works on any scheme the sync machinery writes to (file:,
+    s3a://, gs://, abfss://). A marker that EXISTS but cannot be read
+    raises: treating it as absent would silently pass the version gate on
+    exactly the table it exists to protect.
     """
-    if spark is None:
-        try:
-            with open(_version_path(path), encoding="utf-8") as f:
-                return f.read()
-        except FileNotFoundError:
-            return None
-        # any OTHER OSError (EACCES, EIO) means the marker EXISTS but can't
-        # be read — treating that as cleanly absent would silently pass the
-        # version gate on exactly the table it exists to protect; propagate
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _VERSION_FILE)
-    fs = jpath.getFileSystem(hconf)
+    fs, jpath = hadoop_fs(spark, path.rstrip("/") + "/" + _VERSION_FILE)
     if not fs.exists(jpath):
         return None
+
     def _read(handle) -> str:
         stream = handle.open(jpath)
         try:
@@ -115,8 +100,9 @@ def _read_marker(path: str, spark: SparkSession | None = None) -> str | None:
         # a PRIVATE FileSystem instance: setVerifyChecksum on the shared
         # JVM-cached one would silently disable checksum verification for
         # every concurrent reader of this scheme during the window.
-        fs2 = jvm.org.apache.hadoop.fs.FileSystem.newInstance(
-            jpath.toUri(), hconf
+        sc = spark.sparkContext
+        fs2 = sc._jvm.org.apache.hadoop.fs.FileSystem.newInstance(
+            jpath.toUri(), sc._jsc.hadoopConfiguration()
         )
         try:
             fs2.setVerifyChecksum(False)
@@ -125,13 +111,13 @@ def _read_marker(path: str, spark: SparkSession | None = None) -> str | None:
             fs2.close()
 
 
-def check_state_version(path: str, spark: SparkSession | None = None) -> None:
+def check_state_version(spark: SparkSession, path: str) -> None:
     """Raise StateVersionError if the on-disk marker mismatches.
 
     A missing marker (pre-versioning table or brand-new path) is accepted —
     the next save stamps it.
     """
-    text = _read_marker(path, spark)
+    text = _read_marker(spark, path)
     if text is None:
         return
     try:
@@ -156,18 +142,11 @@ def check_state_version(path: str, spark: SparkSession | None = None) -> None:
         )
 
 
-def _write_state_version(path: str, spark: SparkSession | None = None) -> None:
+def _write_state_version(spark: SparkSession, path: str) -> None:
     payload = json.dumps(
         {"version": STATE_VERSION, "columns": STATE_SCHEMA.fieldNames()}
     )
-    if spark is None:
-        with open(_version_path(path), "w", encoding="utf-8") as f:
-            f.write(payload)
-        return
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/" + _VERSION_FILE)
-    fs = jpath.getFileSystem(hconf)
+    fs, jpath = hadoop_fs(spark, path.rstrip("/") + "/" + _VERSION_FILE)
     out = fs.create(jpath, True)
     try:
         out.write(payload.encode("utf-8"))
@@ -194,10 +173,9 @@ def load_state(spark: SparkSession, path: str) -> DataFrame:
     ONLY a cleanly-absent path reads as empty. An existing-but-unreadable
     table (transient I/O, auth, corrupt footer) must RAISE: swallowing it
     would classify every source object as 'new' and re-copy the bucket —
-    the same first-run-vs-failure distinction the listing path enforces
-    (runner._catalog).
+    the same first-run-vs-failure distinction ``list_objects`` enforces.
     """
-    check_state_version(path, spark)
+    check_state_version(spark, path)
     if not state_exists(spark, path):
         return empty_state(spark)
     return spark.read.schema(STATE_SCHEMA).parquet(path)
@@ -251,7 +229,7 @@ def save_state(state: DataFrame, path: str) -> None:
         .partitionBy("mapping_id")
         .parquet(path)
     )
-    _write_state_version(path, state.sparkSession)
+    _write_state_version(state.sparkSession, path)
 
 
 def clear_mapping_partition(spark: SparkSession, path: str, mapping_id: str) -> None:
@@ -265,10 +243,7 @@ def clear_mapping_partition(spark: SparkSession, path: str, mapping_id: str) -> 
     """
     from urllib.parse import unquote
 
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))
-    fs = root.getFileSystem(hconf)
+    fs, root = hadoop_fs(spark, path.rstrip("/"))
     if not fs.exists(root):
         return
     # Partition directory names are Spark-escaped (%-hex for ':', '=', …),

@@ -232,11 +232,7 @@ def run_available_now_group(
     parallelism — callers pick.
     """
     spark = specs[0][0].sparkSession
-    drain_parts = str(
-        drain_partitions
-        if drain_partitions is not None
-        else os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    )
+    drain_parts = str(drain_partitions if drain_partitions is not None else 8)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_ndb = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"

@@ -146,7 +146,7 @@ def sync_counts(plan: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _base_catalog(orders: DataFrame) -> DataFrame:
+def _base_listing(orders: DataFrame) -> DataFrame:
     # Measured and rejected (r12): spread(orders, "o_orderkey") before
     # the md5/object-name projection — 0.78× at sf1 (the catalog hashes
     # are split-bound locally) but 1.6-2.1× WORSE at sf0.1 across two
@@ -173,7 +173,7 @@ def synthetic_catalogs(
     - state covers 4/5 of objects; every 7th has a stale etag, every 13th a
       drifted mtime, every 11th a failed_upload status (retry per sync.go:114)
     """
-    base = _base_catalog(load_table(spark, sf_dir, "orders"))
+    base = _base_listing(load_table(spark, sf_dir, "orders"))
     k = F.col("k")
     src = base.filter(k % 50 != 0).drop("k")
     tgt = base.filter(k % 3 != 1).drop("k")
@@ -342,7 +342,7 @@ FROM plan2 GROUP BY mapping_id, action, reason
     ),
 )
 def q_sync_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _base_catalog(load_table(spark, sf_dir, "orders"))
+    base = _base_listing(load_table(spark, sf_dir, "orders"))
     k = F.col("k")
     # tick-1 source = the same filter synthetic_catalogs applies; derived
     # from the ONE base frame here rather than calling synthetic_catalogs,

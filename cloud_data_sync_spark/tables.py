@@ -139,15 +139,22 @@ _EFFECT_DIRS: dict[tuple[str, str], str] = {}
 _EFFECT_SEQ: dict[tuple[str, str], int] = {}
 
 
+def hadoop_fs(spark: SparkSession, uri: str):
+    """(FileSystem, Path) for ``uri`` through the session's Hadoop
+    configuration: the one handle every file:/s3a:/gs:/abfss: probe, read,
+    write and delete in the package goes through."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(uri)
+    return path.getFileSystem(sc._jsc.hadoopConfiguration()), path
+
+
 def _delete_dir(spark: SparkSession, uri: str) -> None:
     """Recursive delete through the Hadoop FileSystem API (works for
     hdfs:/s3a:/gs:/abfss: roots, not just local paths); best-effort —
     a failed cleanup must never fail the sync tick that triggered it."""
     try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(uri)
-        path.getFileSystem(hconf).delete(path, True)
+        fs, path = hadoop_fs(spark, uri)
+        fs.delete(path, True)
     except Exception:  # noqa: BLE001
         pass
 

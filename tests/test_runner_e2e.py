@@ -57,18 +57,6 @@ def test_first_sync_copies_everything(spark, env):
     assert len(st) == 2
 
 
-def test_distributed_listing_syncs_identically(spark, env):
-    """binaryFile-index listing (the very-large-bucket path) drives the same
-    reconciliation: first run copies all, second run skips all."""
-    cfg, src, tgt, state_path = env
-    r1 = sync_all(spark, cfg, state_path, distributed_listing=True)[0]
-    assert r1.counts.get("copy_success") == 2
-    assert (tgt / "a.txt").read_bytes() == b"hello world"
-    r2 = sync_all(spark, cfg, state_path, distributed_listing=True)[0]
-    assert r2.counts.get("skip") == 2
-    assert "copy_success" not in r2.counts
-
-
 def test_second_sync_skips_unchanged(spark, env):
     cfg, src, tgt, state_path = env
     sync_all(spark, cfg, state_path)
@@ -225,24 +213,24 @@ def test_corrupt_state_version_marker_raises(spark, tmp_path):
     import pytest as _pytest
 
     from cloud_data_sync_spark.state import (
+        _VERSION_FILE,
         StateVersionError,
         check_state_version,
-        _version_path,
     )
 
     state_dir = tmp_path / "state.parquet"
     state_dir.mkdir()
     # cleanly absent marker: accepted
-    check_state_version(str(state_dir))
+    check_state_version(spark, str(state_dir))
     # torn/corrupt marker: must fail loudly, not silently bypass the gate
-    with open(_version_path(str(state_dir)), "w") as f:
+    with open(state_dir / _VERSION_FILE, "w") as f:
         f.write('{"version": 1')  # truncated JSON
     with _pytest.raises(StateVersionError):
-        check_state_version(str(state_dir))
+        check_state_version(spark, str(state_dir))
 
 
-def test_binaryfile_listing_strips_regex_metachar_roots(spark, tmp_path):
-    from cloud_data_sync_spark.sources.listing import list_objects_binaryfile
+def test_listing_keeps_regex_metachar_roots(spark, tmp_path):
+    from cloud_data_sync_spark.sources.listing import list_objects
 
     root = tmp_path / "archive (2024)" / "bucket+a"
     root.mkdir(parents=True)
@@ -251,7 +239,7 @@ def test_binaryfile_listing_strips_regex_metachar_roots(spark, tmp_path):
     (root / "sub" / "deep.bin").write_bytes(b"y")
     rows = {
         r.object_name
-        for r in list_objects_binaryfile(spark, f"file://{root}", "m").collect()
+        for r in list_objects(spark, f"file://{root}", "m").collect()
     }
     assert rows == {"obj.bin", "sub/deep.bin"}
 
@@ -324,11 +312,13 @@ def test_removed_source_metadata_clears_from_target(spark, env):
     assert md == {}, f"stale metadata survived the overwrite: {md}"
 
 
-def _assert_empty_source_refused(spark, env, distributed):
+def test_empty_source_with_nonempty_target_refuses_mass_delete(spark, env):
+    """A typo'd or unmounted source lists empty; the plan would then delete
+    every target object. The guard refuses unless explicitly overridden."""
     import shutil as _shutil
 
     cfg, src, tgt, state_path = env
-    sync_all(spark, cfg, state_path, distributed_listing=distributed)
+    sync_all(spark, cfg, state_path)
     assert (tgt / "a.txt").exists()
 
     _shutil.rmtree(src)
@@ -336,29 +326,24 @@ def _assert_empty_source_refused(spark, env, distributed):
     # guarded call: the refusal itself raises, the mapping fails, the
     # target is untouched
     with pytest.raises(RuntimeError, match="refusing the all-delete plan"):
-        sync_buckets(
-            spark, cfg, cfg.mappings[0], state_path, distributed_listing=distributed
-        )
-    reports = sync_all(spark, cfg, state_path, distributed_listing=distributed)
+        sync_buckets(spark, cfg, cfg.mappings[0], state_path)
+    reports = sync_all(spark, cfg, state_path)
     assert reports[0].counts.get("mapping_failed") == 1
     assert (tgt / "a.txt").exists()
     # explicit override: the emptied source is actioned
-    reports = sync_all(
-        spark, cfg, state_path, distributed_listing=distributed, allow_empty_source=True
-    )
+    reports = sync_all(spark, cfg, state_path, allow_empty_source=True)
     assert reports[0].counts.get("delete_success", 0) >= 2
     assert not (tgt / "a.txt").exists()
 
 
-def test_empty_source_with_nonempty_target_refuses_mass_delete(spark, env):
-    """A typo'd or unmounted source lists empty; the plan would then delete
-    every target object. The guard refuses unless explicitly overridden."""
-    _assert_empty_source_refused(spark, env, distributed=False)
-
-
-def test_empty_distributed_listing_refuses_mass_delete(spark, env):
-    """The same guard holds when the binaryFile index lists the source."""
-    _assert_empty_source_refused(spark, env, distributed=True)
+def test_allow_empty_source_is_keyword_only(spark, env):
+    """A positional True must not reach the mass-delete guard's override."""
+    cfg, src, tgt, state_path = env
+    with pytest.raises(TypeError):
+        sync_all(spark, cfg, state_path, True)
+    with pytest.raises(TypeError):
+        sync_buckets(spark, cfg, cfg.mappings[0], state_path, True)
+    assert not tgt.exists()
 
 
 def test_emptied_mapping_state_partition_is_cleared(spark, env):
@@ -417,15 +402,13 @@ def _set_xattrs(src):
 def test_driver_built_frames_are_local_relations(spark, env):
     """Driver listings, the empty state and the missing-root catalog plan as
     JVM LocalRelations: a job that reads them launches no Python task."""
-    from cloud_data_sync_spark.runner import _catalog
     from cloud_data_sync_spark.sources.listing import list_objects
 
     cfg, src, tgt, state_path = env
     _set_xattrs(src)
     listed = list_objects(spark, str(src), "m")
     empty = list_objects(spark, str(tgt), "m")  # root does not exist yet
-    missing = _catalog(spark, f"file://{tgt}", "m", distributed=True)
-    for df in (listed, empty, missing, state_mod.empty_state(spark)):
+    for df in (listed, empty, state_mod.empty_state(spark)):
         plan = _analyzed(df).toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
 
@@ -441,7 +424,6 @@ def test_driver_built_frames_are_local_relations(spark, env):
     ]
     assert listed.dtypes == expected
     assert empty.dtypes == expected and empty.isEmpty()
-    assert missing.dtypes == expected and missing.isEmpty()
 
     ms = F.unix_millis("last_modified").alias("ms")
     rows = {r["object_name"]: r for r in listed.select("*", ms).collect()}
@@ -454,6 +436,42 @@ def test_driver_built_frames_are_local_relations(spark, env):
     assert a["metadata"] == {"cache-control": "max-age=60"}
     b = rows["nested/b.txt"]
     assert (b["content_type"], b["metadata"]) == (None, {})
+
+
+HIDDEN = (".hidden", "_under", "nested/.x")
+
+
+def test_hidden_names_round_trip(spark, env):
+    """Dot- and underscore-prefixed objects are listed like any other (the
+    reference lists every object, interfaces/provider.go:27): copied, then
+    skipped, then deleted once the source drops them; a.txt's xattrs
+    survive every tick."""
+    from cloud_data_sync_spark.sources.listing import object_meta_local
+
+    cfg, src, tgt, state_path = env
+    _set_xattrs(src)
+    for name in HIDDEN:
+        (src / name).write_bytes(name.encode())
+
+    def tick():
+        counts = sync_all(spark, cfg, state_path)[0].counts
+        assert object_meta_local(str(tgt / "a.txt")) == (
+            "text/x-custom",
+            {"cache-control": "max-age=60"},
+        )
+        state = state_mod.load_state(spark, state_path).collect()
+        return counts, {r["object_name"] for r in state}
+
+    everything = {"a.txt", "nested/b.txt", *HIDDEN}
+    assert tick() == ({"copy_success": 5}, everything)
+    for name in HIDDEN:
+        assert (tgt / name).read_bytes() == name.encode()
+    assert tick() == ({"skip": 5}, everything)
+    for name in HIDDEN:
+        os.remove(src / name)
+    assert tick() == ({"delete_success": 3, "skip": 2}, {"a.txt", "nested/b.txt"})
+    for name in HIDDEN:
+        assert not (tgt / name).exists()
 
 
 def _three_ticks(spark, env):

@@ -233,28 +233,33 @@ def test_list_objects_refuses_file_root(spark, tmp_path):
     assert f.read_text() == "precious data"
 
 
-def test_read_marker_raises_on_unreadable_not_missing(tmp_path):
+def test_read_marker_raises_on_unreadable_not_missing(spark, tmp_path):
     """An EXISTING but unreadable version marker must not be treated as
     cleanly absent — that would silently pass the version gate."""
     import os
 
     import pytest
+    from py4j.protocol import Py4JJavaError
 
-    from cloud_data_sync_spark.state import _read_marker, _version_path
+    from cloud_data_sync_spark.state import _VERSION_FILE, _read_marker
 
     state_dir = tmp_path / "state"
     state_dir.mkdir()
-    assert _read_marker(str(state_dir)) is None  # genuinely absent → None
-    marker = _version_path(str(state_dir))
+    assert _read_marker(spark, str(state_dir)) is None  # genuinely absent → None
+    marker = state_dir / _VERSION_FILE
+    marker.mkdir()  # exists, but no stream opens on a directory
+    with pytest.raises(Py4JJavaError):
+        _read_marker(spark, str(state_dir))
+    marker.rmdir()
     with open(marker, "w", encoding="utf-8") as fh:
         fh.write("v1")
     os.chmod(marker, 0)
     try:
         if os.geteuid() == 0:  # root ignores mode bits; can't simulate EACCES
-            assert _read_marker(str(state_dir)) == "v1"
+            assert _read_marker(spark, str(state_dir)) == "v1"
         else:
-            with pytest.raises(OSError):
-                _read_marker(str(state_dir))
+            with pytest.raises(Py4JJavaError):
+                _read_marker(spark, str(state_dir))
     finally:
         os.chmod(marker, 0o644)
 
