@@ -33,6 +33,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
+from cloud_data_sync_spark.sources.listing import local_root
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
@@ -136,9 +137,9 @@ def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
     Lazy like any DataFrame — materialize once (e.g. ``.cache().count()``)
     then feed the rows where action='copy' into ``state.upsert`` and the
     delete successes into ``state.delete_keys``."""
-    for root in (src_root, tgt_root):
-        scheme = root.split("://", 1)[0] if "://" in root else None
-        if scheme not in (None, "file"):
+    src_local, tgt_local = local_root(src_root), local_root(tgt_root)
+    for root, local in ((src_root, src_local), (tgt_root, tgt_local)):
+        if local is None:
             # this executor's copy/delete primitives are local-FS ops; an
             # s3a:// path handed to os.remove raises FileNotFoundError,
             # which the 404-tolerance would record as delete_success —
@@ -146,15 +147,13 @@ def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
             # objects survive (the next tick re-lists and re-"deletes"
             # them forever). Refuse instead of corrupting state.
             raise ValueError(
-                f"execute_plan got a {scheme!r}-scheme root {root!r}: the "
-                "executor performs local file I/O only and accepts plain "
-                "paths or file: URIs — stage object-store mappings through "
-                "a local root"
+                f"execute_plan got a {root.partition(':')[0]!r}-scheme root "
+                f"{root!r}: the executor performs local file I/O only and "
+                "accepts plain paths or file: URIs — stage object-store "
+                "mappings through a local root"
             )
     work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE))
 
-    src_local = src_root.replace("file://", "").rstrip("/")
-    tgt_local = tgt_root.replace("file://", "").rstrip("/")
     # built on the driver: parsing a DDL string needs the JVM
     out_schema = arrow_schema(RESULT_SCHEMA)
 

@@ -1,16 +1,18 @@
 """Object-catalog sources: listings as DataFrames.
 
 The reference's four provider clients (gcp/aws/azure/minio ``ListObjects``)
-collapse into URI schemes handled by Hadoop FileSystem connectors — the
-same code lists ``file:``, ``s3a://``, ``gs://``, ``abfss://`` buckets;
-credentials/endpoints are *configuration* (``spark.hadoop.fs.*``), not code
-(storage/factory.go:24-77 becomes ``provider_conf`` below).
+collapse into URI schemes. A local root (a bare path or a ``file:`` URI,
+see ``local_root``) is listed with one OS directory walk; every other
+scheme (``s3a://``, ``gs://``, ``abfss://``) goes through its Hadoop
+FileSystem connector, whose credentials/endpoints are *configuration*
+(``spark.hadoop.fs.*``), not code (storage/factory.go:24-77 becomes
+``provider_conf`` below).
 
-One lister: ``list_objects``, a driver-side Hadoop ``FileSystem.listFiles``
-(recursive remote-iterator) → DataFrame. Metadata only — never reads
-payloads. Like the reference's in-memory ``map[string]*ObjectInfo`` per
-bucket, the listing is held on the driver, and every listed object
-(dot- and underscore-prefixed names included) is diffed, copied and deleted.
+One lister: ``list_objects``, driver-side and metadata only — it never
+reads payloads. Like the reference's in-memory ``map[string]*ObjectInfo``
+per bucket, the listing is held on the driver, and every listed object
+(dot- and underscore-prefixed names included) is diffed, copied and
+deleted.
 
 Catalog schema matches interfaces/provider.go:9-17 (ObjectInfo).
 """
@@ -18,6 +20,7 @@ Catalog schema matches interfaces/provider.go:9-17 (ObjectInfo).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -41,8 +44,8 @@ CATALOG_SCHEMA = StructType(
         StructField("etag", StringType(), True),
         StructField("content_type", StringType(), True),
         # ObjectInfo.Metadata map[string]string (interfaces/provider.go:16).
-        # Hadoop FileSystem listings don't surface user metadata — cloud-SDK
-        # listers populate it; file:/Hadoop paths carry an empty map.
+        # Local roots read it from user.* xattrs; Hadoop FileSystem listings
+        # don't surface user metadata, so other schemes carry an empty map.
         StructField("metadata", MapType(StringType(), StringType()), True),
     ]
 )
@@ -163,23 +166,106 @@ def object_meta_local(path: str) -> tuple[str | None, dict[str, str]]:
     return ct, md
 
 
+def local_root(uri: str) -> str | None:
+    """The OS path of a local root, or None for any other scheme.
+
+    Local means a bare path or a ``file:`` URI (``file:///abs`` or
+    ``file:/abs``). The scheme is whatever precedes a ``:`` that comes
+    before the first ``/``, which is how Hadoop's ``Path`` splits it. The
+    path is taken literally, as Hadoop does: ``%`` sequences are not
+    decoded and ``?``/``#`` are ordinary characters. Trailing slashes are
+    dropped. A ``file:`` URI naming a host raises: no OS path reaches
+    another host's files."""
+    head, colon, rest = uri.partition(":")
+    if colon and "/" not in head:
+        if head.lower() != "file":
+            return None
+        if rest.startswith("//"):
+            host, _, path = rest[2:].partition("/")
+            if host:
+                raise ValueError(
+                    f"file: URI {uri!r} names host {host!r}; a local root "
+                    "is file:///abs/path or file:/abs/path"
+                )
+            rest = "/" + path
+        uri = rest
+    return uri.rstrip("/") or uri[:1]
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _walk_rows(root: str, root_uri: str, mapping_id: str) -> list[tuple]:
+    """Catalog rows of the local directory ``root``: one ``os.walk`` that
+    follows directory symlinks (as Hadoop's local listing does), one
+    ``os.stat`` per object and the xattr read of ``object_meta_local``.
+
+    A directory that cannot be read raises: skipping it would list its
+    objects as gone and plan deletes for them on the target. An object
+    that vanishes between the walk and its stat (a racing delete, a
+    dangling symlink) is left out, as Hadoop's ``listStatus`` does."""
+    try:
+        if not stat.S_ISDIR(os.stat(root).st_mode):
+            # the same refusal the Hadoop branch makes, before os.walk's
+            # bare NotADirectoryError: the root names a configuration error
+            raise ValueError(
+                f"{root!r} is a file, so its object is not under the "
+                "mapping root — the root must be a directory/prefix, not a "
+                "file; check the bucket/endpoint configuration"
+            )
+    except FileNotFoundError:
+        return []  # first run: the root does not exist yet
+    prefix = len(root) + (not root.endswith("/"))
+    rows = []
+    for dirpath, _, filenames in os.walk(root, onerror=_raise, followlinks=True):
+        for fname in filenames:
+            p = os.path.join(dirpath, fname)
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:
+                continue
+            ct, md = object_meta_local(p)
+            mtime_ms = st.st_mtime_ns // 1_000_000
+            rows.append(
+                (
+                    mapping_id,
+                    p[prefix:],
+                    root_uri,
+                    st.st_size,
+                    mtime_ms * 1000,  # epoch micros
+                    f"{st.st_size}-{mtime_ms}",  # etag proxy
+                    ct,
+                    md,
+                )
+            )
+    return rows
+
+
 def list_objects(
     spark: SparkSession, root_uri: str, mapping_id: str = ""
 ) -> DataFrame:
     """Recursive listing of ``root_uri`` → catalog DataFrame (metadata only).
 
-    Driver-side Hadoop FileSystem remote-iterator (streams entries; no
-    payload reads — GetObject's N+1 HeadObject anti-pattern in
-    aws/client.go:95-116 has no analog here). For local (file:) roots the
-    per-object content type + user metadata come from xattrs (see
-    ``object_meta_local``); cloud-SDK listers surface the provider's
-    object metadata through the same two columns. The rows become an Arrow
-    local relation (``tables.local_frame``), so no Python task reads them."""
+    A local root (``local_root``) is one OS directory walk
+    (``_walk_rows``): no JVM call per object, and the per-object content
+    type + user metadata come from xattrs (``object_meta_local``). Any
+    other scheme streams a driver-side Hadoop ``FileSystem.listFiles``
+    remote-iterator, which carries the ``provider_conf`` credentials and
+    lists an object store with flat recursive LISTs; cloud-SDK listers
+    would surface the provider's object metadata through the same two
+    columns. Neither reads payloads — GetObject's N+1 HeadObject
+    anti-pattern in aws/client.go:95-116 has no analog here. A missing
+    root lists as empty. The rows become an Arrow local relation
+    (``tables.local_frame``), so no Python task reads them."""
+    local = local_root(root_uri)
+    if local is not None:
+        return local_frame(
+            spark, _walk_rows(local, root_uri, mapping_id), CATALOG_SCHEMA
+        )
     fs, path = hadoop_fs(spark, root_uri)
     rows = []
     if fs.exists(path):
-        scheme = path.toUri().getScheme()
-        is_local = scheme in (None, "file")
         it = fs.listFiles(path, True)
         root = path.toUri().getPath().rstrip("/")
         while it.hasNext():
@@ -198,7 +284,6 @@ def list_objects(
                     "a file; check the bucket/endpoint configuration"
                 )
             name = p[len(root) + 1 :]
-            ct, md = object_meta_local(p) if is_local else (None, {})
             # each FileStatus getter is a py4j round trip: read each once
             size, mtime_ms = st.getLen(), st.getModificationTime()
             rows.append(
@@ -209,8 +294,8 @@ def list_objects(
                     size,
                     mtime_ms * 1000,  # epoch micros
                     f"{size}-{mtime_ms}",  # etag proxy
-                    ct,
-                    md,
+                    None,
+                    {},
                 )
             )
     return local_frame(spark, rows, CATALOG_SCHEMA)

@@ -14,7 +14,9 @@ from cloud_data_sync_spark.config import BucketMapping, Config
 from cloud_data_sync_spark.runner import sync_all, sync_buckets
 
 
-def _make_env(root):
+def _make_env(root, endpoint=str):
+    """Source and target buckets under ``root``; ``endpoint`` renders each
+    provider's endpoint directory (a bare path by default)."""
     src = root / "src" / "bucket-a"
     tgt = root / "tgt" / "bucket-b"
     src.mkdir(parents=True)
@@ -23,8 +25,8 @@ def _make_env(root):
     (src / "nested" / "b.txt").write_bytes(b"nested content")
     cfg = Config(
         providers=[
-            {"id": "s", "type": "minio", "minioConfig": {"endpoint": str(root / "src")}},
-            {"id": "t", "type": "minio", "minioConfig": {"endpoint": str(root / "tgt")}},
+            {"id": "s", "type": "minio", "minioConfig": {"endpoint": endpoint(root / "src")}},
+            {"id": "t", "type": "minio", "minioConfig": {"endpoint": endpoint(root / "tgt")}},
         ],
         mappings=[
             BucketMapping(
@@ -406,6 +408,14 @@ def test_driver_built_frames_are_local_relations(spark, env):
 
     cfg, src, tgt, state_path = env
     _set_xattrs(src)
+    # symlinks are followed, as Hadoop's local listing follows them
+    elsewhere = src.parent / "elsewhere"
+    elsewhere.mkdir()
+    (elsewhere / "o.txt").write_bytes(b"outside")
+    (src / "linkdir").symlink_to(elsewhere)
+    (src / "linkfile").symlink_to(elsewhere / "o.txt")
+    # a dangling link is left out, as Hadoop's listStatus leaves it out
+    (src / "dangling").symlink_to(elsewhere / "gone")
     listed = list_objects(spark, str(src), "m")
     empty = list_objects(spark, str(tgt), "m")  # root does not exist yet
     for df in (listed, empty, state_mod.empty_state(spark)):
@@ -427,7 +437,7 @@ def test_driver_built_frames_are_local_relations(spark, env):
 
     ms = F.unix_millis("last_modified").alias("ms")
     rows = {r["object_name"]: r for r in listed.select("*", ms).collect()}
-    assert set(rows) == {"a.txt", "nested/b.txt"}
+    assert set(rows) == {"a.txt", "nested/b.txt", "linkdir/o.txt", "linkfile"}
     a = rows["a.txt"]
     assert (a["mapping_id"], a["bucket"], a["size"]) == ("m", str(src), 11)
     assert a["ms"] == os.stat(src / "a.txt").st_mtime_ns // 1_000_000
@@ -436,9 +446,11 @@ def test_driver_built_frames_are_local_relations(spark, env):
     assert a["metadata"] == {"cache-control": "max-age=60"}
     b = rows["nested/b.txt"]
     assert (b["content_type"], b["metadata"]) == (None, {})
+    assert rows["linkdir/o.txt"]["size"] == rows["linkfile"]["size"] == 7
 
 
-HIDDEN = (".hidden", "_under", "nested/.x")
+# .b.crc: Hadoop's ChecksumFileSystem hides .*.crc names from its listings
+HIDDEN = (".hidden", "_under", "nested/.x", ".b.crc")
 
 
 def test_hidden_names_round_trip(spark, env):
@@ -463,13 +475,13 @@ def test_hidden_names_round_trip(spark, env):
         return counts, {r["object_name"] for r in state}
 
     everything = {"a.txt", "nested/b.txt", *HIDDEN}
-    assert tick() == ({"copy_success": 5}, everything)
+    assert tick() == ({"copy_success": 6}, everything)
     for name in HIDDEN:
         assert (tgt / name).read_bytes() == name.encode()
-    assert tick() == ({"skip": 5}, everything)
+    assert tick() == ({"skip": 6}, everything)
     for name in HIDDEN:
         os.remove(src / name)
-    assert tick() == ({"delete_success": 3, "skip": 2}, {"a.txt", "nested/b.txt"})
+    assert tick() == ({"delete_success": 4, "skip": 2}, {"a.txt", "nested/b.txt"})
     for name in HIDDEN:
         assert not (tgt / name).exists()
 
@@ -518,3 +530,86 @@ def test_listing_above_local_relation_threshold(spark, tmp_path):
         {"copy_success": 2, "delete_success": 1},
         {"skip": 2},
     ]
+
+
+def _tree(root):
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in root.rglob("*")
+        if p.is_file()
+    }
+
+
+def test_file_uri_endpoints_sync_like_bare_paths(spark, tmp_path):
+    """``file:/abs`` and ``file:///abs`` endpoints are local roots for the
+    lister and the executor alike: three ticks report what the bare-path
+    endpoints report and leave the same target tree."""
+    bare = _make_env(tmp_path / "bare")
+    expected = _three_ticks(spark, bare)
+    for i, form in enumerate(("file:{}", "file://{}")):
+        env = _make_env(tmp_path / f"uri{i}", form.format)
+        assert _three_ticks(spark, env) == expected == [
+            {"copy_success": 2},
+            {"copy_success": 2, "delete_success": 1},
+            {"skip": 2},
+        ]
+        src, tgt = env[1], env[2]
+        assert _tree(tgt) == _tree(src) == {
+            "a.txt": b"changed content!",
+            "c.txt": b"new",
+        }
+
+
+def test_unreadable_directory_fails_the_mapping(spark, env, monkeypatch):
+    """A source directory that cannot be read fails the listing instead of
+    listing its objects as gone: the mapping fails and the target keeps
+    every object. chmod cannot deny root, so scandir is made to refuse."""
+    from cloud_data_sync_spark.sources.listing import list_objects
+
+    cfg, src, tgt, state_path = env
+    sync_all(spark, cfg, state_path)
+    before = _tree(tgt)
+    assert before == _tree(src)
+    scandir = os.scandir
+
+    def refusing(path="."):
+        if os.fspath(path) == str(src / "nested"):
+            raise PermissionError(13, "Permission denied", os.fspath(path))
+        return scandir(path)
+
+    monkeypatch.setattr(os, "scandir", refusing)
+    with pytest.raises(PermissionError):
+        list_objects(spark, str(src), "m")
+    reports = sync_all(spark, cfg, state_path)
+    assert reports[0].counts == {"mapping_failed": 1}
+    assert _tree(tgt) == before
+
+
+@pytest.mark.parametrize(
+    "uri, path",
+    [
+        ("/data/bkt", "/data/bkt"),
+        ("/data/bkt/", "/data/bkt"),
+        ("rel/bkt", "rel/bkt"),
+        ("/data/a:b", "/data/a:b"),
+        ("file:///data/bkt", "/data/bkt"),
+        ("file:/data/bkt/", "/data/bkt"),
+        ("file:///data/a%20b?c#d", "/data/a%20b?c#d"),
+        ("file:///", "/"),
+        ("s3a://bkt/x", None),
+        ("gs://bkt", None),
+        ("abfss://c@acct.dfs.core.windows.net/", None),
+        ("minio.local:9000/bkt", None),
+    ],
+)
+def test_local_root(uri, path):
+    from cloud_data_sync_spark.sources.listing import local_root
+
+    assert local_root(uri) == path
+
+
+def test_local_root_refuses_file_uri_with_host():
+    from cloud_data_sync_spark.sources.listing import local_root
+
+    with pytest.raises(ValueError, match="names host"):
+        local_root("file://nas/data/bkt")
