@@ -15,8 +15,10 @@ Scale notes:
 - A latent reference bug is deliberately NOT replicated: ``defer
   reader.Close()`` inside its object loop (sync.go:142) leaks all readers
   until function exit; here each file handle closes per object.
-- Objects run in the plan's own partitions; per-object failures never
-  fail the task (try/except per row).
+- The copy/delete rows are hash-partitioned on ``object_name`` before the
+  Python stage, so AQE sizes its tasks from those rows alone and not from
+  the diff's partitioning; per-object failures never fail the task
+  (try/except per row).
 - I/O is local: both roots must be plain paths or ``file:`` URIs, which
   the workers open with OS calls. ``execute_plan`` refuses any other
   scheme (s3a, gs, abfss, ...) before running anything.
@@ -152,7 +154,9 @@ def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
                 "accepts plain paths or file: URIs — stage object-store "
                 "mappings through a local root"
             )
-    work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE))
+    work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE)).repartition(
+        "object_name"
+    )
 
     # built on the driver: parsing a DDL string needs the JVM
     out_schema = arrow_schema(RESULT_SCHEMA)

@@ -105,7 +105,7 @@ def q_tpch_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan in the sf1 plan dump). Pin the fact⋈fact join to SHUFFLE_HASH
     # (the orderkey exchange the doc always described). AQE keeps the
     # hinted SHJ even when a side is small; it stays unconditional because
-    # gating it on 500k orders (the q_join_left crossover) measured 1.36×
+    # gating it through tables.shuffle_hash (500k orders) measured 1.36×
     # slower at sf0.1 (0.392 -> 0.531 s min of 15).
     return (
         li.join(
@@ -167,8 +167,8 @@ def q_tpch_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned to SHUFFLE_HASH: both sides exchange on orderkey — the
     # plan the docstring always claimed (guide §3.1 "check which one you
     # got / check the build side"). AQE keeps the hinted SHJ even when a
-    # side is small; it stays unconditional because gating it on 500k
-    # orders (the q_join_left crossover) measured 1.35× slower at sf0.1
+    # side is small; it stays unconditional because gating it through
+    # tables.shuffle_hash (500k orders) measured 1.35× slower at sf0.1
     # (0.503 -> 0.681 s min of 15).
     return (
         li.join(

@@ -47,7 +47,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_sync_spark.registry import floor_ratio, register
-from cloud_data_sync_spark.tables import load_table
+from cloud_data_sync_spark.tables import load_table, shuffle_hash
 
 # k thresholds audited (one output row per k). Production policies pick
 # one k per sharing tier; the audit is threshold-generic.
@@ -444,16 +444,9 @@ def q_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BROADCAST the fact-side pseudonym table (1.5 M md5 tokens at sf1 —
     # a ~50 MB string-keyed relation rebuilt per run; the sf1 plan dump
     # shows BroadcastHashJoin LeftOuter BuildRight over the orders
-    # branch). Measured crossover: SHUFFLE_HASH is 0.44× at sf1 but
-    # 1.31× at sf0.1 (a 150k-row pseudonym broadcast is genuinely
-    # cheaper than two exchanges). So past 500k orders the fact side
-    # shuffles (one pid exchange per side, no sort; the only right shape
-    # at 100 TB), under it the broadcast stands. Guide §3.1.
-    from cloud_data_sync_spark.tables import input_rows
-
-    o_p_side = o_p.hint("shuffle_hash") if input_rows(o_p) > 500_000 else o_p
+    # branch). Guide §3.1.
     orders_joined = (
-        c_p.join(o_p_side, c_p.pid == o_p.opid, "left")
+        c_p.join(shuffle_hash(o_p), c_p.pid == o_p.opid, "left")
         .groupBy(F.col("c_mktsegment").alias("seg"))
         .agg(F.count("o_orderkey").alias("n_orders_joined"))
     )

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cloud_data_sync_spark.registry import floor_ratio, register
-from cloud_data_sync_spark.tables import load_table, session_substrate
+from cloud_data_sync_spark.tables import load_table, session_substrate, shuffle_hash
 
 
 # -- scan / filter / project -------------------------------------------------
@@ -85,17 +85,12 @@ GROUP BY c.c_custkey, c.c_name
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: LeftOuter forces BuildRight and the static planner BROADCAST
-    # the 1.5M-row orders fact at sf1 (plan dump). Shuffle-hash past 500k
-    # orders, broadcast under (the measured crossover class of
-    # q_pseudonymize). Guide §3.1.
-    from cloud_data_sync_spark.tables import input_rows
-
+    # the 1.5M-row orders fact at sf1 (plan dump). Guide §3.1.
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
-    big = input_rows(orders) > 500_000
     return (
         customer.join(
-            orders.hint("shuffle_hash") if big else orders,
+            shuffle_hash(orders),
             orders.o_custkey == customer.c_custkey,
             "left",
         )

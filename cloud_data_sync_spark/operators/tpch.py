@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_sync_spark.registry import register
-from cloud_data_sync_spark.tables import load_table
+from cloud_data_sync_spark.tables import load_table, shuffle_hash
 
 
 def _ts(s: str):
@@ -232,17 +232,12 @@ def q_tpch_mktshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
     volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     # r12: the static planner BROADCAST the 1.5M-row orders fact (sf1
-    # plan dump, the q_tpch_volume estimate class). SHUFFLE_HASH pins the
-    # orderkey exchange past 500k orders (the q_join_left crossover); AQE
-    # keeps a hinted SHJ even when a side is small. Gated: 0.478 -> 0.399 s
+    # plan dump, the q_tpch_volume estimate class). Gated: 0.478 -> 0.399 s
     # at sf0.1 (min of 15).
-    from cloud_data_sync_spark.tables import input_rows
-
-    big = input_rows(orders) > 500_000
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(
-            orders.hint("shuffle_hash") if big else orders,
+            shuffle_hash(orders),
             li.l_orderkey == orders.o_orderkey,
         )
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -307,17 +302,12 @@ def q_tpch_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
     )
     # r12: the static planner broadcast the orders fact (the q_tpch_volume
-    # estimate class); pin the orderkey exchange past 500k orders (the
-    # q_join_left crossover). AQE keeps a hinted SHJ even when a side is
-    # small. Gated: 0.422 -> 0.345 s at sf0.1 (min of 15).
-    from cloud_data_sync_spark.tables import input_rows
-
-    big = input_rows(orders) > 500_000
+    # estimate class). Gated: 0.422 -> 0.345 s at sf0.1 (min of 15).
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(
-            orders.hint("shuffle_hash") if big else orders,
+            shuffle_hash(orders),
             li.l_orderkey == orders.o_orderkey,
         )
         .withColumn("o_year", F.year("o_orderdate").cast("long"))

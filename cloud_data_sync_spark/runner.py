@@ -126,14 +126,17 @@ def _bucket_root(cfg: Config, provider_id: str, bucket: str) -> str:
 
 
 def count_actions(results: DataFrame) -> dict[str, int]:
-    """Fold per-(action, status) result rows into the report counters.
+    """Fold per-(action, status) rows into the report counters: ``skip``
+    rows count as ``skip``, every other action as ``<action>_success`` or
+    ``<action>_failed``.
 
     Accumulate, don't comprehend: failed_get and failed_upload both map to
     copy_failed and must SUM, not overwrite each other.
     """
     counts: dict[str, int] = {}
     for r in results.groupBy("action", "status").agg(F.count("*").alias("n")).collect():
-        key = f"{r['action']}_{'success' if r['status'] == STATUS_SUCCESS else 'failed'}"
+        ok = "success" if r["status"] == STATUS_SUCCESS else "failed"
+        key = r["action"] if r["action"] == ACTION_SKIP else f"{r['action']}_{ok}"
         counts[key] = counts.get(key, 0) + r["n"]
     return counts
 
@@ -235,11 +238,13 @@ def sync_buckets(
     )
     new_slice = materialize(new_slice, eager=True)
 
-    # 5. report (the counters the reference logs, sync.go:166-170, 231-233)
-    counts = count_actions(results)
-    skipped = plan.filter(F.col("action") == ACTION_SKIP).count()
-    if skipped:
-        counts["skip"] = skipped
+    # 5. report (the counters the reference logs, sync.go:166-170, 231-233):
+    # the plan's skip rows, which the executor never sees, and the results
+    # in one aggregation
+    skips = plan.filter(F.col("action") == ACTION_SKIP).select("action")
+    counts = count_actions(
+        results.select("action", "status").unionByName(skips, allowMissingColumns=True)
+    )
 
     if new_slice.isEmpty():
         # dynamic overwrite cannot clear a partition with no rows in the

@@ -8,9 +8,9 @@ makes per-mapping scans free — and with
 the partitions it touches, giving batch-level atomicity per mapping.
 
 Upsert semantics (INSERT .. ON CONFLICT(mapping_id, object_name) DO UPDATE):
-union + window-dedup, latest ``last_synced`` wins, deterministic tiebreak on
-status then etag. At 100 TB the window shuffles only the state table (a
-metadata table: ~100 bytes/object), never payloads.
+the stored rows an update does not name, plus every update row. At 100 TB
+the anti-join shuffles only the state table (a metadata table: ~100
+bytes/object), never payloads.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
-from pyspark.sql.window import Window
 
 from cloud_data_sync_spark.tables import hadoop_fs, local_frame
 
@@ -182,29 +181,15 @@ def load_state(spark: SparkSession, path: str) -> DataFrame:
 
 
 def upsert(existing: DataFrame, updates: DataFrame) -> DataFrame:
-    """Latest-wins merge on (mapping_id, object_name).
-
-    Ties on ``last_synced`` resolve updates-first via a priority column, then
-    deterministically on (sync_status, etag) — the idempotency requirement
-    from SURVEY.md §7 risk register.
-    """
-    tagged_new = updates.select(*STATE_SCHEMA.fieldNames()).withColumn(
-        "_prio", F.lit(1)
-    )
-    tagged_old = existing.select(*STATE_SCHEMA.fieldNames()).withColumn(
-        "_prio", F.lit(0)
-    )
-    w = Window.partitionBy(*KEYS).orderBy(
-        F.desc_nulls_last("last_synced"),
-        F.desc("_prio"),
-        F.asc_nulls_last("sync_status"),
-        F.asc_nulls_last("etag"),
-    )
+    """INSERT .. ON CONFLICT(mapping_id, object_name) DO UPDATE
+    (database.go:346-364): every update row replaces the stored row with
+    its key, whatever either row's ``last_synced`` says, so a stored row
+    stamped ahead of this host's clock cannot outlive a fresh copy."""
+    cols = STATE_SCHEMA.fieldNames()
     return (
-        tagged_new.unionByName(tagged_old)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_prio")
+        existing.select(*cols)
+        .join(updates.select(*KEYS), on=KEYS, how="left_anti")
+        .unionByName(updates.select(*cols))
     )
 
 

@@ -17,8 +17,10 @@ At 100 TB scale the classification never touches object payloads — it joins
 *listings* (metadata only). The copy stage downstream reads bytes only for
 rows where ``action='copy'`` (see ``executor.py``). Joins are key-equality on
 ``(mapping_id, object_name)``; the state table is partitioned by
-``mapping_id`` so partition pruning keeps each mapping's diff local; both
-joins are hinted shuffled-hash joins (see ``sync_diff``).
+``mapping_id`` so partition pruning keeps each mapping's diff local. Each
+join's build side is a shuffled hash table past ``tables.shuffle_hash``'s
+row cutoff and left to the planner below it; a driver-built listing has
+no input files, so it is never hinted.
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_sync_spark.registry import register
-from cloud_data_sync_spark.tables import load_table, session_substrate
+from cloud_data_sync_spark.tables import load_table, session_substrate, shuffle_hash
 
 MAPPING_ID = "demo:src-bucket->demo:tgt-bucket"
 
@@ -86,26 +88,8 @@ def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
     # reference's UploadObject(..., contentType) + ObjectInfo.Metadata
     # contract (gcp/client.go:107-138; interfaces/provider.go:16).
     carried = [c for c in ("content_type", "metadata") if c in src.columns]
-    # r12: both diff joins are listing⋈listing — FACT-sized on both sides
-    # at any real object count — yet the static planner broadcast the
-    # state/src side (sf1 plan dump: two 1.5M-row string-keyed
-    # HashedRelations, each rebuilding its md5 etags into a broadcast per
-    # run; q_sync_incremental 3.2 s at sf1). SHUFFLE_HASH pins the
-    # scale-correct shape (one object_name exchange per side, no sort —
-    # the diff is a hash lookup, exactly the reference's point-lookup
-    # loop). AQE does NOT turn a hinted join back into a broadcast when a
-    # side is small (checked on pyspark 4.1.2: a 100-row hinted side ran
-    # ShuffledHashJoin), so even a 10-object mapping pays both exchanges.
-    # Measured and rejected: dropping both hints over Arrow-local
-    # listings made the steady sync tick slower on a 4-vCPU VM (perfbench
-    # sync_steady, 3.38 -> 4.19 s at seed 3; 3.2 -> 3.9 s traced at seed
-    # 4). The broadcast join keeps the LocalTableScan's partitioning, so
-    # the plan reaches execute_plan's mapInArrow in 16 partitions instead
-    # of the 2 the coalesced shuffle leaves: 16 Python tasks instead of 2
-    # (executor 0.55 -> 1.05 s, peak RSS +0.8 GiB). Dropping the hints
-    # therefore first needs the executor to choose its own partition count.
     upserts = (
-        src.join(st.hint("shuffle_hash"), on=keys, how="left")
+        src.join(shuffle_hash(st), on=keys, how="left")
         .withColumn("reason", reason)
         .select(
             *keys,
@@ -119,7 +103,7 @@ def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
             *carried,
         )
     )
-    deletes = tgt.join(src.hint("shuffle_hash"), on=keys, how="left_anti").select(
+    deletes = tgt.join(shuffle_hash(src), on=keys, how="left_anti").select(
         *keys,
         F.lit(ACTION_DELETE).alias("action"),
         F.lit("removed_from_source").alias("reason"),

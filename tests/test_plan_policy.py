@@ -112,6 +112,7 @@ ROW_GATED = (
     "q_anomaly_mad",
     "q_tpch_mktshare",
     "q_tpch_profit",
+    "q_sync_incremental",
 )
 
 

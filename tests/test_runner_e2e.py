@@ -134,6 +134,7 @@ def test_count_actions_accumulates_failure_variants(spark):
             ("m", "o2", "copy", "failed_upload"),
             ("m", "o3", "copy", "success"),
             ("m", "o4", "delete", "failed_delete"),
+            ("m", "o5", "skip", None),
         ],
         "mapping_id string, object_name string, action string, status string",
     )
@@ -141,6 +142,7 @@ def test_count_actions_accumulates_failure_variants(spark):
         "copy_failed": 2,
         "copy_success": 1,
         "delete_failed": 1,
+        "skip": 1,
     }
 
 
@@ -558,6 +560,44 @@ def test_file_uri_endpoints_sync_like_bare_paths(spark, tmp_path):
             "a.txt": b"changed content!",
             "c.txt": b"new",
         }
+
+
+def test_forced_large_diff_syncs_like_default(spark, tmp_path, monkeypatch):
+    """With every input counted past the shuffle-hash cutoff, both diff
+    joins are hinted and the executor's exchange runs over their output:
+    three ticks report what the default branch reports and leave the same
+    target tree."""
+    from cloud_data_sync_spark import tables
+
+    default = _make_env(tmp_path / "default")
+    expected = _three_ticks(spark, default)
+    gated = []
+    monkeypatch.setattr(tables, "input_rows", lambda df: gated.append(df) or 10**9)
+    env = _make_env(tmp_path / "large")
+    assert _three_ticks(spark, env) == expected
+    assert gated, "the diff did not consult the row gate"
+    assert _tree(env[2]) == _tree(default[2]) == _tree(env[1])
+
+
+def test_state_stamped_ahead_does_not_pin_a_stale_row(spark, env):
+    """A stored row whose last_synced lies ahead of this host's clock (clock
+    skew, a state table moved from another host) is replaced by the next
+    copy of its object, so the object is copied once and then skipped."""
+    from datetime import datetime
+
+    cfg, src, tgt, state_path = env
+    sync_all(spark, cfg, state_path)
+    rows = [
+        {**r.asDict(), "last_synced": datetime(2100, 1, 1)}
+        for r in state_mod.load_state(spark, state_path).collect()
+    ]
+    state_mod.save_state(
+        spark.createDataFrame(rows, state_mod.STATE_SCHEMA), state_path
+    )
+    (src / "a.txt").write_bytes(b"changed content!")
+    counts = [sync_all(spark, cfg, state_path)[0].counts for _ in range(3)]
+    assert counts == [{"copy_success": 1, "skip": 1}, {"skip": 2}, {"skip": 2}]
+    assert (tgt / "a.txt").read_bytes() == b"changed content!"
 
 
 def test_unreadable_directory_fails_the_mapping(spark, env, monkeypatch):

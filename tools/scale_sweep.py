@@ -31,10 +31,11 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cloud_data_sync_spark import tables  # noqa: E402
 from cloud_data_sync_spark.registry import all_queries  # noqa: E402

@@ -25,12 +25,15 @@ from __future__ import annotations
 import argparse
 import json
 import math
+import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from cloud_data_sync_spark.session import get_spark
 from cloud_data_sync_spark.registry import all_queries
 key, sf_dir = sys.argv[1], sys.argv[2]
@@ -57,7 +60,7 @@ def main() -> None:
     ap.add_argument("--out", default="/root/repo/.scale/stream_sweep.json")
     a = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from cloud_data_sync_spark.registry import all_queries
 
     keys = a.keys or sorted(k for k in all_queries() if k.startswith("q_stream"))
@@ -71,7 +74,7 @@ def main() -> None:
         row: dict[str, object] = {}
         for sf_name, sf_dir in sfs:
             p = subprocess.run(
-                [sys.executable, "-c", CHILD, key, sf_dir],
+                [sys.executable, "-c", CHILD, key, sf_dir, ROOT],
                 capture_output=True,
                 text=True,
                 timeout=1800,

@@ -10,7 +10,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cloud_data_sync_spark.registry import all_queries  # noqa: E402
 from cloud_data_sync_spark.session import get_spark  # noqa: E402
