@@ -19,7 +19,9 @@ Scale notes:
   Python stage, so AQE sizes its tasks from those rows alone and not from
   the diff's partitioning; per-object failures never fail the task
   (try/except per row).
-- I/O is local: both roots must be plain paths or ``file:`` URIs, which
+- One stage serves a batch of mappings: each row resolves its source and
+  target roots from its ``mapping_id``.
+- I/O is local: every root must be a plain path or ``file:`` URI, which
   the workers open with OS calls. ``execute_plan`` refuses any other
   scheme (s3a, gs, abfss, ...) before running anything.
 """
@@ -29,7 +31,7 @@ from __future__ import annotations
 import mimetypes
 import os
 import shutil
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -133,27 +135,39 @@ def _delete_one(dst_path: str) -> tuple[str, str | None]:
         return STATUS_FAILED_DELETE, str(e)
 
 
-def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
-    """Run copy/delete actions; returns the per-object result DataFrame.
+def local_roots(src_root: str, tgt_root: str) -> tuple[str, str]:
+    """The OS paths of one mapping's roots; any root that is not a plain
+    path or ``file:`` URI raises ``ValueError``.
 
-    Lazy like any DataFrame — materialize once (e.g. ``.cache().count()``)
-    then feed the rows where action='copy' into ``state.upsert`` and the
-    delete successes into ``state.delete_keys``."""
-    src_local, tgt_local = local_root(src_root), local_root(tgt_root)
-    for root, local in ((src_root, src_local), (tgt_root, tgt_local)):
-        if local is None:
-            # this executor's copy/delete primitives are local-FS ops; an
-            # s3a:// path handed to os.remove raises FileNotFoundError,
-            # which the 404-tolerance would record as delete_success —
-            # phantom successes that delete state keys while the target
-            # objects survive (the next tick re-lists and re-"deletes"
-            # them forever). Refuse instead of corrupting state.
+    This executor's copy/delete primitives are local-FS ops; an s3a://
+    path handed to os.remove raises FileNotFoundError, which the
+    404-tolerance would record as delete_success — phantom successes that
+    delete state keys while the target objects survive (the next tick
+    re-lists and re-"deletes" them forever). Refuse instead of corrupting
+    state."""
+    for root in (src_root, tgt_root):
+        if local_root(root) is None:
             raise ValueError(
                 f"execute_plan got a {root.partition(':')[0]!r}-scheme root "
                 f"{root!r}: the executor performs local file I/O only and "
                 "accepts plain paths or file: URIs — stage object-store "
                 "mappings through a local root"
             )
+    return local_root(src_root), local_root(tgt_root)
+
+
+def execute_plan(plan: DataFrame, roots: Mapping[str, tuple[str, str]]) -> DataFrame:
+    """Run copy/delete actions; returns the per-object result DataFrame.
+
+    ``roots`` maps each ``mapping_id`` of the plan to its ``(source root,
+    target root)``; every row copies and deletes under its own mapping's
+    roots, so one stage serves a batch of mappings. Every root is checked
+    with :func:`local_roots` before anything runs.
+
+    Lazy like any DataFrame — materialize once (e.g. ``.cache().count()``)
+    then feed the rows where action='copy' into ``state.upsert`` and the
+    delete successes into ``state.delete_keys``."""
+    paths = {mid: local_roots(*pair) for mid, pair in roots.items()}
     work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE)).repartition(
         "object_name"
     )
@@ -174,6 +188,7 @@ def execute_plan(plan: DataFrame, src_root: str, tgt_root: str) -> DataFrame:
             }
             for row in batch.to_pylist():
                 name = row["object_name"]
+                src_local, tgt_local = paths[row["mapping_id"]]
                 content_type = None
                 metadata: dict[str, str] = {}
                 if row["action"] == ACTION_COPY:

@@ -1,23 +1,36 @@
 """Sync orchestration: SyncAll / SyncBuckets / continuous mode — the
 reference's main loop (sync.go:32-53, main.go:74-115) on Spark.
 
-Per mapping (SyncBuckets, sync.go:56-176):
-  1. list source + target (metadata-only catalog DataFrames)
-  2. diff against the state partition → action plan (one declarative join)
-  3. execute copies/deletes on executors (streamed, continue-on-error)
-  4. upsert result rows into the state table; drop state rows for deletes
-  5. return the per-action report (the reference's logged counters)
+Per mapping (its own phase; a failure fails that mapping alone):
+  0. apply both providers' Hadoop conf
+  1. list source + target (metadata-only catalog DataFrames), refuse an
+     empty source over a non-empty target, check both roots are local,
+     create the target root
+
+Per batch of mappings (SyncBuckets, sync.go:56-176, for all of them at
+once; a failure fails the whole batch):
+  2. diff the unioned listings against the batch's state partitions →
+     one action plan (one declarative join)
+  3. execute copies/deletes on executors (streamed, continue-on-error),
+     each row under its own mapping's roots
+  4. upsert result rows into the state table and drop state rows for
+     deletes, in one write; clear the partition of a mapping left with
+     no rows
+  5. return each mapping's report (the reference's logged counters) from
+     one aggregation
 
 Unlike the reference — sequential over mappings AND objects (sync.go:33,
 101; parallelism is on its roadmap, README.md:345-347) — every per-object
-step here is cluster-parallel for free, and per-mapping plans are
-independent jobs.
+step here is cluster-parallel, and mappings whose roots are disjoint from
+each other's targets share one Spark pipeline per tick (``_batches``
+states the batching rule), so the tick's fixed Spark cost does not grow
+with the number of mappings. ``sync_buckets`` is the same pipeline over
+a batch of one.
 
 Continuous mode ≙ main.go:85-115's ticker: repeated one-shot runs. The
 state table *is* the checkpoint, so each tick is incremental; a stop-file
 takes the role of SIGTERM (main.go:108-113).
 """
-
 from __future__ import annotations
 
 import json
@@ -27,6 +40,7 @@ import re
 import signal
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,10 +50,12 @@ from cloud_data_sync_spark.config import BucketMapping, Config
 from cloud_data_sync_spark.executor import (
     STATUS_SUCCESS,
     execute_plan,
+    local_roots,
 )
 from cloud_data_sync_spark.sources.listing import (
     ensure_bucket_exists,
     list_objects,
+    local_root,
     provider_conf,
 )
 from cloud_data_sync_spark.tables import materialize
@@ -125,33 +141,63 @@ def _bucket_root(cfg: Config, provider_id: str, bucket: str) -> str:
     return bucket
 
 
-def count_actions(results: DataFrame) -> dict[str, int]:
-    """Fold per-(action, status) rows into the report counters: ``skip``
-    rows count as ``skip``, every other action as ``<action>_success`` or
+# the action of a tally row that stands for one row of a mapping's new
+# state: ``count_actions`` counts them under this key, which the runner
+# takes out of the report
+STATE_ROW = "state"
+
+
+def count_actions(results: DataFrame) -> dict[str, dict[str, int]]:
+    """Fold per-(mapping_id, action, status) rows into each mapping's
+    report counters: ``skip`` and ``STATE_ROW`` rows count under their
+    action, every other action as ``<action>_success`` or
     ``<action>_failed``.
 
     Accumulate, don't comprehend: failed_get and failed_upload both map to
     copy_failed and must SUM, not overwrite each other.
     """
-    counts: dict[str, int] = {}
-    for r in results.groupBy("action", "status").agg(F.count("*").alias("n")).collect():
+    counts: dict[str, dict[str, int]] = {}
+    for r in (
+        results.groupBy("mapping_id", "action", "status")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ):
+        action = r["action"]
         ok = "success" if r["status"] == STATUS_SUCCESS else "failed"
-        key = r["action"] if r["action"] == ACTION_SKIP else f"{r['action']}_{ok}"
-        counts[key] = counts.get(key, 0) + r["n"]
+        key = action if action in (ACTION_SKIP, STATE_ROW) else f"{action}_{ok}"
+        mine = counts.setdefault(r["mapping_id"], {})
+        mine[key] = mine.get(key, 0) + r["n"]
     return counts
 
 
-def sync_buckets(
+@dataclass
+class _Listed:
+    """A mapping that passed its own phase: its roots and both listings."""
+
+    mapping_id: str
+    src_root: str
+    tgt_root: str
+    src: DataFrame
+    tgt: DataFrame
+
+
+def _roots(cfg: Config, mapping: BucketMapping) -> tuple[str, str]:
+    return (
+        _bucket_root(cfg, mapping.source_provider_id, mapping.source_bucket),
+        _bucket_root(cfg, mapping.target_provider_id, mapping.target_bucket),
+    )
+
+
+def _list_mapping(
     spark: SparkSession,
     cfg: Config,
     mapping: BucketMapping,
-    state_path: str,
-    *,
-    allow_empty_source: bool = False,
-) -> SyncReport:
+    allow_empty_source: bool,
+) -> _Listed:
+    """The per-mapping phase: everything up to the diff that can fail for
+    one mapping alone."""
     mid = mapping.mapping_id
-    src_root = _bucket_root(cfg, mapping.source_provider_id, mapping.source_bucket)
-    tgt_root = _bucket_root(cfg, mapping.target_provider_id, mapping.target_bucket)
+    src_root, tgt_root = _roots(cfg, mapping)
 
     # 0. apply both providers' credentials/endpoints onto the Hadoop conf —
     # without this the s3a/abfss roots built above cannot authenticate
@@ -186,16 +232,31 @@ def sync_buckets(
             f"allow_empty_source=True if the source was genuinely emptied."
         )
 
+    # the executor copies with local file I/O: a mapping it cannot serve
+    # fails here, alone, before its target is touched
+    local_roots(src_root, tgt_root)
     # ensure target root exists (EnsureBucketExists, sync.go:88-91) —
     # Hadoop FS path, so cloud schemes work, not just file:
     ensure_bucket_exists(spark, tgt_root)
+    return _Listed(mid, src_root, tgt_root, src, tgt)
 
-    # 2. diff against this mapping's state partition (pruned scan).
+
+def _sync_batch(
+    spark: SparkSession, batch: list[_Listed], state_path: str
+) -> list[SyncReport]:
+    """The shared phase: one diff, one copy stage and one state write for
+    mappings none of which reads or writes what another writes
+    (``_batches``); one report per mapping, in batch order."""
+    mids = [m.mapping_id for m in batch]
+    src = reduce(DataFrame.unionByName, [m.src for m in batch])
+    tgt = reduce(DataFrame.unionByName, [m.tgt for m in batch])
+
+    # 2. diff against the batch's state partitions (pruned scan).
     # localCheckpoint() freezes plan/results: the state parquet at
     # ``state_path`` is overwritten below, and a lazy plan would silently
     # recompute the diff against the NEW state (read-overwrite hazard).
     full_state = state_mod.load_state(spark, state_path)
-    st = state_mod.state_for_mapping(full_state, mid)
+    st = state_mod.state_for_mappings(full_state, mids)
     plan = materialize(sync_diff(src, tgt, st), eager=True)
 
     # 3. execute (copies + deletes), one status row per object —
@@ -205,10 +266,10 @@ def sync_buckets(
     # every copy and delete); materialize routes it write-then-read
     # instead, which runs the side effects exactly once (r6 advice)
     results = materialize(
-        execute_plan(plan, src_root, tgt_root),
+        execute_plan(plan, {m.mapping_id: (m.src_root, m.tgt_root) for m in batch}),
         eager=True,
         side_effecting=True,
-        tag=f"results-{mid}",
+        tag="results",
     )
 
     # 4. state maintenance: upsert copy results, remove deleted keys
@@ -226,35 +287,103 @@ def sync_buckets(
     deleted_keys = results.filter(
         (F.col("action") == ACTION_DELETE) & (F.col("status") == STATUS_SUCCESS)
     )
-    # Merge into THIS mapping's slice only (every results row carries this
-    # mapping_id): the upsert window shuffles one partition's rows, and
-    # dynamic partition overwrite below rewrites only this mapping_id
-    # partition. Merging into full_state instead would shuffle and rewrite
-    # EVERY mapping's partition per synced mapping — O(M^2) work per
-    # sync_all tick and a torn-write window on untouched partitions.
+    # Merge into the batch's slice only (every results row carries one of
+    # its mapping_ids): the upsert window shuffles those partitions' rows,
+    # and dynamic partition overwrite below rewrites only them. Merging
+    # into full_state instead would shuffle and rewrite EVERY mapping's
+    # partition per batch and open a torn-write window on untouched
+    # partitions.
     # checkpoint the merged state BEFORE overwriting the path it reads from
-    new_slice = state_mod.delete_keys(
-        state_mod.upsert(st, copy_rows), deleted_keys
+    new_state = materialize(
+        state_mod.delete_keys(state_mod.upsert(st, copy_rows), deleted_keys),
+        eager=True,
     )
-    new_slice = materialize(new_slice, eager=True)
 
     # 5. report (the counters the reference logs, sync.go:166-170, 231-233):
-    # the plan's skip rows, which the executor never sees, and the results
-    # in one aggregation
-    skips = plan.filter(F.col("action") == ACTION_SKIP).select("action")
+    # the plan's skip rows, which the executor never sees, the results and
+    # the new state's rows in one aggregation; a mapping with no state row
+    # left is one whose partition the write below cannot clear
+    skips = plan.filter(F.col("action") == ACTION_SKIP).select("mapping_id", "action")
+    held = new_state.select("mapping_id", F.lit(STATE_ROW).alias("action"))
     counts = count_actions(
-        results.select("action", "status").unionByName(skips, allowMissingColumns=True)
+        results.select("mapping_id", "action", "status")
+        .unionByName(skips, allowMissingColumns=True)
+        .unionByName(held, allowMissingColumns=True)
     )
+    kept = {mid for mid in mids if counts.get(mid, {}).pop(STATE_ROW, 0)}
 
-    if new_slice.isEmpty():
-        # dynamic overwrite cannot clear a partition with no rows in the
-        # write; if this mapping's state just emptied, remove its stale
-        # files so the deleted rows don't resurrect on the next load
-        state_mod.clear_mapping_partition(spark, state_path, mid)
-    else:
-        state_mod.save_state(new_slice, state_path)
-    _log_event(logging.INFO, "mapping_synced", mapping_id=mid, counts=counts)
-    return SyncReport(mapping_id=mid, counts=counts)
+    if kept:
+        state_mod.save_state(new_state, state_path)
+    for mid in mids:
+        if mid not in kept:
+            # dynamic overwrite cannot clear a partition with no rows in the
+            # write; if this mapping's state just emptied, remove its stale
+            # files so the deleted rows don't resurrect on the next load
+            state_mod.clear_mapping_partition(spark, state_path, mid)
+    reports = [SyncReport(mapping_id=mid, counts=counts.get(mid, {})) for mid in mids]
+    for r in reports:
+        _log_event(logging.INFO, "mapping_synced", mapping_id=r.mapping_id, counts=r.counts)
+    return reports
+
+
+def sync_buckets(
+    spark: SparkSession,
+    cfg: Config,
+    mapping: BucketMapping,
+    state_path: str,
+    *,
+    allow_empty_source: bool = False,
+) -> SyncReport:
+    """Sync one mapping (SyncBuckets, sync.go:56-176): ``sync_all``'s
+    pipeline over a batch of one. Any failure raises."""
+    listed = _list_mapping(spark, cfg, mapping, allow_empty_source)
+    return _sync_batch(spark, [listed], state_path)[0]
+
+
+def _root_key(root: str) -> str:
+    """``root`` in one comparable form: a local root as its absolute OS
+    path, any other URI as written, without trailing slashes."""
+    try:
+        local = local_root(root)
+    except ValueError:  # a file: URI naming a host: not a local path
+        local = None
+    return os.path.abspath(local) if local is not None else root.rstrip("/")
+
+
+def _overlaps(a: str, b: str) -> bool:
+    """``a`` equals, contains or lies under ``b`` (both ``_root_key``s)."""
+    return a == b or a.startswith(b.rstrip("/") + "/") or b.startswith(a.rstrip("/") + "/")
+
+
+def _batches(cfg: Config) -> list[list[BucketMapping]]:
+    """``cfg.mappings`` in config order, cut into batches that one pipeline
+    can sync as if they ran in order: a mapping starts a new batch when
+    one of its roots overlaps a target root already in the batch, or its
+    target root overlaps any root already in it. A batch's mappings then
+    neither read nor write what another of them writes. Chained (s→t,
+    t→u) and overlapping mappings land in separate batches, and so does a
+    repeated mapping."""
+    batches: list[list[BucketMapping]] = []
+    srcs: list[str] = []
+    tgts: list[str] = []
+    for mapping in cfg.mappings:
+        src, tgt = (_root_key(r) for r in _roots(cfg, mapping))
+        if (
+            not batches
+            or any(_overlaps(r, t) for r in (src, tgt) for t in tgts)
+            or any(_overlaps(tgt, r) for r in srcs)
+        ):
+            batches.append([])
+            srcs, tgts = [], []
+        batches[-1].append(mapping)
+        srcs.append(src)
+        tgts.append(tgt)
+    return batches
+
+
+def _failed(mapping_id: str, e: Exception) -> SyncReport:
+    _log_event(logging.ERROR, "mapping_failed", mapping_id=mapping_id, error=str(e))
+    return SyncReport(mapping_id=mapping_id, counts={"mapping_failed": 1})
 
 
 def sync_all(
@@ -264,29 +393,31 @@ def sync_all(
     *,
     allow_empty_source: bool = False,
 ) -> list[SyncReport]:
-    """FOREACH mapping, continue-on-error (sync.go:32-53)."""
-    reports = []
-    for mapping in cfg.mappings:
-        try:
-            reports.append(
-                sync_buckets(
-                    spark,
-                    cfg,
-                    mapping,
-                    state_path,
-                    allow_empty_source=allow_empty_source,
-                )
-            )
-        except Exception as e:  # noqa: BLE001 - per-mapping isolation
-            reports.append(
-                SyncReport(mapping_id=mapping.mapping_id, counts={"mapping_failed": 1})
-            )
-            _log_event(
-                logging.ERROR,
-                "mapping_failed",
-                mapping_id=mapping.mapping_id,
-                error=str(e),
-            )
+    """FOREACH mapping, continue-on-error (sync.go:32-53), one pipeline
+    per batch of ``_batches``; a batch lists only after the one before it
+    has run.
+
+    A failure in a mapping's own phase (conf, listing, the empty-source
+    guard, the local-root check, creating its target) fails that mapping
+    alone; a failure in the shared phase (reading or writing the state
+    table) fails every mapping that reached it. Reports come in config
+    order."""
+    reports: list[SyncReport] = []
+    for batch in _batches(cfg):
+        done: dict[int, SyncReport] = {}
+        listed: dict[int, _Listed] = {}
+        for i, mapping in enumerate(batch):
+            try:
+                listed[i] = _list_mapping(spark, cfg, mapping, allow_empty_source)
+            except Exception as e:  # noqa: BLE001 - per-mapping isolation
+                done[i] = _failed(mapping.mapping_id, e)
+        if listed:
+            try:
+                synced = _sync_batch(spark, list(listed.values()), state_path)
+            except Exception as e:  # noqa: BLE001 - per-batch isolation
+                synced = [_failed(m.mapping_id, e) for m in listed.values()]
+            done.update(zip(listed, synced))
+        reports += [done[i] for i in range(len(batch))]
     return reports
 
 

@@ -223,8 +223,8 @@ def clear_mapping_partition(spark: SparkSession, path: str, mapping_id: str) -> 
     Dynamic partition overwrite only rewrites partitions PRESENT in the
     write; a mapping whose state became empty contributes no rows, so its
     old files would survive the save and resurrect deleted state rows on
-    the next load. Callers invoke this after save_state whenever the new
-    state holds zero rows for a mapping that previously had some.
+    the next load. Callers invoke this for every mapping whose new
+    state holds zero rows.
     """
     from urllib.parse import unquote
 
@@ -242,7 +242,7 @@ def clear_mapping_partition(spark: SparkSession, path: str, mapping_id: str) -> 
             fs.delete(status.getPath(), True)
 
 
-def state_for_mapping(state: DataFrame, mapping_id: str) -> DataFrame:
-    """Partition-pruned per-mapping scan (ListFileMetadataByMapping,
-    database.go:366-403)."""
-    return state.filter(F.col("mapping_id") == mapping_id)
+def state_for_mappings(state: DataFrame, mapping_ids: list[str]) -> DataFrame:
+    """Partition-pruned scan of a batch of mappings
+    (ListFileMetadataByMapping, database.go:366-403)."""
+    return state.filter(F.col("mapping_id").isin(mapping_ids))

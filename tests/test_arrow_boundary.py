@@ -249,7 +249,7 @@ def test_execute_plan_boundary(
     plan = spark.createDataFrame(
         [("m", name, action, size, etag, None, ct, meta)], PLAN_SCHEMA
     )
-    res = execute_plan(plan, str(src), f"file://{tgt}")
+    res = execute_plan(plan, {"m": (str(src), f"file://{tgt}")})
     assert res.schema == spark.createDataFrame([], RESULT_SCHEMA).schema
     (r,) = res.collect()
     assert (r["mapping_id"], r["object_name"], r["action"]) == ("m", name, action)
@@ -269,7 +269,7 @@ def test_execute_plan_refuses_non_local_roots(spark, tmp_path):
     plan = spark.createDataFrame([], PLAN_SCHEMA)
     for src, tgt in (("s3a://b/x", str(tmp_path)), (str(tmp_path), "gs://b/y")):
         with pytest.raises(ValueError, match="local file I/O only"):
-            execute_plan(plan, src, tgt)
+            execute_plan(plan, {"m": (src, tgt)})
 
 
 # -- the one pandas boundary left ---------------------------------------------

@@ -139,10 +139,12 @@ def test_count_actions_accumulates_failure_variants(spark):
         "mapping_id string, object_name string, action string, status string",
     )
     assert count_actions(results) == {
-        "copy_failed": 2,
-        "copy_success": 1,
-        "delete_failed": 1,
-        "skip": 1,
+        "m": {
+            "copy_failed": 2,
+            "copy_success": 1,
+            "delete_failed": 1,
+            "skip": 1,
+        }
     }
 
 
@@ -653,3 +655,189 @@ def test_local_root_refuses_file_uri_with_host():
 
     with pytest.raises(ValueError, match="names host"):
         local_root("file://nas/data/bkt")
+
+
+# -- batches: every disjoint mapping of a tick goes through one pipeline -----
+
+MTIME = 1_700_000_000
+
+
+def _put(path, data, tick, xattr=None):
+    """Write ``data`` at ``path`` with a fixed mtime, so two trees built by
+    the same calls list the same etags."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_bytes(data)
+    os.utime(path, (MTIME + tick, MTIME + tick))
+    if xattr:
+        try:
+            os.setxattr(path, "user.content-type", xattr.encode())
+            os.setxattr(path, "user.owner", b"batch")
+        except OSError:
+            pass  # no user-xattr support: payload-only trees still compare
+
+
+def _multi_env(root, n=3):
+    """``n`` disjoint mappings ``s:bucket-i -> t:bucket-i`` over source
+    buckets of three objects each."""
+    for i in range(n):
+        bucket = root / "src" / f"bucket-{i}"
+        _put(bucket / "a.txt", f"a{i}".encode(), 0, xattr="text/x-a")
+        _put(bucket / "nested" / "b.txt", f"b{i}".encode(), 0)
+        _put(bucket / "c.bin", bytes(i + 1), 0)
+    cfg = Config(
+        providers=[
+            {"id": "s", "type": "minio", "minioConfig": {"endpoint": str(root / "src")}},
+            {"id": "t", "type": "minio", "minioConfig": {"endpoint": str(root / "tgt")}},
+        ],
+        mappings=[
+            BucketMapping("s", f"bucket-{i}", "t", f"bucket-{i}") for i in range(n)
+        ],
+    )
+    return cfg, root / "src", root / "tgt", str(root / "state")
+
+
+def _drift(src, tick):
+    """Tick ``tick``'s edits: every bucket gets a rewrite, a delete and an
+    add; on tick 2 bucket-1's source empties instead, and tick 3 refills
+    it."""
+    for bucket in sorted(src.iterdir()):
+        if tick == 2 and bucket.name == "bucket-1":
+            for p in [p for p in bucket.rglob("*") if p.is_file()]:
+                p.unlink()
+            continue
+        _put(bucket / "a.txt", f"{bucket.name} tick {tick}".encode(), tick, xattr="text/x-new")
+        victims = sorted(p for p in bucket.rglob("*") if p.is_file() and p.name != "a.txt")
+        if victims:
+            victims[0].unlink()
+        _put(bucket / f"add-{tick}.txt", f"added {tick}".encode(), tick)
+
+
+def _xattrs(root):
+    out = {}
+    for p in sorted(root.rglob("*")):
+        if p.is_file():
+            names = [a for a in os.listxattr(p) if a.startswith("user.")]
+            out[str(p.relative_to(root))] = {a: os.getxattr(p, a) for a in names}
+    return out
+
+
+def _state_rows(spark, state_path):
+    return sorted(
+        (r["mapping_id"], r["object_name"], r["size"], r["etag"], r["last_modified"],
+         r["content_type"], sorted((r["metadata"] or {}).items()), r["sync_status"])
+        for r in state_mod.load_state(spark, state_path).collect()
+    )
+
+
+def test_batched_tick_matches_sequential_mappings(spark, tmp_path):
+    """Three disjoint mappings synced by one sync_all tick give what the
+    same mappings give synced one by one with sync_buckets: the reports,
+    target trees, user.* xattrs and state rows, over a first sync and
+    three drifting ticks. On tick 2 one mapping's source empties under
+    allow_empty_source: its partition is cleared, the others keep rows."""
+    batched = _multi_env(tmp_path / "batched")
+    sequential = _multi_env(tmp_path / "sequential")
+    for tick in range(4):
+        if tick:
+            _drift(batched[1], tick)
+            _drift(sequential[1], tick)
+        cfg, _, tgt, state_path = batched
+        got = sync_all(spark, cfg, state_path, allow_empty_source=True)
+        cfg_s, _, tgt_s, state_s = sequential
+        want = [
+            sync_buckets(spark, cfg_s, m, state_s, allow_empty_source=True)
+            for m in cfg_s.mappings
+        ]
+        assert got == want
+        assert all(r.counts and "mapping_failed" not in r.counts for r in got)
+        assert _tree(tgt) == _tree(tgt_s) == _tree(batched[1])
+        assert _xattrs(tgt) == _xattrs(tgt_s)
+        rows = _state_rows(spark, state_path)
+        assert rows == _state_rows(spark, state_s)
+        emptied = {"s:bucket-1->t:bucket-1"} if tick == 2 else set()
+        assert {r[0] for r in rows} == {m.mapping_id for m in cfg.mappings} - emptied
+        if emptied:
+            assert got[1].counts == {"delete_success": 3}
+            assert _tree(tgt / "bucket-1") == {}
+
+
+def test_chained_mappings_reach_the_end_in_one_tick(spark, tmp_path):
+    """s→t then t→u: the second mapping lists t after the first has
+    copied into it, so one tick carries every object from s to u."""
+    cfg, src, tgt, state_path = _make_env(tmp_path)
+    cfg.providers.append(
+        {"id": "u", "type": "minio", "minioConfig": {"endpoint": str(tmp_path / "u")}}
+    )
+    cfg.mappings.append(BucketMapping("t", "bucket-b", "u", "bucket-c"))
+    reports = sync_all(spark, cfg, state_path)
+    assert [r.counts for r in reports] == [{"copy_success": 2}, {"copy_success": 2}]
+    assert _tree(tmp_path / "u" / "bucket-c") == _tree(tgt) == _tree(src)
+
+
+def test_non_local_mapping_fails_alone(spark, tmp_path):
+    """A mapping with an s3a:// root fails by itself; the mappings before
+    and after it in the config sync, and nothing of it is copied."""
+    cfg, src, tgt, state_path = _multi_env(tmp_path)
+    cfg.providers.append({"id": "cloud", "type": "aws", "awsConfig": {}})
+    cfg.mappings.insert(1, BucketMapping("s", "bucket-1", "cloud", "far"))
+    reports = sync_all(spark, cfg, state_path)
+    assert [r.counts for r in reports] == [
+        {"copy_success": 3},
+        {"mapping_failed": 1},
+        {"copy_success": 3},
+        {"copy_success": 3},
+    ]
+    assert sorted(p.name for p in tgt.iterdir()) == ["bucket-0", "bucket-1", "bucket-2"]
+    held = {r[0] for r in _state_rows(spark, state_path)}
+    assert held == {f"s:bucket-{i}->t:bucket-{i}" for i in range(3)}
+
+
+@pytest.mark.parametrize(
+    "pairs, batches",
+    [
+        # disjoint: one batch
+        ([("a", "x"), ("b", "y"), ("c", "z")], [[0, 1, 2]]),
+        # the sources may overlap each other
+        ([("a", "x"), ("a", "y")], [[0, 1]]),
+        # chained: the second reads what the first writes
+        ([("a", "x"), ("x", "y")], [[0], [1]]),
+        # the second writes what the first reads
+        ([("a", "x"), ("b", "a")], [[0], [1]]),
+        # repeated mapping, and a target under another's target
+        ([("a", "x"), ("a", "x")], [[0], [1]]),
+        ([("a", "x"), ("b", "x/sub"), ("c", "z")], [[0], [1, 2]]),
+        # a source that contains another's target
+        ([("a", "x/sub"), ("x", "y")], [[0], [1]]),
+        # a shared name prefix is not containment
+        ([("a", "x"), ("b", "xy"), ("xz", "c")], [[0, 1, 2]]),
+    ],
+)
+def test_batching_rule(tmp_path, pairs, batches):
+    from cloud_data_sync_spark.runner import _batches
+
+    cfg = Config(
+        providers=[{"id": "p", "type": "minio", "minioConfig": {"endpoint": str(tmp_path)}}],
+        mappings=[BucketMapping("p", s, "p", t) for s, t in pairs],
+    )
+    got = _batches(cfg)
+    index = {id(m): i for i, m in enumerate(cfg.mappings)}
+    assert [[index[id(m)] for m in b] for b in got] == batches
+
+
+def test_tick_job_count_does_not_grow_with_mappings(spark, tmp_path):
+    """A warm tick of three disjoint mappings runs as many Spark jobs as a
+    warm tick of one of them: the mappings share one pipeline."""
+    cfg, src, tgt, state_path = _multi_env(tmp_path)
+    one = Config(providers=cfg.providers, mappings=cfg.mappings[:1])
+    tracker = spark.sparkContext.statusTracker()
+    sync_all(spark, cfg, state_path)
+
+    def jobs(c, tick):
+        _drift(src, tick)
+        before = set(tracker.getJobIdsForGroup(None))
+        reports = sync_all(spark, c, state_path)
+        assert all("copy_success" in r.counts for r in reports)
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    counts = [jobs(one, 1), jobs(cfg, 3), jobs(one, 4), jobs(cfg, 5)]
+    assert counts[0] > 0 and len(set(counts)) == 1, counts
