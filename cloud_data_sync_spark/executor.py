@@ -23,7 +23,9 @@ Scale notes:
   target roots from its ``mapping_id``.
 - I/O is local: every root must be a plain path or ``file:`` URI, which
   the workers open with OS calls. ``execute_plan`` refuses any other
-  scheme (s3a, gs, abfss, ...) before running anything.
+  scheme (s3a, gs, abfss, ...) before running anything
+  (``listing.os_path``); ``runner.sync_all`` only ever passes absolute
+  OS paths.
 """
 
 from __future__ import annotations
@@ -37,7 +39,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from cloud_data_sync_spark.sources.listing import local_root
+from cloud_data_sync_spark.sources.listing import os_path
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
@@ -135,39 +137,21 @@ def _delete_one(dst_path: str) -> tuple[str, str | None]:
         return STATUS_FAILED_DELETE, str(e)
 
 
-def local_roots(src_root: str, tgt_root: str) -> tuple[str, str]:
-    """The OS paths of one mapping's roots; any root that is not a plain
-    path or ``file:`` URI raises ``ValueError``.
-
-    This executor's copy/delete primitives are local-FS ops; an s3a://
-    path handed to os.remove raises FileNotFoundError, which the
-    404-tolerance would record as delete_success — phantom successes that
-    delete state keys while the target objects survive (the next tick
-    re-lists and re-"deletes" them forever). Refuse instead of corrupting
-    state."""
-    for root in (src_root, tgt_root):
-        if local_root(root) is None:
-            raise ValueError(
-                f"execute_plan got a {root.partition(':')[0]!r}-scheme root "
-                f"{root!r}: the executor performs local file I/O only and "
-                "accepts plain paths or file: URIs — stage object-store "
-                "mappings through a local root"
-            )
-    return local_root(src_root), local_root(tgt_root)
-
-
 def execute_plan(plan: DataFrame, roots: Mapping[str, tuple[str, str]]) -> DataFrame:
     """Run copy/delete actions; returns the per-object result DataFrame.
 
     ``roots`` maps each ``mapping_id`` of the plan to its ``(source root,
     target root)``; every row copies and deletes under its own mapping's
-    roots, so one stage serves a batch of mappings. Every root is checked
-    with :func:`local_roots` before anything runs.
+    roots, so one stage serves a batch of mappings. Every root goes
+    through ``listing.os_path`` before anything runs, so a root of any
+    other scheme raises here instead of reaching ``os.remove``: there a
+    missing object counts as deleted (the 404 tolerance), which would
+    drop the state row of an object that survives.
 
     Lazy like any DataFrame — materialize once (e.g. ``.cache().count()``)
     then feed the rows where action='copy' into ``state.upsert`` and the
     delete successes into ``state.delete_keys``."""
-    paths = {mid: local_roots(*pair) for mid, pair in roots.items()}
+    paths = {mid: (os_path(src), os_path(tgt)) for mid, (src, tgt) in roots.items()}
     work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE)).repartition(
         "object_name"
     )

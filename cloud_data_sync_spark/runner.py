@@ -1,11 +1,13 @@
 """Sync orchestration: SyncAll / SyncBuckets / continuous mode — the
 reference's main loop (sync.go:32-53, main.go:74-115) on Spark.
 
+Before anything runs, each mapping's two roots resolve to absolute OS
+paths (``_bucket_root``); a mapping whose provider has no local endpoint
+fails there and reads or writes nothing.
+
 Per mapping (its own phase; a failure fails that mapping alone):
-  0. apply both providers' Hadoop conf
   1. list source + target (metadata-only catalog DataFrames), refuse an
-     empty source over a non-empty target, check both roots are local,
-     create the target root
+     empty source over a non-empty target, create the target root
 
 Per batch of mappings (SyncBuckets, sync.go:56-176, for all of them at
 once; a failure fails the whole batch):
@@ -36,7 +38,6 @@ from __future__ import annotations
 import json
 import logging
 import os
-import re
 import signal
 import time
 from dataclasses import dataclass
@@ -47,17 +48,8 @@ from pyspark.sql import functions as F
 
 from cloud_data_sync_spark import state as state_mod
 from cloud_data_sync_spark.config import BucketMapping, Config
-from cloud_data_sync_spark.executor import (
-    STATUS_SUCCESS,
-    execute_plan,
-    local_roots,
-)
-from cloud_data_sync_spark.sources.listing import (
-    ensure_bucket_exists,
-    list_objects,
-    local_root,
-    provider_conf,
-)
+from cloud_data_sync_spark.executor import STATUS_SUCCESS, execute_plan
+from cloud_data_sync_spark.sources.listing import list_objects, local_root
 from cloud_data_sync_spark.tables import materialize
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
@@ -93,52 +85,32 @@ class SyncReport:
         return sum(v for k, v in self.counts.items() if k.endswith("_failed"))
 
 
-def _provider(cfg: Config, provider_id: str) -> dict:
-    for p in cfg.providers:
-        if p.get("id") == provider_id:
-            return p
-    return {}
-
-
 def _bucket_root(cfg: Config, provider_id: str, bucket: str) -> str:
-    """Resolve a (provider, bucket) pair to a URI root with the scheme the
-    provider type implies (factory.go:24-77 collapses to this lookup):
+    """The absolute OS path of ``bucket`` on provider ``provider_id``
+    (factory.go:24-77 collapses to this lookup): the provider's endpoint,
+    a bare path or a ``file:`` URI (``listing.local_root``), plus
+    ``/bucket``, made absolute here on the driver, since the Python
+    workers that copy run in another working directory.
 
-    - aws/minio → ``s3a://bucket`` (the endpoint — a custom S3 API host —
-      is Hadoop conf, applied by ``provider_conf``, NOT part of the URI);
-    - gcs → ``gs://bucket``; azure → ``abfss://container@account...``;
-    - a path-like endpoint (``file:/...`` or a bare filesystem path, the
-      test fixture form) keeps mapping to ``endpoint/bucket``.
-
-    Falling back to the bare bucket name would resolve it RELATIVE to the
-    default FS working directory — an almost-certainly-absent path whose
-    empty listing the empty-source guard below would then have to catch."""
-    p = _provider(cfg, provider_id)
-    ptype = p.get("type")
+    Any other provider raises ``ValueError``: an id not in
+    ``cfg.providers``, an ``http(s)://`` or ``host:port`` endpoint, or no
+    endpoint at all. The executor does local file I/O only, so such a
+    mapping could never copy."""
+    p = next((p for p in cfg.providers if p.get("id") == provider_id), {})
     for key in ("minioConfig", "awsConfig", "gcsConfig", "azureConfig"):
         endpoint = (p.get(key) or {}).get("endpoint")
-        if (
-            endpoint
-            and not endpoint.startswith(("http://", "https://"))
-            # a bare host:port endpoint (the native MinIO SDK form —
-            # scheme-less, SSL is a flag) is an S3 API host, NOT a
-            # filesystem path: routing it here would build
-            # 'minio.local:9000/bucket', which Hadoop parses as scheme
-            # 'minio.local' and fails on. It flows to provider_conf as
-            # the s3a endpoint instead; only path-like endpoints (the
-            # file-fixture form) belong in this branch.
-            and not re.fullmatch(r"[A-Za-z0-9.-]+:\d+", endpoint)
-        ):
-            return f"{endpoint.rstrip('/')}/{bucket}"
-    if ptype in ("aws", "minio"):
-        return f"s3a://{bucket}"
-    if ptype == "gcs":
-        return f"gs://{bucket}"
-    if ptype == "azure":
-        account = (p.get("azureConfig") or {}).get("accountName")
-        if account:
-            return f"abfss://{bucket}@{account}.dfs.core.windows.net/"
-    return bucket
+        try:
+            local = local_root(endpoint) if endpoint else None
+        except ValueError:  # a file: URI naming a host
+            continue
+        if local is not None:
+            return os.path.abspath(f"{local.rstrip('/')}/{bucket}")
+    kind = f"type {p.get('type')!r}" if p else "absent from providers"
+    raise ValueError(
+        f"provider {provider_id!r} ({kind}) has no local endpoint for bucket "
+        f"{bucket!r}: the executor does local file I/O only, so an endpoint "
+        "must be a plain path or a file: URI"
+    )
 
 
 # the action of a tally row that stands for one row of a mapping's new
@@ -190,29 +162,13 @@ def _roots(cfg: Config, mapping: BucketMapping) -> tuple[str, str]:
 
 def _list_mapping(
     spark: SparkSession,
-    cfg: Config,
-    mapping: BucketMapping,
+    mid: str,
+    src_root: str,
+    tgt_root: str,
     allow_empty_source: bool,
 ) -> _Listed:
-    """The per-mapping phase: everything up to the diff that can fail for
-    one mapping alone."""
-    mid = mapping.mapping_id
-    src_root, tgt_root = _roots(cfg, mapping)
-
-    # 0. apply both providers' credentials/endpoints onto the Hadoop conf —
-    # without this the s3a/abfss roots built above cannot authenticate
-    # (the reference's factory.NewFactory client construction, collapsed
-    # to session configuration). Bucket-scoped: s3a settings land on
-    # fs.s3a.bucket.<bucket>.*, so an aws→minio mapping (both s3-scheme)
-    # keeps both endpoint/credential sets live instead of the target's
-    # global keys clobbering the source's.
-    provider_conf(
-        spark, _provider(cfg, mapping.source_provider_id), mapping.source_bucket
-    )
-    provider_conf(
-        spark, _provider(cfg, mapping.target_provider_id), mapping.target_bucket
-    )
-
+    """The per-mapping phase, over roots ``_bucket_root`` resolved:
+    everything up to the diff that can fail for one mapping alone."""
     # 1. catalogs (metadata only — no payload reads); a missing root (first
     # run, target not created yet) lists as empty, any other listing
     # failure propagates
@@ -232,12 +188,8 @@ def _list_mapping(
             f"allow_empty_source=True if the source was genuinely emptied."
         )
 
-    # the executor copies with local file I/O: a mapping it cannot serve
-    # fails here, alone, before its target is touched
-    local_roots(src_root, tgt_root)
-    # ensure target root exists (EnsureBucketExists, sync.go:88-91) —
-    # Hadoop FS path, so cloud schemes work, not just file:
-    ensure_bucket_exists(spark, tgt_root)
+    # ensure target root exists (EnsureBucketExists, sync.go:88-91)
+    os.makedirs(tgt_root, exist_ok=True)
     return _Listed(mid, src_root, tgt_root, src, tgt)
 
 
@@ -335,39 +287,31 @@ def sync_buckets(
     allow_empty_source: bool = False,
 ) -> SyncReport:
     """Sync one mapping (SyncBuckets, sync.go:56-176): ``sync_all``'s
-    pipeline over a batch of one. Any failure raises."""
-    listed = _list_mapping(spark, cfg, mapping, allow_empty_source)
+    pipeline over a batch of one. Any failure raises, a root with no local
+    endpoint first (``_bucket_root``)."""
+    roots = _roots(cfg, mapping)
+    listed = _list_mapping(spark, mapping.mapping_id, *roots, allow_empty_source)
     return _sync_batch(spark, [listed], state_path)[0]
 
 
-def _root_key(root: str) -> str:
-    """``root`` in one comparable form: a local root as its absolute OS
-    path, any other URI as written, without trailing slashes."""
-    try:
-        local = local_root(root)
-    except ValueError:  # a file: URI naming a host: not a local path
-        local = None
-    return os.path.abspath(local) if local is not None else root.rstrip("/")
-
-
 def _overlaps(a: str, b: str) -> bool:
-    """``a`` equals, contains or lies under ``b`` (both ``_root_key``s)."""
+    """OS path ``a`` equals, contains or lies under OS path ``b``."""
     return a == b or a.startswith(b.rstrip("/") + "/") or b.startswith(a.rstrip("/") + "/")
 
 
-def _batches(cfg: Config) -> list[list[BucketMapping]]:
-    """``cfg.mappings`` in config order, cut into batches that one pipeline
-    can sync as if they ran in order: a mapping starts a new batch when
-    one of its roots overlaps a target root already in the batch, or its
-    target root overlaps any root already in it. A batch's mappings then
-    neither read nor write what another of them writes. Chained (s→t,
-    t→u) and overlapping mappings land in separate batches, and so does a
-    repeated mapping."""
-    batches: list[list[BucketMapping]] = []
+def _batches(roots: dict[int, tuple[str, str]]) -> list[list[int]]:
+    """The keys of ``roots`` (each mapping's resolved ``(source, target)``
+    roots, in config order), cut into batches that one pipeline can sync
+    as if they ran in order: a mapping starts a new batch when one of its
+    roots overlaps a target root already in the batch, or its target root
+    overlaps any root already in it. A batch's mappings then neither read
+    nor write what another of them writes. Chained (s→t, t→u) and
+    overlapping mappings land in separate batches, and so does a repeated
+    mapping."""
+    batches: list[list[int]] = []
     srcs: list[str] = []
     tgts: list[str] = []
-    for mapping in cfg.mappings:
-        src, tgt = (_root_key(r) for r in _roots(cfg, mapping))
+    for key, (src, tgt) in roots.items():
         if (
             not batches
             or any(_overlaps(r, t) for r in (src, tgt) for t in tgts)
@@ -375,7 +319,7 @@ def _batches(cfg: Config) -> list[list[BucketMapping]]:
         ):
             batches.append([])
             srcs, tgts = [], []
-        batches[-1].append(mapping)
+        batches[-1].append(key)
         srcs.append(src)
         tgts.append(tgt)
     return batches
@@ -397,28 +341,35 @@ def sync_all(
     per batch of ``_batches``; a batch lists only after the one before it
     has run.
 
-    A failure in a mapping's own phase (conf, listing, the empty-source
-    guard, the local-root check, creating its target) fails that mapping
-    alone; a failure in the shared phase (reading or writing the state
-    table) fails every mapping that reached it. Reports come in config
-    order."""
-    reports: list[SyncReport] = []
-    for batch in _batches(cfg):
-        done: dict[int, SyncReport] = {}
+    Every mapping's roots resolve first (``_bucket_root``): a mapping that
+    names no local endpoint fails before anything is listed or created,
+    and takes no part in batching. A failure in a mapping's
+    own phase (listing, the empty-source guard, creating its target)
+    fails that mapping alone; a failure in the shared phase (reading or
+    writing the state table) fails every mapping that reached it.
+    Reports come in config order."""
+    done: dict[int, SyncReport] = {}
+    roots: dict[int, tuple[str, str]] = {}
+    for i, mapping in enumerate(cfg.mappings):
+        try:
+            roots[i] = _roots(cfg, mapping)
+        except ValueError as e:
+            done[i] = _failed(mapping.mapping_id, e)
+    for batch in _batches(roots):
         listed: dict[int, _Listed] = {}
-        for i, mapping in enumerate(batch):
+        for i in batch:
+            mid = cfg.mappings[i].mapping_id
             try:
-                listed[i] = _list_mapping(spark, cfg, mapping, allow_empty_source)
+                listed[i] = _list_mapping(spark, mid, *roots[i], allow_empty_source)
             except Exception as e:  # noqa: BLE001 - per-mapping isolation
-                done[i] = _failed(mapping.mapping_id, e)
+                done[i] = _failed(mid, e)
         if listed:
             try:
                 synced = _sync_batch(spark, list(listed.values()), state_path)
             except Exception as e:  # noqa: BLE001 - per-batch isolation
                 synced = [_failed(m.mapping_id, e) for m in listed.values()]
             done.update(zip(listed, synced))
-        reports += [done[i] for i in range(len(batch))]
-    return reports
+    return [done[i] for i in range(len(cfg.mappings))]
 
 
 def run_continuous(

@@ -161,9 +161,8 @@ def state_exists(spark: SparkSession, path: str) -> bool:
     """tableExists-style catalog introspection (the reference checks its
     SQLite table before reading, database.go:319-344); Hadoop-FS probe so it
     works for cloud paths too."""
-    from cloud_data_sync_spark.sources.listing import path_exists
-
-    return path_exists(spark, path)
+    fs, jpath = hadoop_fs(spark, path)
+    return bool(fs.exists(jpath))
 
 
 def load_state(spark: SparkSession, path: str) -> DataFrame:

@@ -292,3 +292,12 @@ def test_pandas_only_in_streaming():
     assert any(
         pattern.search(p.read_text()) for p in (PKG / "streaming").rglob("*.py")
     ), "pattern no longer matches the streaming modules; the guard is stale"
+
+
+def test_object_io_is_os_io():
+    """Objects are listed, copied and deleted with OS calls; only the
+    state table goes through Spark's Hadoop FileSystem."""
+    pattern = re.compile(r"hadoop_fs|_jvm|_jsc")
+    for rel in ("sources/listing.py", "executor.py"):
+        assert not pattern.search((PKG / rel).read_text()), rel
+    assert pattern.search((PKG / "state.py").read_text()), "the guard is stale"

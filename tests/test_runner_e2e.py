@@ -101,16 +101,27 @@ def test_source_read_failure_recorded(spark, env, tmp_path):
 
 
 def test_ensure_bucket_and_existence_probes(spark, tmp_path):
-    """Create-if-absent + existence introspection through Hadoop FS
-    (sync.go:88-91; database.go tableExists analog)."""
-    from cloud_data_sync_spark.sources.listing import ensure_bucket_exists, path_exists
-
-    root = str(tmp_path / "new-bucket")
-    assert not path_exists(spark, root)
-    assert ensure_bucket_exists(spark, root) is True
-    assert path_exists(spark, root)
-    assert ensure_bucket_exists(spark, root) is False
+    """Existence introspection through Hadoop FS (database.go tableExists
+    analog); target creation is covered by
+    test_first_sync_of_empty_source_creates_target_root."""
+    root = tmp_path / "new-bucket"
+    assert not state_mod.state_exists(spark, str(root))
+    root.mkdir()
+    assert state_mod.state_exists(spark, str(root))
+    assert state_mod.state_exists(spark, f"file://{root}")
     assert not state_mod.state_exists(spark, str(tmp_path / "no-state"))
+
+
+def test_first_sync_of_empty_source_creates_target_root(spark, env):
+    """EnsureBucketExists (sync.go:88-91): a first sync over an existing but
+    empty source creates the absent target root and copies nothing."""
+    cfg, src, tgt, state_path = env
+    for p in sorted(src.rglob("*"), reverse=True):
+        p.rmdir() if p.is_dir() else p.unlink()
+    assert not tgt.exists()
+    reports = sync_all(spark, cfg, state_path)
+    assert reports[0].counts == {}
+    assert tgt.is_dir() and _tree(tgt) == {}
 
 
 def test_content_type_recorded_for_copies(spark, env):
@@ -199,8 +210,15 @@ def test_sigterm_stops_continuous_mode(spark, env):
     assert signal.getsignal(signal.SIGTERM) is before
 
 
-def test_mapping_failure_isolated(spark, env):
+def test_mapping_failure_isolated(spark, env, tmp_path, monkeypatch):
+    """A mapping whose source provider is absent fails by itself; it does
+    not sync from a directory named after its bucket in the working
+    directory."""
     cfg, src, tgt, state_path = env
+    cwd = tmp_path / "cwd"
+    (cwd / "nope").mkdir(parents=True)
+    (cwd / "nope" / "leak.txt").write_bytes(b"leak")
+    monkeypatch.chdir(cwd)
     cfg.mappings.insert(
         0,
         BucketMapping(
@@ -212,7 +230,10 @@ def test_mapping_failure_isolated(spark, env):
     )
     reports = sync_all(spark, cfg, state_path)
     assert len(reports) == 2  # continue-on-error (sync.go:43-47)
+    assert reports[0].counts == {"mapping_failed": 1}
     assert reports[1].counts.get("copy_success") == 2
+    assert "leak.txt" not in _tree(tgt)
+    assert sorted(r[1] for r in _state_rows(spark, state_path)) == ["a.txt", "nested/b.txt"]
 
 
 def test_corrupt_state_version_marker_raises(spark, tmp_path):
@@ -792,6 +813,63 @@ def test_non_local_mapping_fails_alone(spark, tmp_path):
     assert held == {f"s:bucket-{i}->t:bucket-{i}" for i in range(3)}
 
 
+def test_unresolvable_mappings_fail_before_any_work(spark, tmp_path, monkeypatch):
+    """An azure provider without accountName, a minio provider with an
+    http endpoint and an absent provider id each fail alone, between
+    mappings that sync: none of their roots is listed and none of their
+    targets is created."""
+    from cloud_data_sync_spark import runner
+
+    cfg, src, tgt, state_path = _multi_env(tmp_path)
+    monkeypatch.chdir(tmp_path)
+    cfg.providers += [
+        {"id": "az", "type": "azure", "azureConfig": {"accountKey": "k"}},
+        {"id": "mn", "type": "minio", "minioConfig": {"endpoint": "http://h:9000"}},
+    ]
+    cfg.mappings[1:1] = [
+        BucketMapping("az", "bucket-1", "t", "az-far"),
+        BucketMapping("s", "bucket-1", "mn", "mn-far"),
+        BucketMapping("ghost", "bucket-1", "t", "ghost-far"),
+    ]
+    listed = []
+    list_objects = runner.list_objects
+    monkeypatch.setattr(
+        runner,
+        "list_objects",
+        lambda spark, root, mid: listed.append(mid) or list_objects(spark, root, mid),
+    )
+    reports = sync_all(spark, cfg, state_path)
+    assert [r.counts for r in reports] == [
+        {"copy_success": 3},
+        {"mapping_failed": 1},
+        {"mapping_failed": 1},
+        {"mapping_failed": 1},
+        {"copy_success": 3},
+        {"copy_success": 3},
+    ]
+    syncing = [cfg.mappings[i].mapping_id for i in (0, 4, 5)]
+    assert sorted(listed) == sorted(syncing * 2)
+    assert sorted(p.name for p in tgt.iterdir()) == ["bucket-0", "bucket-1", "bucket-2"]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["src", "state", "tgt"]
+
+
+def test_relative_endpoint_syncs_from_the_driver_cwd(spark, tmp_path, monkeypatch):
+    """A relative endpoint names a directory under the driver's working
+    directory, for the listing and for the workers that copy alike."""
+    cwd = tmp_path / "cwd"
+    src = cwd / "rel" / "bucket-a"
+    _put(src / "a.txt", b"a", 0)
+    _put(src / "nested" / "b.txt", b"b", 0)
+    monkeypatch.chdir(cwd)
+    cfg = Config(
+        providers=[{"id": "p", "type": "minio", "minioConfig": {"endpoint": "rel"}}],
+        mappings=[BucketMapping("p", "bucket-a", "p", "bucket-b")],
+    )
+    reports = sync_all(spark, cfg, str(tmp_path / "state"))
+    assert reports[0].counts == {"copy_success": 2}
+    assert _tree(cwd / "rel" / "bucket-b") == _tree(src)
+
+
 @pytest.mark.parametrize(
     "pairs, batches",
     [
@@ -813,15 +891,13 @@ def test_non_local_mapping_fails_alone(spark, tmp_path):
     ],
 )
 def test_batching_rule(tmp_path, pairs, batches):
-    from cloud_data_sync_spark.runner import _batches
+    from cloud_data_sync_spark.runner import _batches, _roots
 
     cfg = Config(
         providers=[{"id": "p", "type": "minio", "minioConfig": {"endpoint": str(tmp_path)}}],
         mappings=[BucketMapping("p", s, "p", t) for s, t in pairs],
     )
-    got = _batches(cfg)
-    index = {id(m): i for i, m in enumerate(cfg.mappings)}
-    assert [[index[id(m)] for m in b] for b in got] == batches
+    assert _batches({i: _roots(cfg, m) for i, m in enumerate(cfg.mappings)}) == batches
 
 
 def test_tick_job_count_does_not_grow_with_mappings(spark, tmp_path):

@@ -119,104 +119,6 @@ def test_default_config_roundtrip(tmp_path):
     assert cfg.mappings[0].mapping_id == "local-src:bucket-a->local-tgt:bucket-b"
 
 
-# -- provider conf contract ---------------------------------------------------
-# The sandbox can never execute s3a://gs://abfss:// reads, so this contract
-# test is the strongest available check that a reference-style provider
-# config lands on the session as the Hadoop FS settings those schemes read
-# (storage/factory.go:24-77 becomes session conf, sources/listing.py).
-
-
-def test_provider_conf_minio_maps_to_s3a(spark):
-    from cloud_data_sync_spark.sources.listing import provider_conf
-
-    provider_conf(
-        spark,
-        {
-            "type": "minio",
-            "minioConfig": {
-                "endpoint": "http://minio.local:9000",
-                "accessKey": "ak",
-                "secretKey": "sk",
-            },
-        },
-    )
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert conf.get("fs.s3a.endpoint") == "http://minio.local:9000"
-    assert conf.get("fs.s3a.access.key") == "ak"
-    assert conf.get("fs.s3a.secret.key") == "sk"
-    assert conf.get("fs.s3a.path.style.access") == "true"
-
-
-def test_provider_conf_aws_maps_to_s3a(spark):
-    from cloud_data_sync_spark.sources.listing import provider_conf
-
-    provider_conf(
-        spark,
-        {"type": "aws", "awsConfig": {"accessKey": "AKID", "secretKey": "SECRET"}},
-    )
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert conf.get("fs.s3a.access.key") == "AKID"
-    assert conf.get("fs.s3a.secret.key") == "SECRET"
-
-
-def test_provider_conf_azure_maps_account_key(spark):
-    from cloud_data_sync_spark.sources.listing import provider_conf
-
-    provider_conf(
-        spark,
-        {
-            "type": "azure",
-            "azureConfig": {"accountName": "acct", "accountKey": "KEY=="},
-        },
-    )
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert conf.get("fs.azure.account.key.acct.blob.core.windows.net") == "KEY=="
-
-
-def test_provider_conf_file_provider_is_noop(spark):
-    from cloud_data_sync_spark.sources.listing import provider_conf
-
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    before = conf.get("fs.s3a.endpoint")
-    provider_conf(spark, {"type": "file"})
-    assert conf.get("fs.s3a.endpoint") == before
-
-
-def test_provider_conf_bucket_scoped_s3a(spark):
-    """Two s3-scheme providers in one mapping (aws → minio) must not
-    clobber each other: with a bucket argument the settings land on
-    fs.s3a.bucket.<bucket>.* (review finding: global keys let the second
-    provider_conf call overwrite the first's endpoint/credentials)."""
-    from cloud_data_sync_spark.sources.listing import provider_conf
-
-    provider_conf(
-        spark,
-        {
-            "type": "aws",
-            "awsConfig": {"accessKey": "src-ak", "secretKey": "src-sk"},
-        },
-        bucket="src-bucket",
-    )
-    provider_conf(
-        spark,
-        {
-            "type": "minio",
-            "minioConfig": {
-                "endpoint": "http://minio.local:9000",
-                "accessKey": "tgt-ak",
-                "secretKey": "tgt-sk",
-            },
-        },
-        bucket="tgt-bucket",
-    )
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    assert conf.get("fs.s3a.bucket.src-bucket.access.key") == "src-ak"
-    assert conf.get("fs.s3a.bucket.tgt-bucket.access.key") == "tgt-ak"
-    assert conf.get("fs.s3a.bucket.tgt-bucket.endpoint") == "http://minio.local:9000"
-    # the source bucket's credentials survived the target's configuration
-    assert conf.get("fs.s3a.bucket.src-bucket.secret.key") == "src-sk"
-
-
 def test_list_objects_refuses_file_root(spark, tmp_path):
     """A mapping root that resolves to a FILE must refuse loudly: the old
     fall-through emitted the absolute path as object_name, and the copy
