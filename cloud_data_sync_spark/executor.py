@@ -1,11 +1,13 @@
 """Copy/delete execution: the reference's per-object streaming copy loop
 (sync.go:130-163) and delete phase (sync.go:199-234), distributed.
 
-The action plan (``sync.sync_diff``) is a DataFrame; ``mapInArrow`` hands
+The action plan (``sync.reconcile``) is a DataFrame; ``mapInArrow`` hands
 each partition's Arrow batches to a Python worker that copies/deletes its
 objects and emits one status row per object — the reference's
 continue-on-error counters (sync.go:137,155,161) become a *result
-DataFrame* feeding the state upsert.
+DataFrame* from which the runner projects the next state and counts the
+report. Only the copy and delete rows reach the per-row loop (selected
+with ``pyarrow.compute``); skip and keep rows go back as Arrow columns.
 
 Scale notes:
 - Payloads stream chunk-by-chunk (``shutil.copyfileobj``) — the reference's
@@ -15,10 +17,9 @@ Scale notes:
 - A latent reference bug is deliberately NOT replicated: ``defer
   reader.Close()`` inside its object loop (sync.go:142) leaks all readers
   until function exit; here each file handle closes per object.
-- The copy/delete rows are hash-partitioned on ``object_name`` before the
-  Python stage, so AQE sizes its tasks from those rows alone and not from
-  the diff's partitioning; per-object failures never fail the task
-  (try/except per row).
+- The Python stage reads ``reconcile``'s keyed shuffle directly: its rows
+  are already hashed by key, and AQE sizes the stage's tasks from that
+  shuffle. Per-object failures never fail the task (try/except per row).
 - One stage serves a batch of mappings: each row resolves its source and
   target roots from its ``mapping_id``.
 - I/O is local: every root must be a plain path or ``file:`` URI, which
@@ -37,7 +38,9 @@ from collections.abc import Iterator, Mapping
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from cloud_data_sync_spark.sources.listing import os_path
 from cloud_data_sync_spark.sync import (
@@ -138,7 +141,8 @@ def _delete_one(dst_path: str) -> tuple[str, str | None]:
 
 
 def execute_plan(plan: DataFrame, roots: Mapping[str, tuple[str, str]]) -> DataFrame:
-    """Run copy/delete actions; returns the per-object result DataFrame.
+    """Run the copy and delete rows of ``plan``; returns every plan row,
+    each copy and delete row with its outcome.
 
     ``roots`` maps each ``mapping_id`` of the plan to its ``(source root,
     target root)``; every row copies and deletes under its own mapping's
@@ -148,62 +152,82 @@ def execute_plan(plan: DataFrame, roots: Mapping[str, tuple[str, str]]) -> DataF
     missing object counts as deleted (the 404 tolerance), which would
     drop the state row of an object that survives.
 
-    Lazy like any DataFrame — materialize once (e.g. ``.cache().count()``)
-    then feed the rows where action='copy' into ``state.upsert`` and the
-    delete successes into ``state.delete_keys``."""
+    The output holds ``RESULT_SCHEMA``'s columns, then the plan's other
+    columns (``reconcile``'s ``reason`` and ``state``) as they came in.
+    A copy or delete row gets its ``status``, ``error``, ``content_type``,
+    ``metadata`` and ``last_synced`` here; every other row (skip, keep)
+    passes through with those that the plan lacks left NULL.
+
+    Lazy like any DataFrame, and computing it copies and deletes:
+    materialize it once (``tables.materialize(..., side_effecting=True)``)
+    and derive everything else from that one frame."""
     paths = {mid: (os_path(src), os_path(tgt)) for mid, (src, tgt) in roots.items()}
-    work = plan.filter(plan.action.isin(ACTION_COPY, ACTION_DELETE)).repartition(
-        "object_name"
-    )
 
     # built on the driver: parsing a DDL string needs the JVM
-    out_schema = arrow_schema(RESULT_SCHEMA)
+    result = _parse_datatype_string(RESULT_SCHEMA)
+    out_type = StructType(
+        result.fields + [f for f in plan.schema.fields if f.name not in result.names]
+    )
+    out_schema = arrow_schema(out_type)
+    acted = pa.array([ACTION_COPY, ACTION_DELETE])
+
+    def _act(batch: pa.RecordBatch) -> dict[str, list]:
+        """The columns this loop writes for the copy and delete rows of
+        ``batch``."""
+        made: dict[str, list] = {
+            "status": [],
+            "error": [],
+            "content_type": [],
+            "metadata": [],
+            "last_synced": [],
+        }
+        for row in batch.to_pylist():
+            name = row["object_name"]
+            src_local, tgt_local = paths[row["mapping_id"]]
+            content_type = None
+            metadata: dict[str, str] = {}
+            if row["action"] == ACTION_COPY:
+                dst = os.path.join(tgt_local, name)
+                status, err = _copy_one(os.path.join(src_local, name), dst)
+                # Content type: prefer the source catalog's (xattr/cloud
+                # HEAD), fall back to extension sniffing — the reference
+                # stores ContentType per object (database.go:144-157)
+                # and re-uploads with it (gcp/client.go:107-138).
+                content_type = row.get("content_type") or mimetypes.guess_type(name)[0]
+                # an Arrow map arrives as a list of (key, value) pairs
+                metadata = dict(row.get("metadata") or ())
+                if status == STATUS_SUCCESS:
+                    _apply_object_meta(dst, content_type, metadata)
+            else:
+                status, err = _delete_one(os.path.join(tgt_local, name))
+            made["status"].append(status)
+            made["error"].append(err)
+            made["content_type"].append(content_type)
+            made["metadata"].append(metadata)
+            made["last_synced"].append(datetime.now(timezone.utc))
+        return made
+
+    def _out(batch: pa.RecordBatch, made: dict[str, list]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array(made[f.name], f.type)
+                if f.name in made
+                else batch.column(f.name).cast(f.type)
+                if f.name in batch.schema.names
+                else pa.nulls(batch.num_rows, f.type)
+                for f in out_schema
+            ],
+            schema=out_schema,
+        )
 
     def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            # the columns this loop writes; every other result column is
-            # the plan's own, passed through
-            made: dict[str, list] = {
-                "status": [],
-                "error": [],
-                "content_type": [],
-                "metadata": [],
-                "last_synced": [],
-            }
-            for row in batch.to_pylist():
-                name = row["object_name"]
-                src_local, tgt_local = paths[row["mapping_id"]]
-                content_type = None
-                metadata: dict[str, str] = {}
-                if row["action"] == ACTION_COPY:
-                    dst = os.path.join(tgt_local, name)
-                    status, err = _copy_one(os.path.join(src_local, name), dst)
-                    # Content type: prefer the source catalog's (xattr/cloud
-                    # HEAD), fall back to extension sniffing — the reference
-                    # stores ContentType per object (database.go:144-157)
-                    # and re-uploads with it (gcp/client.go:107-138).
-                    content_type = row.get("content_type") or mimetypes.guess_type(
-                        name
-                    )[0]
-                    # an Arrow map arrives as a list of (key, value) pairs
-                    metadata = dict(row.get("metadata") or ())
-                    if status == STATUS_SUCCESS:
-                        _apply_object_meta(dst, content_type, metadata)
-                else:
-                    status, err = _delete_one(os.path.join(tgt_local, name))
-                made["status"].append(status)
-                made["error"].append(err)
-                made["content_type"].append(content_type)
-                made["metadata"].append(metadata)
-                made["last_synced"].append(datetime.now(timezone.utc))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(made[f.name], f.type)
-                    if f.name in made
-                    else batch.column(f.name).cast(f.type)
-                    for f in out_schema
-                ],
-                schema=out_schema,
-            )
+            act = pc.is_in(batch.column("action"), value_set=acted)
+            work = batch.filter(act)
+            if work.num_rows:
+                yield _out(work, _act(work))
+            rest = batch.filter(pc.invert(act))
+            if rest.num_rows:
+                yield _out(rest, {})
 
-    return work.mapInArrow(_run, schema=RESULT_SCHEMA)
+    return plan.mapInArrow(_run, schema=out_type)

@@ -11,15 +11,20 @@ Per mapping (its own phase; a failure fails that mapping alone):
 
 Per batch of mappings (SyncBuckets, sync.go:56-176, for all of them at
 once; a failure fails the whole batch):
-  2. diff the unioned listings against the batch's state partitions →
-     one action plan (one declarative join)
+  2. reconcile the unioned listings with the batch's state partitions in
+     one keyed pass (``sync.reconcile``): one row per key, classified as
+     copy, skip, delete or keep, carrying its stored state row
   3. execute copies/deletes on executors (streamed, continue-on-error),
-     each row under its own mapping's roots
-  4. upsert result rows into the state table and drop state rows for
-     deletes, in one write; clear the partition of a mapping left with
-     no rows
+     each row under its own mapping's roots, and materialize every row
+     with its outcome once
+  4. project the batch's next state from those rows (``next_state``) and
+     write it; clear the partition of a mapping left with no rows
   5. return each mapping's report (the reference's logged counters) from
-     one aggregation
+     one aggregation over the same rows
+
+A warm tick runs six Spark jobs whatever the batch's size: the keyed
+shuffle, the materialization, two for the report and two for the state
+write.
 
 Unlike the reference — sequential over mappings AND objects (sync.go:33,
 101; parallelism is on its roadmap, README.md:345-347) — every per-object
@@ -54,8 +59,10 @@ from cloud_data_sync_spark.tables import materialize
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
+    ACTION_KEEP,
     ACTION_SKIP,
-    sync_diff,
+    reconcile,
+    sync_diff,  # noqa: F401 - runner.sync_diff is a perfbench --trace 1 span
 )
 
 
@@ -193,73 +200,69 @@ def _list_mapping(
     return _Listed(mid, src_root, tgt_root, src, tgt)
 
 
+def next_state(results: DataFrame) -> DataFrame:
+    """A batch's state rows after its tick, projected from the executed
+    plan (``execute_plan`` over ``reconcile``): a copy row becomes the
+    result row with its ``status`` as ``sync_status`` (the upsert,
+    database.go:346-364), a successful delete leaves no row (sync.go:226-229),
+    and any other row keeps the stored row it carries, if it has one.
+    ``state.delete_keys(state.upsert(st, copy rows), deleted keys)`` is
+    the same merge written as two anti-joins. SQL text, like
+    ``sync.reconcile``: each Column call is a py4j round trip."""
+    copied = f"action = '{ACTION_COPY}'"
+    deleted = f"action = '{ACTION_DELETE}' AND status = '{STATUS_SUCCESS}'"
+    return results.where(f"{copied} OR (state IS NOT NULL AND NOT ({deleted}))").selectExpr(
+        *[
+            c
+            if c in state_mod.KEYS
+            else f"IF({copied}, {'status' if c == 'sync_status' else c}, state.{c}) AS {c}"
+            for c in state_mod.STATE_SCHEMA.fieldNames()
+        ]
+    )
+
+
 def _sync_batch(
     spark: SparkSession, batch: list[_Listed], state_path: str
 ) -> list[SyncReport]:
-    """The shared phase: one diff, one copy stage and one state write for
-    mappings none of which reads or writes what another writes
+    """The shared phase: one keyed pass, one copy stage and one state write
+    for mappings none of which reads or writes what another writes
     (``_batches``); one report per mapping, in batch order."""
     mids = [m.mapping_id for m in batch]
     src = reduce(DataFrame.unionByName, [m.src for m in batch])
     tgt = reduce(DataFrame.unionByName, [m.tgt for m in batch])
 
-    # 2. diff against the batch's state partitions (pruned scan).
-    # localCheckpoint() freezes plan/results: the state parquet at
-    # ``state_path`` is overwritten below, and a lazy plan would silently
-    # recompute the diff against the NEW state (read-overwrite hazard).
-    full_state = state_mod.load_state(spark, state_path)
-    st = state_mod.state_for_mappings(full_state, mids)
-    plan = materialize(sync_diff(src, tgt, st), eager=True)
-
-    # 3. execute (copies + deletes), one status row per object —
-    # side_effecting: the copy/delete work happens INSIDE this frame's
-    # computation, so under --checkpoint-dir it must NOT go through
-    # df.checkpoint() (whose second checkpoint-write job would re-run
-    # every copy and delete); materialize routes it write-then-read
-    # instead, which runs the side effects exactly once (r6 advice)
+    # 2-3. reconcile the listings with the batch's state partitions (pruned
+    # scan) and execute the copies and deletes, one row per key. The one
+    # materialization runs the copy/delete work exactly once
+    # (side_effecting: under --checkpoint-dir, df.checkpoint()'s second
+    # job would re-run every copy and delete, r6 advice) and freezes the
+    # stored state rows the plan carries: the state parquet at
+    # ``state_path`` is overwritten below, and a lazy plan would read the
+    # NEW state (read-overwrite hazard).
+    st = state_mod.state_for_mappings(state_mod.load_state(spark, state_path), mids)
     results = materialize(
-        execute_plan(plan, {m.mapping_id: (m.src_root, m.tgt_root) for m in batch}),
+        execute_plan(
+            reconcile(src, tgt, st),
+            {m.mapping_id: (m.src_root, m.tgt_root) for m in batch},
+        ),
         eager=True,
         side_effecting=True,
         tag="results",
     )
 
-    # 4. state maintenance: upsert copy results, remove deleted keys
-    copy_rows = results.filter(F.col("action") == ACTION_COPY).select(
-        "mapping_id",
-        "object_name",
-        "size",
-        "last_modified",
-        "etag",
-        "content_type",
-        "metadata",
-        "last_synced",
-        F.col("status").alias("sync_status"),
-    )
-    deleted_keys = results.filter(
-        (F.col("action") == ACTION_DELETE) & (F.col("status") == STATUS_SUCCESS)
-    )
-    # Merge into the batch's slice only (every results row carries one of
-    # its mapping_ids): the upsert window shuffles those partitions' rows,
-    # and dynamic partition overwrite below rewrites only them. Merging
-    # into full_state instead would shuffle and rewrite EVERY mapping's
-    # partition per batch and open a torn-write window on untouched
-    # partitions.
-    # checkpoint the merged state BEFORE overwriting the path it reads from
-    new_state = materialize(
-        state_mod.delete_keys(state_mod.upsert(st, copy_rows), deleted_keys),
-        eager=True,
-    )
+    # 4. the batch's next state, a projection of the same rows; it holds
+    # only the batch's mapping_ids, so the dynamic partition overwrite
+    # below rewrites only their partitions
+    new_state = next_state(results)
 
-    # 5. report (the counters the reference logs, sync.go:166-170, 231-233):
-    # the plan's skip rows, which the executor never sees, the results and
-    # the new state's rows in one aggregation; a mapping with no state row
-    # left is one whose partition the write below cannot clear
-    skips = plan.filter(F.col("action") == ACTION_SKIP).select("mapping_id", "action")
-    held = new_state.select("mapping_id", F.lit(STATE_ROW).alias("action"))
+    # 5. report (the counters the reference logs, sync.go:166-170, 231-233)
+    # and the new state's rows per mapping in one aggregation; keep rows
+    # count in neither. A mapping with no state row left is one whose
+    # partition the write below cannot clear
+    held = new_state.selectExpr("mapping_id", f"'{STATE_ROW}' AS action")
     counts = count_actions(
-        results.select("mapping_id", "action", "status")
-        .unionByName(skips, allowMissingColumns=True)
+        results.where(f"action != '{ACTION_KEEP}'")
+        .select("mapping_id", "action", "status")
         .unionByName(held, allowMissingColumns=True)
     )
     kept = {mid for mid in mids if counts.get(mid, {}).pop(STATE_ROW, 0)}

@@ -10,7 +10,10 @@ the partitions it touches, giving batch-level atomicity per mapping.
 Upsert semantics (INSERT .. ON CONFLICT(mapping_id, object_name) DO UPDATE):
 the stored rows an update does not name, plus every update row. At 100 TB
 the anti-join shuffles only the state table (a metadata table: ~100
-bytes/object), never payloads.
+bytes/object), never payloads. The sync runner does not call ``upsert`` or
+``delete_keys``: its tick projects the next state from the executed plan,
+which carries each key's stored row (``runner.next_state``). They stay as
+the reference merge that projection is tested against.
 """
 
 from __future__ import annotations

@@ -7,20 +7,30 @@ state table (``database.go:319-344``), classifies it via the change predicate
 AND sync_status == 'success'), copies what changed, and finally deletes every
 target object missing from the source (``sync.go:199-234``).
 
-Here that whole loop is ONE logical plan:
+Two plans share that change predicate (``_reason``):
+
+``reconcile`` — the sync runner's tick, one keyed pass like the reference's
+one loop: the three listings are tagged by side, hashed once on
+``(mapping_id, object_name)`` and grouped, so each key's source, target and
+stored state meet in one row that classifies as copy | skip | delete | keep
+and carries the stored state row along.
+
+``sync_diff`` — the registered ``q_sync_*`` queries' join form:
 
     src ⟕ state  → CASE classify (copy|skip)       [left join + when]
     tgt ▷ src    → delete                           [left-anti join]
     union all    → action plan
 
-At 100 TB scale the classification never touches object payloads — it joins
+On ``q_sync_incremental``'s shape the join form measured faster than the
+keyed pass (sf0.01 and sf0.1), so the queries keep it.
+
+At 100 TB scale the classification never touches object payloads — it works on
 *listings* (metadata only). The copy stage downstream reads bytes only for
-rows where ``action='copy'`` (see ``executor.py``). Joins are key-equality on
-``(mapping_id, object_name)``; the state table is partitioned by
-``mapping_id`` so partition pruning keeps each mapping's diff local. Each
-join's build side is a shuffled hash table past ``tables.shuffle_hash``'s
-row cutoff and left to the planner below it; a driver-built listing has
-no input files, so it is never hinted.
+rows where ``action='copy'`` (see ``executor.py``). The state table is
+partitioned by ``mapping_id`` so partition pruning keeps each mapping's
+diff local. Each of ``sync_diff``'s join build sides is a shuffled hash
+table past ``tables.shuffle_hash``'s row cutoff and left to the planner
+below it; a driver-built listing has no input files, so it is never hinted.
 """
 
 from __future__ import annotations
@@ -36,25 +46,113 @@ MAPPING_ID = "demo:src-bucket->demo:tgt-bucket"
 ACTION_COPY = "copy"
 ACTION_SKIP = "skip"
 ACTION_DELETE = "delete"
+# a stored state row whose object neither bucket lists: the row is kept
+ACTION_KEEP = "keep"
 
 STATUS_SUCCESS = "success"
 STATUS_FAILED_GET = "failed_get"
 STATUS_FAILED_UPLOAD = "failed_upload"
 
+KEYS = ["mapping_id", "object_name"]
+
+# The object columns a listing carries besides its keys. The copy stage
+# re-applies content_type + user metadata on the uploaded object, the
+# reference's UploadObject(..., contentType) + ObjectInfo.Metadata
+# contract (gcp/client.go:107-138; interfaces/provider.go:16).
+OBJECT_COLUMNS = ("size", "etag", "last_modified", "content_type", "metadata")
+
+
+def _reason(absent: str, stored: str) -> str:
+    """The change predicate (sync.go:111-128) as a SQL CASE giving the
+    diagnostic reason, in the priority order the reference short-circuits
+    in: ``new`` where ``absent`` holds (no state row), else the first of
+    ``etag_changed``, ``mtime_changed`` and ``status_retry`` that holds,
+    else ``unchanged``, which alone means skip. ``stored`` prefixes the
+    state row's columns; ``etag`` and ``last_modified`` are the source's.
+
+    Null-safe comparisons: a state row with NULL etag/last_modified must
+    classify as changed (the reference resyncs such objects,
+    sync.go:111-114); plain != yields NULL, falls through every WHEN, and
+    would mis-land on 'unchanged' → skip. (The status check deliberately
+    keeps plain-!= fall-through semantics: the oracle's `st.sync_status <>
+    'success'` behaves identically on NULL.)"""
+    return (
+        f"CASE WHEN {absent} THEN 'new' "
+        f"WHEN NOT ({stored}etag <=> etag) THEN 'etag_changed' "
+        f"WHEN NOT ({stored}last_modified <=> last_modified) THEN 'mtime_changed' "
+        f"WHEN {stored}sync_status != '{STATUS_SUCCESS}' THEN 'status_retry' "
+        "ELSE 'unchanged' END"
+    )
+
+
+def reconcile(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
+    """One row per key of ``src``, ``tgt`` and ``state``, from one keyed
+    pass: each side is tagged as a struct, the three are unioned, hashed
+    once on ``(mapping_id, object_name)`` and grouped, so the plan holds
+    one exchange and its output is already hash-partitioned by key.
+
+    ``action`` is copy or skip where the source lists the object (the
+    change predicate, ``reason`` as in ``sync_diff``), delete where only
+    the target does (``removed_from_source``), and keep where only a state
+    row names the key (``state_only``). The object columns (those of
+    ``OBJECT_COLUMNS`` the source carries, which the target must carry
+    too) come from the source, else from the target. ``state`` is the
+    stored row's non-key columns as one struct, NULL where the key has no
+    state row, so the next state is a projection of the executed rows.
+
+    Written as SQL text: each Column call is a py4j round trip, and this
+    plan is rebuilt every tick."""
+    obj_cols = [c for c in OBJECT_COLUMNS if c in src.columns]
+    state_cols = [c for c in state.columns if c not in KEYS]
+    sides = ("src", "tgt", "state")
+    tagged = [
+        df.selectExpr(*KEYS, f"struct({', '.join(cols)}) AS {side}")
+        for df, cols, side in zip((src, tgt, state), (obj_cols, obj_cols, state_cols), sides)
+    ]
+    keyed = (
+        tagged[0]
+        .unionByName(tagged[1], allowMissingColumns=True)
+        .unionByName(tagged[2], allowMissingColumns=True)
+        .repartition(*KEYS)
+        .groupBy(*KEYS)
+        .agg(*[F.expr(f"first({s}, true) AS {s}") for s in sides])
+    )
+    return (
+        keyed.selectExpr(
+            *KEYS, "src", "tgt", "state", *[f"coalesce(src, tgt).{c} AS {c}" for c in obj_cols]
+        )
+        .selectExpr(
+            *KEYS,
+            f"""CASE WHEN src IS NOT NULL THEN {_reason("state IS NULL", "state.")}
+                     WHEN tgt IS NOT NULL THEN 'removed_from_source'
+                     ELSE 'state_only' END AS reason""",
+            *obj_cols,
+            "state",
+        )
+        .selectExpr(
+            *KEYS,
+            f"""CASE reason WHEN 'unchanged' THEN '{ACTION_SKIP}'
+                            WHEN 'removed_from_source' THEN '{ACTION_DELETE}'
+                            WHEN 'state_only' THEN '{ACTION_KEEP}'
+                            ELSE '{ACTION_COPY}' END AS action""",
+            "reason",
+            *obj_cols,
+            "state",
+        )
+    )
+
 
 def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
-    """Classify every object into copy | skip | delete.
+    """Classify every object into copy | skip | delete, as joins.
 
     ``src``/``tgt`` are catalog listings with columns
     ``(mapping_id, object_name, size, etag, last_modified)``;
     ``state`` carries ``(mapping_id, object_name, etag, last_modified,
     sync_status)``. Mirrors sync.go:101-128 (copy/skip) + sync.go:199-234
-    (delete). The reason column is diagnostic, ordered by the same predicate
-    priority the reference short-circuits in.
+    (delete). The reason column is diagnostic (``_reason``).
     """
-    keys = ["mapping_id", "object_name"]
     st = state.select(
-        *keys,
+        *KEYS,
         F.col("etag").alias("st_etag"),
         F.col("last_modified").alias("st_last_modified"),
         F.col("sync_status").alias("st_sync_status"),
@@ -66,33 +164,15 @@ def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
         F.lit(True).alias("_st_present"),
     )
 
-    # Null-safe comparisons: a state row with NULL etag/last_modified must
-    # classify as changed (the reference resyncs such objects, sync.go:111-114);
-    # plain != yields NULL, falls through every when(), and would mis-land on
-    # 'unchanged' → skip. (The status check deliberately keeps plain-!=
-    # fall-through semantics: the oracle's `st.sync_status <> 'success'`
-    # behaves identically on NULL.)
-    reason = (
-        F.when(F.col("_st_present").isNull(), F.lit("new"))
-        .when(~F.col("st_etag").eqNullSafe(F.col("etag")), F.lit("etag_changed"))
-        .when(
-            ~F.col("st_last_modified").eqNullSafe(F.col("last_modified")),
-            F.lit("mtime_changed"),
-        )
-        .when(F.col("st_sync_status") != F.lit(STATUS_SUCCESS), F.lit("status_retry"))
-        .otherwise(F.lit("unchanged"))
-    )
+    reason = F.expr(_reason("_st_present IS NULL", "st_"))
     # Object metadata rides the plan when the catalogs carry it (real
-    # listings do; the synthetic oracle catalogs don't) — the copy stage
-    # re-applies content_type + user metadata on the uploaded object, the
-    # reference's UploadObject(..., contentType) + ObjectInfo.Metadata
-    # contract (gcp/client.go:107-138; interfaces/provider.go:16).
+    # listings do; the synthetic oracle catalogs don't).
     carried = [c for c in ("content_type", "metadata") if c in src.columns]
     upserts = (
-        src.join(shuffle_hash(st), on=keys, how="left")
+        src.join(shuffle_hash(st), on=KEYS, how="left")
         .withColumn("reason", reason)
         .select(
-            *keys,
+            *KEYS,
             F.when(F.col("reason") == "unchanged", F.lit(ACTION_SKIP))
             .otherwise(F.lit(ACTION_COPY))
             .alias("action"),
@@ -103,8 +183,8 @@ def sync_diff(src: DataFrame, tgt: DataFrame, state: DataFrame) -> DataFrame:
             *carried,
         )
     )
-    deletes = tgt.join(shuffle_hash(src), on=keys, how="left_anti").select(
-        *keys,
+    deletes = tgt.join(shuffle_hash(src), on=KEYS, how="left_anti").select(
+        *KEYS,
         F.lit(ACTION_DELETE).alias("action"),
         F.lit("removed_from_source").alias("reason"),
         "size",

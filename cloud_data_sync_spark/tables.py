@@ -185,9 +185,9 @@ def materialize(
     checkpoint root — the write is the ONE job that runs the side
     effects, and the returned frame is a durable file scan. ``tag`` keys
     the superseded-generation cleanup and must be stable per logical
-    frame (e.g. ``"results-<mapping_id>"``). The localCheckpoint path is
-    already exactly-once (one eager job; blocks pinned, never recomputed
-    while they exist) and is unchanged.
+    frame (e.g. ``"results"``, the sync runner's executed frame). The
+    localCheckpoint path is already exactly-once (one eager job; blocks
+    pinned, never recomputed while they exist) and is unchanged.
 
     Storage hygiene for the non-side-effecting ``df.checkpoint`` path:
     sessions built by ``get_spark()``/the CLI set

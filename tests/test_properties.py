@@ -10,11 +10,15 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
-from cloud_data_sync_spark.state import STATE_SCHEMA, upsert
-from cloud_data_sync_spark.sync import sync_diff
+from cloud_data_sync_spark.executor import RESULT_SCHEMA
+from cloud_data_sync_spark.runner import next_state
+from cloud_data_sync_spark.state import STATE_SCHEMA, delete_keys, upsert
+from cloud_data_sync_spark.sync import reconcile, sync_diff
 
 BASE_TS = datetime(2024, 1, 1)
 
@@ -53,12 +57,26 @@ def _state_rows(names: list[str], seed: int) -> list[tuple]:
     ]
 
 
+def _canon(row) -> tuple:
+    """A collected row as a hashable, comparable tuple: map cells collect as
+    dicts, struct cells as Rows."""
+    return tuple(
+        tuple(sorted(v.items()))
+        if isinstance(v, dict)
+        else _canon(v)
+        if isinstance(v, tuple)
+        else v
+        for v in row
+    )
+
+
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(src_names=_names, tgt_names=_names, st_names=_names, seed=st.integers(0, 7))
 def test_sync_diff_partitions_the_namespace(spark, src_names, tgt_names, st_names, seed):
     src = spark.createDataFrame(_catalog_rows(src_names, seed), CATALOG_SCHEMA)
     tgt = spark.createDataFrame(_catalog_rows(tgt_names, seed + 1), CATALOG_SCHEMA)
-    state = spark.createDataFrame(_state_rows(st_names, seed), STATE_SCHEMA).select(
+    full_state = spark.createDataFrame(_state_rows(st_names, seed), STATE_SCHEMA)
+    state = full_state.select(
         "mapping_id", "object_name", "etag", "last_modified", "sync_status"
     )
     plan = sync_diff(src, tgt, state).collect()
@@ -73,6 +91,77 @@ def test_sync_diff_partitions_the_namespace(spark, src_names, tgt_names, st_name
     # plan rows = |src| + |tgt \\ src| (no duplicates, no losses)
     assert len(plan) == len(src_names) + len(set(tgt_names) - set(src_names))
 
+    # the keyed pass gives the same rows, plus a keep row per state-only key
+    keyed = reconcile(src, tgt, full_state).collect()
+    cols = ["mapping_id", "object_name", "action", "reason", "size", "etag", "last_modified"]
+    assert sorted(_canon([r[c] for c in cols]) for r in keyed if r.action != "keep") == sorted(
+        _canon([r[c] for c in cols]) for r in plan
+    )
+    keep = {r.object_name for r in keyed if r.action == "keep"}
+    assert keep == set(st_names) - set(src_names) - set(tgt_names)
+    stored = {r.object_name: _canon(r)[2:] for r in full_state.collect()}
+    assert {r.object_name: r.state and _canon(r.state) for r in keyed} == {
+        n: stored.get(n) for n in set(src_names) | set(tgt_names) | set(st_names)
+    }
+
+
+def _executed(spark, plan, oks: list[bool]):
+    """``plan``'s rows as ``execute_plan`` returns them, with each copy and
+    delete row's outcome drawn from ``oks`` instead of file I/O."""
+    out_type = StructType(
+        _parse_datatype_string(RESULT_SCHEMA).fields
+        + [plan.schema["reason"], plan.schema["state"]]
+    )
+    rows = []
+    for i, r in enumerate(plan.collect()):
+        ok = oks[i % len(oks)]
+        status = content_type = synced = None
+        metadata: dict = {}
+        if r.action == "copy":
+            status = "success" if ok else ("failed_get", "failed_upload")[i % 2]
+            content_type, metadata = "text/plain", {"run": str(i)}
+            synced = BASE_TS + timedelta(hours=2, minutes=i)
+        elif r.action == "delete":
+            status = "success" if ok else "failed_delete"
+            synced = BASE_TS + timedelta(hours=2, minutes=i)
+        rows.append(
+            (r.mapping_id, r.object_name, r.action, status,
+             None if status in (None, "success") else "boom",
+             r.size, r.last_modified, r.etag, content_type, metadata, synced,
+             r.reason, r.state)
+        )
+    return spark.createDataFrame(rows, out_type)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    src_names=_names,
+    tgt_names=_names,
+    st_names=_names,
+    seed=st.integers(0, 7),
+    oks=st.lists(st.booleans(), min_size=6, max_size=6),
+)
+# failed deletes with and without a state row, and a state-only key
+@example(["obj0.bin"], ["obj1.bin", "obj2.bin"], ["obj2.bin", "obj3.bin"], 0, [False] * 6)
+def test_next_state_equals_the_upsert_delete_merge(
+    spark, src_names, tgt_names, st_names, seed, oks
+):
+    """The runner's projected state equals the reference merge, row for
+    row: every copy row upserted over the stored rows, then every
+    successfully deleted key removed."""
+    src = spark.createDataFrame(_catalog_rows(src_names, seed), CATALOG_SCHEMA)
+    tgt = spark.createDataFrame(_catalog_rows(tgt_names, seed + 1), CATALOG_SCHEMA)
+    state = spark.createDataFrame(_state_rows(st_names, seed), STATE_SCHEMA)
+    results = _executed(spark, reconcile(src, tgt, state), oks)
+    copy_rows = results.filter(F.col("action") == "copy").select(
+        *STATE_SCHEMA.fieldNames()[:-1], F.col("status").alias("sync_status")
+    )
+    deleted = results.filter((F.col("action") == "delete") & (F.col("status") == "success"))
+    want = delete_keys(upsert(state, copy_rows), deleted)
+    got = next_state(results)
+    assert got.columns == want.columns == STATE_SCHEMA.fieldNames()
+    assert sorted(_canon(r) for r in got.collect()) == sorted(_canon(r) for r in want.collect())
+
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(a_names=_names, b_names=_names, seed=st.integers(0, 7))
@@ -85,21 +174,15 @@ def test_upsert_idempotent_and_key_unique(spark, a_names, b_names, seed):
     keys = [(r.mapping_id, r.object_name) for r in rows]
     assert len(keys) == len(set(keys))
     assert {k[1] for k in keys} == set(a_names) | set(b_names)
-    def canon(r):
-        # map cells collect as dicts (unhashable) — freeze for set compare
-        return tuple(
-            tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r
-        )
-
     # applying the same updates again changes nothing (idempotency)
-    again = {canon(r) for r in upsert(merged, updates).collect()}
-    assert again == {canon(r) for r in rows}
+    again = {_canon(r) for r in upsert(merged, updates).collect()}
+    assert again == {_canon(r) for r in rows}
     # an update never loses to an equal-or-older existing row
     upd = {(r.mapping_id, r.object_name): r for r in updates.collect()}
     for r in rows:
         k = (r.mapping_id, r.object_name)
         if k in upd and upd[k].last_synced >= (r.last_synced or upd[k].last_synced):
-            assert canon(r) == canon(upd[k])
+            assert _canon(r) == _canon(upd[k])
 
 
 # -- round-3 operator algebra -------------------------------------------------
