@@ -22,6 +22,7 @@ from cloud_data_sync_spark.tables import (
     materialize,
     session_cached,
     session_substrate,
+    sql_str,
 )
 
 # Tiny embedded stopword lexicons for the n-gram/stopword language-ID
@@ -905,13 +906,6 @@ _BPE_FOLD_SQL = (
     ") AS syms"
 )
 
-
-def _sql_str_lit(v: str) -> str:
-    """Single-quoted SQL literal; symbols are [a-z<>/w] by construction
-    (word filter + '</w>'), but escape quotes anyway so a future alphabet
-    change cannot inject."""
-    return "'" + v.replace("'", "''") + "'"
-
 # adjacent symbol pairs of one sequence, counted with the word's frequency —
 # overlapping pairs all count ("lll" contributes (l,l) twice), matching the
 # reference get_stats
@@ -1170,7 +1164,7 @@ def _bpe_encode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     seqs = _bpe_seqs0(spark, sf_dir)
     for a, b in _bpe_merges(spark, sf_dir):
         seqs = seqs.selectExpr(
-            "w", "cnt", _BPE_FOLD_SQL.format(a=_sql_str_lit(a), b=_sql_str_lit(b))
+            "w", "cnt", _BPE_FOLD_SQL.format(a=sql_str(a), b=sql_str(b))
         )
     word_tok = seqs.select(
         "w",
@@ -1280,7 +1274,7 @@ def bpe_train_loop(
         a, b, c = top[0]["a"], top[0]["b"], int(top[0]["c"])
         merges.append((step, a, b, c))
         cur = cur.selectExpr(
-            "cnt", _BPE_FOLD_SQL.format(a=_sql_str_lit(a), b=_sql_str_lit(b))
+            "cnt", _BPE_FOLD_SQL.format(a=sql_str(a), b=sql_str(b))
         )
     return spark.createDataFrame(merges, out_schema).orderBy("step")
 

@@ -6,25 +6,27 @@ paths (``_bucket_root``); a mapping whose provider has no local endpoint
 fails there and reads or writes nothing.
 
 Per mapping (its own phase; a failure fails that mapping alone):
-  1. list source + target (metadata-only catalog DataFrames), refuse an
-     empty source over a non-empty target, create the target root
+  1. list source + target as catalog rows on the driver (metadata only,
+     ``listing.list_rows``), refuse an empty source over a non-empty
+     target, create the target root; no Spark action runs
 
 Per batch of mappings (SyncBuckets, sync.go:56-176, for all of them at
 once; a failure fails the whole batch):
-  2. reconcile the unioned listings with the batch's state partitions in
-     one keyed pass (``sync.reconcile``): one row per key, classified as
-     copy, skip, delete or keep, carrying its stored state row
+  2. reconcile one driver-built relation per side (every mapping's rows)
+     with the batch's state partitions in one keyed pass
+     (``sync.reconcile``): one row per key, classified as copy, skip,
+     delete or keep, carrying its stored state row
   3. execute copies/deletes on executors (streamed, continue-on-error),
      each row under its own mapping's roots, and materialize every row
      with its outcome once
   4. project the batch's next state from those rows (``next_state``) and
      write it; clear the partition of a mapping left with no rows
-  5. return each mapping's report (the reference's logged counters) from
-     one aggregation over the same rows
+  5. return each mapping's report (the reference's logged counters),
+     observed on the rows while step 3 materializes them
+     (``observe_report``), as the reference counts inside its loop
 
-A warm tick runs six Spark jobs whatever the batch's size: the keyed
-shuffle, the materialization, two for the report and two for the state
-write.
+A warm tick runs 4 Spark jobs whatever the batch's size: the keyed
+shuffle's map stage, the materialization and two for the state write.
 
 Unlike the reference — sequential over mappings AND objects (sync.go:33,
 101; parallelism is on its roadmap, README.md:345-347) — every per-object
@@ -45,21 +47,25 @@ import logging
 import os
 import signal
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from cloud_data_sync_spark import state as state_mod
 from cloud_data_sync_spark.config import BucketMapping, Config
 from cloud_data_sync_spark.executor import STATUS_SUCCESS, execute_plan
-from cloud_data_sync_spark.sources.listing import list_objects, local_root
-from cloud_data_sync_spark.tables import materialize
+from cloud_data_sync_spark.sources.listing import (
+    CATALOG_SCHEMA,
+    list_objects,  # noqa: F401 - runner.list_objects is a perfbench --trace 1 span
+    list_rows,
+    local_root,
+)
+from cloud_data_sync_spark.tables import local_frame, materialize, sql_str
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
-    ACTION_KEEP,
     ACTION_SKIP,
     reconcile,
     sync_diff,  # noqa: F401 - runner.sync_diff is a perfbench --trace 1 span
@@ -120,17 +126,67 @@ def _bucket_root(cfg: Config, provider_id: str, bucket: str) -> str:
     )
 
 
-# the action of a tally row that stands for one row of a mapping's new
-# state: ``count_actions`` counts them under this key, which the runner
-# takes out of the report
+# the count of a mapping's rows that stay in its next state: the runner
+# takes it out of the report to learn which partitions it must clear
 STATE_ROW = "state"
+
+# the executed rows ``next_state`` keeps, as SQL text over ``execute_plan``'s
+# output: every copy row (the upsert) and every row that carries a stored
+# state row, except a successful delete
+_COPIED = f"action = '{ACTION_COPY}'"
+_DELETED = f"action = '{ACTION_DELETE}' AND status = '{STATUS_SUCCESS}'"
+STATE_ROW_SQL = f"{_COPIED} OR (state IS NOT NULL AND NOT ({_DELETED}))"
+
+# each report counter (the reference's, sync.go:166-170, 231-233) and the
+# STATE_ROW count, as a predicate over one executed row. A status other
+# than success, NULL included, is a failure; keep rows count in none
+_OK = f"status <=> '{STATUS_SUCCESS}'"
+_OUTCOMES = {
+    ACTION_SKIP: f"action = '{ACTION_SKIP}'",
+    f"{ACTION_COPY}_success": f"{_COPIED} AND {_OK}",
+    f"{ACTION_COPY}_failed": f"{_COPIED} AND NOT ({_OK})",
+    f"{ACTION_DELETE}_success": f"action = '{ACTION_DELETE}' AND {_OK}",
+    f"{ACTION_DELETE}_failed": f"action = '{ACTION_DELETE}' AND NOT ({_OK})",
+    STATE_ROW: STATE_ROW_SQL,
+}
+
+
+def observe_report(
+    results: DataFrame, mapping_ids: list[str]
+) -> tuple[DataFrame, Callable[[], dict[str, dict[str, int]]]]:
+    """``results`` (an executed plan) with each mapping's report counters
+    and ``STATE_ROW`` count observed on its rows, plus a function that
+    reads them once an action has run the returned frame: one
+    ``count_if`` per mapping and ``_OUTCOMES`` key, gathered by the job
+    that computes the rows instead of an aggregation after it. Zero
+    counts are left out, so each mapping's dict is what ``count_actions``
+    gives for its non-keep rows plus one ``STATE_ROW`` row per row of
+    ``next_state(results)``."""
+    obs = Observation()
+    keys = [(mid, key) for mid in mapping_ids for key in _OUTCOMES]
+    # one array of counts: each Column is a py4j round trip
+    counts_sql = ", ".join(
+        f"count_if(mapping_id = {sql_str(mid)} AND ({_OUTCOMES[key]}))"
+        for mid, key in keys
+    )
+    observed = results.observe(obs, F.expr(f"array({counts_sql}) AS counts"))
+
+    def report() -> dict[str, dict[str, int]]:
+        counts: dict[str, dict[str, int]] = {mid: {} for mid in mapping_ids}
+        for (mid, key), n in zip(keys, obs.get["counts"]):
+            if n:
+                counts[mid][key] = n
+        return counts
+
+    return observed, report
 
 
 def count_actions(results: DataFrame) -> dict[str, dict[str, int]]:
     """Fold per-(mapping_id, action, status) rows into each mapping's
     report counters: ``skip`` and ``STATE_ROW`` rows count under their
     action, every other action as ``<action>_success`` or
-    ``<action>_failed``.
+    ``<action>_failed``. The reference that ``observe_report`` is tested
+    against; the runner no longer calls it.
 
     Accumulate, don't comprehend: failed_get and failed_upload both map to
     copy_failed and must SUM, not overwrite each other.
@@ -151,13 +207,14 @@ def count_actions(results: DataFrame) -> dict[str, dict[str, int]]:
 
 @dataclass
 class _Listed:
-    """A mapping that passed its own phase: its roots and both listings."""
+    """A mapping that passed its own phase: its roots and the catalog rows
+    of both (``listing.list_rows``)."""
 
     mapping_id: str
     src_root: str
     tgt_root: str
-    src: DataFrame
-    tgt: DataFrame
+    src: list[tuple]
+    tgt: list[tuple]
 
 
 def _roots(cfg: Config, mapping: BucketMapping) -> tuple[str, str]:
@@ -168,19 +225,16 @@ def _roots(cfg: Config, mapping: BucketMapping) -> tuple[str, str]:
 
 
 def _list_mapping(
-    spark: SparkSession,
-    mid: str,
-    src_root: str,
-    tgt_root: str,
-    allow_empty_source: bool,
+    mid: str, src_root: str, tgt_root: str, allow_empty_source: bool
 ) -> _Listed:
     """The per-mapping phase, over roots ``_bucket_root`` resolved:
-    everything up to the diff that can fail for one mapping alone."""
-    # 1. catalogs (metadata only — no payload reads); a missing root (first
-    # run, target not created yet) lists as empty, any other listing
-    # failure propagates
-    src = list_objects(spark, src_root, mid)
-    tgt = list_objects(spark, tgt_root, mid)
+    everything up to the diff that can fail for one mapping alone. It
+    runs no Spark action."""
+    # 1. catalog rows (metadata only — no payload reads); a missing root
+    # (first run, target not created yet) lists as empty, any other
+    # listing failure propagates
+    src = list_rows(src_root, mid)
+    tgt = list_rows(tgt_root, mid)
 
     # SAFETY GATE: an empty SOURCE combined with a non-empty target/state
     # turns the whole plan into deletes. A typo'd bucket URI, an unmounted
@@ -188,7 +242,7 @@ def _list_mapping(
     # reference has the same blast radius and no guard (sync.go:199-234);
     # we refuse instead. A genuinely emptied source is actioned by
     # explicitly passing allow_empty_source=True.
-    if not allow_empty_source and src.isEmpty() and not tgt.isEmpty():
+    if not allow_empty_source and not src and tgt:
         raise RuntimeError(
             f"mapping {mid}: source listing at {src_root!r} is EMPTY but "
             f"the target is not — refusing the all-delete plan. Pass "
@@ -209,13 +263,11 @@ def next_state(results: DataFrame) -> DataFrame:
     ``state.delete_keys(state.upsert(st, copy rows), deleted keys)`` is
     the same merge written as two anti-joins. SQL text, like
     ``sync.reconcile``: each Column call is a py4j round trip."""
-    copied = f"action = '{ACTION_COPY}'"
-    deleted = f"action = '{ACTION_DELETE}' AND status = '{STATUS_SUCCESS}'"
-    return results.where(f"{copied} OR (state IS NOT NULL AND NOT ({deleted}))").selectExpr(
+    return results.where(STATE_ROW_SQL).selectExpr(
         *[
             c
             if c in state_mod.KEYS
-            else f"IF({copied}, {'status' if c == 'sync_status' else c}, state.{c}) AS {c}"
+            else f"IF({_COPIED}, {'status' if c == 'sync_status' else c}, state.{c}) AS {c}"
             for c in state_mod.STATE_SCHEMA.fieldNames()
         ]
     )
@@ -228,44 +280,38 @@ def _sync_batch(
     for mappings none of which reads or writes what another writes
     (``_batches``); one report per mapping, in batch order."""
     mids = [m.mapping_id for m in batch]
-    src = reduce(DataFrame.unionByName, [m.src for m in batch])
-    tgt = reduce(DataFrame.unionByName, [m.tgt for m in batch])
+    # one driver-built relation per side for the whole batch
+    src = local_frame(spark, [r for m in batch for r in m.src], CATALOG_SCHEMA)
+    tgt = local_frame(spark, [r for m in batch for r in m.tgt], CATALOG_SCHEMA)
 
     # 2-3. reconcile the listings with the batch's state partitions (pruned
-    # scan) and execute the copies and deletes, one row per key. The one
-    # materialization runs the copy/delete work exactly once
-    # (side_effecting: under --checkpoint-dir, df.checkpoint()'s second
-    # job would re-run every copy and delete, r6 advice) and freezes the
-    # stored state rows the plan carries: the state parquet at
-    # ``state_path`` is overwritten below, and a lazy plan would read the
-    # NEW state (read-overwrite hazard).
+    # scan) and execute the copies and deletes, one row per key, observing
+    # the report on those rows (5.). The one materialization runs the
+    # copy/delete work exactly once (side_effecting: under --checkpoint-dir,
+    # df.checkpoint()'s second job would re-run every copy and delete, r6
+    # advice) and freezes the stored state rows the plan carries: the state
+    # parquet at ``state_path`` is overwritten below, and a lazy plan would
+    # read the NEW state (read-overwrite hazard).
     st = state_mod.state_for_mappings(state_mod.load_state(spark, state_path), mids)
-    results = materialize(
+    executed, report = observe_report(
         execute_plan(
             reconcile(src, tgt, st),
             {m.mapping_id: (m.src_root, m.tgt_root) for m in batch},
         ),
-        eager=True,
-        side_effecting=True,
-        tag="results",
+        mids,
     )
+    results = materialize(executed, eager=True, side_effecting=True, tag="results")
 
     # 4. the batch's next state, a projection of the same rows; it holds
     # only the batch's mapping_ids, so the dynamic partition overwrite
     # below rewrites only their partitions
     new_state = next_state(results)
 
-    # 5. report (the counters the reference logs, sync.go:166-170, 231-233)
-    # and the new state's rows per mapping in one aggregation; keep rows
-    # count in neither. A mapping with no state row left is one whose
-    # partition the write below cannot clear
-    held = new_state.selectExpr("mapping_id", f"'{STATE_ROW}' AS action")
-    counts = count_actions(
-        results.where(f"action != '{ACTION_KEEP}'")
-        .select("mapping_id", "action", "status")
-        .unionByName(held, allowMissingColumns=True)
-    )
-    kept = {mid for mid in mids if counts.get(mid, {}).pop(STATE_ROW, 0)}
+    # 5. report (the counters the reference logs) and the new state's rows
+    # per mapping, observed by the materialization. A mapping with no
+    # state row left is one whose partition the write below cannot clear
+    counts = report()
+    kept = {mid for mid in mids if counts[mid].pop(STATE_ROW, 0)}
 
     if kept:
         state_mod.save_state(new_state, state_path)
@@ -275,7 +321,7 @@ def _sync_batch(
             # write; if this mapping's state just emptied, remove its stale
             # files so the deleted rows don't resurrect on the next load
             state_mod.clear_mapping_partition(spark, state_path, mid)
-    reports = [SyncReport(mapping_id=mid, counts=counts.get(mid, {})) for mid in mids]
+    reports = [SyncReport(mapping_id=mid, counts=counts[mid]) for mid in mids]
     for r in reports:
         _log_event(logging.INFO, "mapping_synced", mapping_id=r.mapping_id, counts=r.counts)
     return reports
@@ -293,7 +339,7 @@ def sync_buckets(
     pipeline over a batch of one. Any failure raises, a root with no local
     endpoint first (``_bucket_root``)."""
     roots = _roots(cfg, mapping)
-    listed = _list_mapping(spark, mapping.mapping_id, *roots, allow_empty_source)
+    listed = _list_mapping(mapping.mapping_id, *roots, allow_empty_source)
     return _sync_batch(spark, [listed], state_path)[0]
 
 
@@ -363,7 +409,7 @@ def sync_all(
         for i in batch:
             mid = cfg.mappings[i].mapping_id
             try:
-                listed[i] = _list_mapping(spark, mid, *roots[i], allow_empty_source)
+                listed[i] = _list_mapping(mid, *roots[i], allow_empty_source)
             except Exception as e:  # noqa: BLE001 - per-mapping isolation
                 done[i] = _failed(mid, e)
         if listed:

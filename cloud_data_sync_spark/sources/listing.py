@@ -6,11 +6,12 @@ path or a ``file:`` URI (``local_root``), and objects are listed, read and
 written with OS calls. ``os_path`` refuses any other scheme (``s3a://``,
 ``gs://``, ``abfss://``, ...); no Hadoop FileSystem is opened here.
 
-One lister: ``list_objects``, driver-side and metadata only — it never
+One lister: ``list_rows``, driver-side and metadata only — it never
 reads payloads. Like the reference's in-memory ``map[string]*ObjectInfo``
-per bucket, the listing is held on the driver, and every listed object
-(dot- and underscore-prefixed names included) is diffed, copied and
-deleted.
+per bucket, the listing is held on the driver as rows, and every listed
+object (dot- and underscore-prefixed names included) is diffed, copied
+and deleted. ``list_objects`` is the same rows as a DataFrame; the sync
+runner instead builds one frame per side from a whole batch's rows.
 
 Catalog schema matches interfaces/provider.go:9-17 (ObjectInfo).
 """
@@ -122,15 +123,20 @@ def _raise(err: OSError) -> None:
     raise err
 
 
-def _walk_rows(root: str, root_uri: str, mapping_id: str) -> list[tuple]:
-    """Catalog rows of the local directory ``root``: one ``os.walk`` that
+def list_rows(root_uri: str, mapping_id: str = "") -> list[tuple]:
+    """Catalog rows (``CATALOG_SCHEMA`` order, metadata only) of the local
+    root ``root_uri``: one ``os.walk`` of ``os_path(root_uri)`` that
     follows directory symlinks (as Hadoop's local listing does), one
     ``os.stat`` per object and the xattr read of ``object_meta_local``.
+    No payload is read — GetObject's N+1 HeadObject anti-pattern in
+    aws/client.go:95-116 has no analog here.
 
-    A directory that cannot be read raises: skipping it would list its
+    A missing root lists as empty (first run). A root that is a file, or
+    a directory that cannot be read, raises: skipping it would list its
     objects as gone and plan deletes for them on the target. An object
     that vanishes between the walk and its stat (a racing delete, a
     dangling symlink) is left out, as Hadoop's ``listStatus`` does."""
+    root = os_path(root_uri)
     try:
         if not stat.S_ISDIR(os.stat(root).st_mode):
             # refused before os.walk's bare NotADirectoryError, with a
@@ -171,14 +177,7 @@ def _walk_rows(root: str, root_uri: str, mapping_id: str) -> list[tuple]:
 def list_objects(
     spark: SparkSession, root_uri: str, mapping_id: str = ""
 ) -> DataFrame:
-    """Recursive listing of ``root_uri`` → catalog DataFrame (metadata only).
-
-    One OS directory walk of ``os_path(root_uri)`` (``_walk_rows``): no
-    JVM call per object, and the per-object content type + user metadata
-    come from xattrs (``object_meta_local``). No payload is read —
-    GetObject's N+1 HeadObject anti-pattern in aws/client.go:95-116 has no
-    analog here. A missing root lists as empty. The rows become an Arrow
+    """``list_rows(root_uri, mapping_id)`` as a catalog DataFrame: an Arrow
     local relation (``tables.local_frame``), so no Python task reads
-    them."""
-    rows = _walk_rows(os_path(root_uri), root_uri, mapping_id)
-    return local_frame(spark, rows, CATALOG_SCHEMA)
+    it."""
+    return local_frame(spark, list_rows(root_uri, mapping_id), CATALOG_SCHEMA)

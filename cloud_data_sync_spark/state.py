@@ -174,7 +174,7 @@ def load_state(spark: SparkSession, path: str) -> DataFrame:
     ONLY a cleanly-absent path reads as empty. An existing-but-unreadable
     table (transient I/O, auth, corrupt footer) must RAISE: swallowing it
     would classify every source object as 'new' and re-copy the bucket —
-    the same first-run-vs-failure distinction ``list_objects`` enforces.
+    the same first-run-vs-failure distinction ``list_rows`` enforces.
     """
     check_state_version(spark, path)
     if not state_exists(spark, path):

@@ -263,6 +263,13 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def sql_str(v: str) -> str:
+    r"""``v`` as a Spark SQL string literal. Spark's parser reads ``\`` as an
+    escape inside quotes (``'p\q'`` is ``pq``), so ``\`` and ``'`` are both
+    escaped."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def session_substrate(
     spark: SparkSession,
     sf_dir: str,

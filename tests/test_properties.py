@@ -13,11 +13,11 @@ from datetime import datetime, timedelta
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, _parse_datatype_string
+from pyspark.sql.types import StringType, StructField, StructType, _parse_datatype_string
 
 from cloud_data_sync_spark.executor import RESULT_SCHEMA
-from cloud_data_sync_spark.runner import next_state
-from cloud_data_sync_spark.state import STATE_SCHEMA, delete_keys, upsert
+from cloud_data_sync_spark.runner import count_actions, next_state, observe_report
+from cloud_data_sync_spark.state import KEYS, STATE_SCHEMA, delete_keys, upsert
 from cloud_data_sync_spark.sync import reconcile, sync_diff
 
 BASE_TS = datetime(2024, 1, 1)
@@ -161,6 +161,64 @@ def test_next_state_equals_the_upsert_delete_merge(
     got = next_state(results)
     assert got.columns == want.columns == STATE_SCHEMA.fieldNames()
     assert sorted(_canon(r) for r in got.collect()) == sorted(_canon(r) for r in want.collect())
+
+
+# mapping ids as config mappings render them, with the characters a SQL
+# literal must escape
+_MIDS = ["m1", "s:a->t:b", "s:it's->t:b", "s:p\\q->t:r", "s:\\'->t:''"]
+_ACTIONS = ["copy", "skip", "delete", "keep"]
+_STATUSES = ["success", "failed_get", "failed_upload", "failed_delete", None]
+_executed_rows = st.lists(
+    st.tuples(
+        st.sampled_from(_MIDS),
+        st.sampled_from(_ACTIONS),
+        st.sampled_from(_STATUSES),
+        st.booleans(),
+    ),
+    max_size=14,
+)
+
+
+@settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
+@given(drawn=_executed_rows)
+# every action under every status, with and without a state row
+@example(
+    [
+        (_MIDS[i % len(_MIDS)], a, s, i % 2 == 0)
+        for i, (a, s) in enumerate((a, s) for a in _ACTIONS for s in _STATUSES for _ in "ab")
+    ]
+)
+def test_observed_report_equals_count_actions(spark, drawn):
+    """The report observed on an executed frame equals ``count_actions``
+    over what the runner tallied before: every non-keep row by action and
+    status, plus one ``STATE_ROW`` row per row of ``next_state``."""
+    stored = (1, BASE_TS, "e", "text/plain", {}, BASE_TS, "success")
+    rows = [
+        (mid, f"o{i}", action, status, None, 1, BASE_TS, "e", None, {}, None, "r",
+         stored if has_state else None)
+        for i, (mid, action, status, has_state) in enumerate(drawn)
+    ]
+    executed_type = StructType(
+        _parse_datatype_string(RESULT_SCHEMA).fields
+        + [
+            StructField("reason", StringType()),
+            StructField("state", StructType([f for f in STATE_SCHEMA.fields if f.name not in KEYS])),
+        ]
+    )
+    results = spark.createDataFrame(rows, executed_type)
+    observed, report = observe_report(results, _MIDS)
+    observed.collect()
+    want = count_actions(
+        results.where("action != 'keep'")
+        .select("mapping_id", "action", "status")
+        .unionByName(
+            next_state(results).selectExpr("mapping_id", "'state' AS action"),
+            allowMissingColumns=True,
+        )
+    )
+    got = report()
+    assert list(got) == _MIDS
+    assert {mid: c for mid, c in got.items() if c} == want
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
