@@ -158,9 +158,10 @@ def execute_plan(plan: DataFrame, roots: Mapping[str, tuple[str, str]]) -> DataF
     ``metadata`` and ``last_synced`` here; every other row (skip, keep)
     passes through with those that the plan lacks left NULL.
 
-    Lazy like any DataFrame, and computing it copies and deletes:
-    materialize it once (``tables.materialize(..., side_effecting=True)``)
-    and derive everything else from that one frame."""
+    Lazy like any DataFrame, and computing it copies and deletes: run
+    one action over it, and only one. The sync runner's is the state
+    write (``state.save_state`` of ``runner.next_state`` over it), with
+    the report observed on the same rows (``runner.observe_report``)."""
     paths = {mid: (os_path(src), os_path(tgt)) for mid, (src, tgt) in roots.items()}
 
     # built on the driver: parsing a DDL string needs the JVM

@@ -573,11 +573,7 @@ def q_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the band table is consumed three times (band explode + both pair
     # verify sides); truncate its lineage so the hash chain runs once
-    doc_bands = materialize(
-        sig.selectExpr("doc_id", *band_exprs),
-        eager=False,
-        tag="phash-bands",
-    )
+    doc_bands = materialize(sig.selectExpr("doc_id", *band_exprs), eager=False)
     bands = doc_bands.selectExpr(
         "doc_id",
         f"explode(arrays_zip(sequence(0, {_PH_BANDS - 1}), "

@@ -17,16 +17,17 @@ once; a failure fails the whole batch):
      (``sync.reconcile``): one row per key, classified as copy, skip,
      delete or keep, carrying its stored state row
   3. execute copies/deletes on executors (streamed, continue-on-error),
-     each row under its own mapping's roots, and materialize every row
-     with its outcome once
-  4. project the batch's next state from those rows (``next_state``) and
-     write it; clear the partition of a mapping left with no rows
-  5. return each mapping's report (the reference's logged counters),
-     observed on the rows while step 3 materializes them
-     (``observe_report``), as the reference counts inside its loop
+     each row under its own mapping's roots, and write the batch's next
+     state projected from those rows (``next_state``) in the same job:
+     the state write is the copies' commit, as the reference commits each
+     state row inside its copy loop (sync.go:130-163); then clear the
+     partition of a mapping left with no rows
+  4. return each mapping's report (the reference's logged counters),
+     observed on the rows while step 3 writes them (``observe_report``),
+     as the reference counts inside its loop
 
-A warm tick runs 4 Spark jobs whatever the batch's size: the keyed
-shuffle's map stage, the materialization and two for the state write.
+A warm tick runs 2 Spark jobs whatever the batch's size: the keyed
+shuffle's map stage and the state write.
 
 Unlike the reference — sequential over mappings AND objects (sync.go:33,
 101; parallelism is on its roadmap, README.md:345-347) — every per-object
@@ -62,7 +63,11 @@ from cloud_data_sync_spark.sources.listing import (
     list_rows,
     local_root,
 )
-from cloud_data_sync_spark.tables import local_frame, materialize, sql_str
+from cloud_data_sync_spark.tables import (
+    local_frame,
+    materialize,  # noqa: F401 - runner.materialize is a perfbench --trace 1 span
+    sql_str,
+)
 from cloud_data_sync_spark.sync import (
     ACTION_COPY,
     ACTION_DELETE,
@@ -285,13 +290,13 @@ def _sync_batch(
     tgt = local_frame(spark, [r for m in batch for r in m.tgt], CATALOG_SCHEMA)
 
     # 2-3. reconcile the listings with the batch's state partitions (pruned
-    # scan) and execute the copies and deletes, one row per key, observing
-    # the report on those rows (5.). The one materialization runs the
-    # copy/delete work exactly once (side_effecting: under --checkpoint-dir,
-    # df.checkpoint()'s second job would re-run every copy and delete, r6
-    # advice) and freezes the stored state rows the plan carries: the state
-    # parquet at ``state_path`` is overwritten below, and a lazy plan would
-    # read the NEW state (read-overwrite hazard).
+    # scan), execute the copies and deletes, one row per key, observing the
+    # report on those rows (4.), and write the next state projected from
+    # them. The write is the tick's one action, so it runs every copy and
+    # delete exactly once and commits their state rows. It may overwrite
+    # the partitions it reads: the state scan feeds the keyed shuffle's map
+    # stage, which ends before the write's tasks start, and the dynamic
+    # partition overwrite replaces only the batch's partitions, at commit.
     st = state_mod.state_for_mappings(state_mod.load_state(spark, state_path), mids)
     executed, report = observe_report(
         execute_plan(
@@ -300,26 +305,16 @@ def _sync_batch(
         ),
         mids,
     )
-    results = materialize(executed, eager=True, side_effecting=True, tag="results")
+    state_mod.save_state(next_state(executed), state_path)
 
-    # 4. the batch's next state, a projection of the same rows; it holds
-    # only the batch's mapping_ids, so the dynamic partition overwrite
-    # below rewrites only their partitions
-    new_state = next_state(results)
-
-    # 5. report (the counters the reference logs) and the new state's rows
-    # per mapping, observed by the materialization. A mapping with no
-    # state row left is one whose partition the write below cannot clear
+    # 4. report (the counters the reference logs) and the new state's rows
+    # per mapping, observed by the write. A mapping with no state row left
+    # is one whose partition the write cannot clear: dynamic overwrite
+    # leaves a partition with no rows in the write as it was, so remove its
+    # stale files or the deleted rows resurrect on the next load
     counts = report()
-    kept = {mid for mid in mids if counts[mid].pop(STATE_ROW, 0)}
-
-    if kept:
-        state_mod.save_state(new_state, state_path)
     for mid in mids:
-        if mid not in kept:
-            # dynamic overwrite cannot clear a partition with no rows in the
-            # write; if this mapping's state just emptied, remove its stale
-            # files so the deleted rows don't resurrect on the next load
+        if not counts[mid].pop(STATE_ROW, 0):
             state_mod.clear_mapping_partition(spark, state_path, mid)
     reports = [SyncReport(mapping_id=mid, counts=counts[mid]) for mid in mids]
     for r in reports:

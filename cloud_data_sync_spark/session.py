@@ -83,8 +83,8 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.codegen.cache.maxEntries": "4000",
     # Reliable checkpoints (the spark.cloud_data_sync.checkpoint_dir flag)
     # are otherwise never deleted: the ContextCleaner only removes a GC'd
-    # RDD's checkpoint files when this is set, so a long-running sync loop
-    # or iterative label propagation would grow the HDFS/S3 checkpoint
+    # RDD's checkpoint files when this is set, so iterative label
+    # propagation in a long-running session would grow the HDFS/S3 checkpoint
     # root unboundedly (r6 advice). Static conf — read at SparkContext
     # creation, so it lives here rather than in materialize(); no-op when
     # the flag is unset (localCheckpoint blocks are cleaner-managed

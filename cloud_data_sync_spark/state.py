@@ -208,10 +208,17 @@ def save_state(state: DataFrame, path: str) -> None:
     ``spark.sql.sources.partitionOverwriteMode`` would make this call
     destructive under a vanilla session (static overwrite drops every
     partition absent from the write — i.e. all other mappings' state
-    whenever a caller saves one mapping's slice)."""
+    whenever a caller saves one mapping's slice).
+
+    No ``repartition("mapping_id")`` before the write: it would be an
+    exchange job of its own, and over the sync runner's observed rows
+    (``runner.observe_report``) an empty input, observed then filtered
+    then repartitioned, makes ``Observation.get`` fail
+    (``PythonSQLUtils.toPyRow: assertion failed``) after the write. A
+    partition is written as one file per input partition holding its
+    rows."""
     (
-        state.repartition("mapping_id")
-        .write.mode("overwrite")
+        state.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("mapping_id")
         .parquet(path)

@@ -117,26 +117,18 @@ def session_cached(
 
 
 # spark conf key: when set to a path, every lineage-truncation site in the
-# package (iterative label propagation, session substrates, the sync runner's
-# per-tick plans) uses a RELIABLE checkpoint rooted there instead of
-# localCheckpoint. localCheckpoint pins blocks on executors — fine on
-# local[*] and fastest there, but on a real cluster a lost executor silently
-# kills every lineage-truncated frame it hosted (SCALE.md §"What we would
-# change first"). The flag is the single switch a cluster deployment flips.
+# package (iterative label propagation, session substrates) uses a RELIABLE
+# checkpoint rooted there instead of localCheckpoint. localCheckpoint pins
+# blocks on executors — fine on local[*] and fastest there, but on a real
+# cluster a lost executor silently kills every lineage-truncated frame it
+# hosted (SCALE.md §"What we would change first"). The flag is the single
+# switch a cluster deployment flips.
 CHECKPOINT_DIR_CONF = "spark.cloud_data_sync.checkpoint_dir"
 
 # sessions (by applicationId) whose JVM checkpoint dir we already pointed at
 # a given path — setCheckpointDir is cheap but touches the filesystem, so
 # re-pin only when the configured path changes mid-session.
 _CKDIR_SET: dict[str, str] = {}
-
-# side-effecting materializations under the reliable-checkpoint flag are
-# write-then-read parquet dirs; each (app, tag) keeps exactly ONE live
-# generation — the previous dir is deleted as soon as its successor is
-# durably written, so the continuous sync loop's storage is bounded at
-# one superseded generation per tag instead of growing per tick.
-_EFFECT_DIRS: dict[tuple[str, str], str] = {}
-_EFFECT_SEQ: dict[tuple[str, str], int] = {}
 
 
 def hadoop_fs(spark: SparkSession, uri: str):
@@ -148,20 +140,7 @@ def hadoop_fs(spark: SparkSession, uri: str):
     return path.getFileSystem(sc._jsc.hadoopConfiguration()), path
 
 
-def _delete_dir(spark: SparkSession, uri: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API (works for
-    hdfs:/s3a:/gs:/abfss: roots, not just local paths); best-effort —
-    a failed cleanup must never fail the sync tick that triggered it."""
-    try:
-        fs, path = hadoop_fs(spark, uri)
-        fs.delete(path, True)
-    except Exception:  # noqa: BLE001
-        pass
-
-
-def materialize(
-    df: DataFrame, *, eager: bool, side_effecting: bool = False, tag: str = ""
-) -> DataFrame:
+def materialize(df: DataFrame, *, eager: bool) -> DataFrame:
     """Truncate ``df``'s lineage: localCheckpoint by default, a reliable
     ``df.checkpoint()`` when ``spark.cloud_data_sync.checkpoint_dir`` is set.
 
@@ -175,21 +154,12 @@ def materialize(
     required for long iterative chains where recomputing a lost block
     would replay the whole lineage that was just truncated away).
 
-    ``side_effecting=True`` declares that computing ``df`` performs
-    externally-visible work (the sync runner's copy/delete frames) that
-    must run EXACTLY once. ``df.checkpoint()`` cannot honor that: Spark's
-    reliable checkpoint runs the action's job first and then a SECOND job
-    over the same unpersisted RDD to write the checkpoint files, so every
-    copy and delete would execute twice per tick (r6 advice). Those
-    frames instead go through write-then-read parquet under the
-    checkpoint root — the write is the ONE job that runs the side
-    effects, and the returned frame is a durable file scan. ``tag`` keys
-    the superseded-generation cleanup and must be stable per logical
-    frame (e.g. ``"results"``, the sync runner's executed frame). The
-    localCheckpoint path is already exactly-once (one eager job; blocks
-    pinned, never recomputed while they exist) and is unchanged.
+    Not for a frame whose computation has side effects: Spark's reliable
+    checkpoint runs the action's job and then a second job over the same
+    unpersisted RDD to write the checkpoint files, so the effects would
+    run twice. The sync runner's copies run inside its state write.
 
-    Storage hygiene for the non-side-effecting ``df.checkpoint`` path:
+    Storage hygiene for the ``df.checkpoint`` path:
     sessions built by ``get_spark()``/the CLI set
     ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (static
     conf, session.py), so iterative loops' superseded round checkpoints
@@ -205,18 +175,6 @@ def materialize(
     if not ckdir:
         return df.localCheckpoint(eager=eager)
     app = _session_key(spark)
-    if side_effecting:
-        key = (app, tag or "untagged")
-        seq = _EFFECT_SEQ.get(key, 0) + 1
-        _EFFECT_SEQ[key] = seq
-        out = f"{ckdir.rstrip('/')}/effects/{app}/{key[1]}-{seq:06d}"
-        df.write.mode("overwrite").parquet(out)
-        result = spark.read.parquet(out)
-        prev = _EFFECT_DIRS.get(key)
-        if prev and prev != out:
-            _delete_dir(spark, prev)
-        _EFFECT_DIRS[key] = out
-        return result
     if _CKDIR_SET.get(app) != ckdir:
         spark.sparkContext.setCheckpointDir(ckdir)
         _CKDIR_SET[app] = ckdir

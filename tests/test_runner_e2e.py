@@ -5,6 +5,8 @@ extended with re-run idempotency, change detection, and the delete phase."""
 from __future__ import annotations
 
 import os
+import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -968,21 +970,128 @@ def test_batching_rule(tmp_path, pairs, batches):
     assert _batches({i: _roots(cfg, m) for i, m in enumerate(cfg.mappings)}) == batches
 
 
-def test_tick_job_count_does_not_grow_with_mappings(spark, tmp_path):
+@pytest.mark.parametrize("checkpoint_dir", [False, True], ids=["local", "checkpoint-dir"])
+def test_tick_job_count_does_not_grow_with_mappings(spark, tmp_path, checkpoint_dir):
     """A warm tick of three disjoint mappings runs as many Spark jobs as a
-    warm tick of one of them, at most four: the mappings share one
-    pipeline, which materializes once and observes the report on the way."""
-    cfg, src, tgt, state_path = _multi_env(tmp_path)
+    warm tick of one of them, at most two: the keyed shuffle's map stage
+    and the state write, which runs the copies and observes the report on
+    the way. Under a reliable-checkpoint root the tick runs the same jobs
+    and writes nothing under that root: no frame of the tick is
+    checkpointed, so no copy can run twice."""
+    from cloud_data_sync_spark.tables import CHECKPOINT_DIR_CONF
+
+    cfg, src, tgt, state_path = _multi_env(tmp_path / "buckets")
     one = Config(providers=cfg.providers, mappings=cfg.mappings[:1])
     tracker = spark.sparkContext.statusTracker()
+    ck = tmp_path / "ck"
+    if checkpoint_dir:
+        spark.conf.set(CHECKPOINT_DIR_CONF, str(ck))
+    try:
+        sync_all(spark, cfg, state_path)
+
+        def jobs(c, tick):
+            _drift(src, tick)
+            before = set(tracker.getJobIdsForGroup(None))
+            reports = sync_all(spark, c, state_path)
+            assert all("copy_success" in r.counts for r in reports)
+            return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+        counts = [jobs(one, 1), jobs(cfg, 3), jobs(one, 4), jobs(cfg, 5)]
+    finally:
+        spark.conf.unset(CHECKPOINT_DIR_CONF)
+    assert 0 < counts[0] <= 2 and len(set(counts)) == 1, counts
+    assert not ck.exists() or not any(ck.rglob("*"))
+    assert _tree(tgt) == _tree(src)
+
+
+def _partition_files(state_path):
+    """Each state file under a ``mapping_id=`` directory, with its size
+    and mtime: a rewritten partition gets new file names."""
+    root = Path(state_path)
+    return {
+        str(p.relative_to(root)): (p.stat().st_size, p.stat().st_mtime_ns)
+        for p in root.glob("mapping_id=*/*")
+        if p.is_file()
+    }
+
+
+def test_all_empty_batch_writes_no_rows_then_syncs(spark, tmp_path):
+    """A tick over a batch whose sources, targets and state are all empty
+    writes zero rows: on a fresh state path it leaves a table that loads
+    as empty, and beside another mapping's partition it leaves that
+    partition's files as they were. A tick after the sources fill copies
+    every object and still touches no other partition."""
+    cfg, src, tgt, state_path = _multi_env(tmp_path)
+    other = Config(providers=cfg.providers, mappings=cfg.mappings[:1])
+    batch = Config(providers=cfg.providers, mappings=cfg.mappings[1:])
+    filled = {m.source_bucket: _tree(src / m.source_bucket) for m in batch.mappings}
+    for bucket in filled:
+        shutil.rmtree(src / bucket)
+        (src / bucket).mkdir()
+
+    assert [r.counts for r in sync_all(spark, batch, state_path)] == [{}, {}]
+    assert _partition_files(state_path) == {}
+    assert state_mod.load_state(spark, state_path).count() == 0
+
+    assert sync_all(spark, other, state_path)[0].counts == {"copy_success": 3}
+    kept = _partition_files(state_path)
+    assert kept
+    assert [r.counts for r in sync_all(spark, batch, state_path)] == [{}, {}]
+    assert _partition_files(state_path) == kept
+
+    for bucket, tree in filled.items():
+        for name, data in tree.items():
+            _put(src / bucket / name, data, 1)
+    reports = sync_all(spark, batch, state_path)
+    assert [r.counts for r in reports] == [{"copy_success": 3}] * 2
+    assert _tree(tgt) == _tree(src)
+    assert {k: v for k, v in _partition_files(state_path).items() if k in kept} == kept
+    rows = {(r[0], r[1], r[-1]) for r in _state_rows(spark, state_path)}
+    assert rows == {
+        (m.mapping_id, name, "success")
+        for m in cfg.mappings
+        for name in _tree(src / m.source_bucket)
+    }
+
+
+def test_failed_state_write_converges_next_tick(spark, tmp_path, monkeypatch):
+    """The state write is the tick's commit: when its tasks fail after the
+    copies ran, the batch's mappings report ``mapping_failed`` and the
+    stored state is the one from before the tick. One tick without the
+    fault then converges: the target tree equals the source tree, and the
+    state holds one success row per source object. The failed tick's
+    deletes ran too, and their stored rows stay: a stored row of an
+    object gone from both buckets is kept (``reconcile``'s keep rule), so
+    this test does not claim the state holds no other row."""
+    from cloud_data_sync_spark import runner
+
+    cfg, src, tgt, state_path = _multi_env(tmp_path)
     sync_all(spark, cfg, state_path)
+    stored = _state_rows(spark, state_path)
+    _drift(src, 1)
 
-    def jobs(c, tick):
-        _drift(src, tick)
-        before = set(tracker.getJobIdsForGroup(None))
-        reports = sync_all(spark, c, state_path)
-        assert all("copy_success" in r.counts for r in reports)
-        return len(set(tracker.getJobIdsForGroup(None)) - before)
+    next_state = runner.next_state
+    monkeypatch.setattr(
+        runner,
+        "next_state",
+        lambda results: next_state(
+            results.where(
+                "action <> 'copy' OR raise_error(concat('injected: ', object_name)) IS NULL"
+            )
+        ),
+    )
+    reports = sync_all(spark, cfg, state_path)
+    assert [r.counts for r in reports] == [{"mapping_failed": 1}] * 3
+    assert _state_rows(spark, state_path) == stored
+    assert any(p.name.startswith("add-1") for p in tgt.rglob("*")), "no copy ran"
 
-    counts = [jobs(one, 1), jobs(cfg, 3), jobs(one, 4), jobs(cfg, 5)]
-    assert 0 < counts[0] <= 4 and len(set(counts)) == 1, counts
+    monkeypatch.setattr(runner, "next_state", next_state)
+    reports = sync_all(spark, cfg, state_path)
+    assert all(r.counts and "mapping_failed" not in r.counts for r in reports)
+    assert _tree(tgt) == _tree(src)
+    rows = _state_rows(spark, state_path)
+    held = {(r[0], r[1]): r[-1] for r in rows}
+    assert len(held) == len(rows)
+    for m in cfg.mappings:
+        for name in _tree(src / m.source_bucket):
+            assert held[m.mapping_id, name] == "success", (m.mapping_id, name)

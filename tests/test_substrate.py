@@ -387,77 +387,6 @@ def test_session_substrate_honors_checkpoint_conf(spark, tmp_path):
         spark.conf.unset(CHECKPOINT_DIR_CONF)
 
 
-def _effectful_frame(spark, fx_dir: str):
-    """A frame whose computation drops one uniquely-named marker file per
-    row — the marker count IS the number of times the side effects ran."""
-
-    def emit(batches):
-        import tempfile
-
-        for pdf in batches:
-            for _ in range(len(pdf)):
-                tempfile.mkstemp(dir=fx_dir)
-            yield pdf
-
-    return spark.range(0, 8, 1, 2).mapInPandas(emit, "id long")
-
-
-def test_side_effecting_materialize_runs_exactly_once(spark, tmp_path):
-    """GUARD (r6 advice, high): under spark.cloud_data_sync.checkpoint_dir,
-    a side-effecting frame must NOT go through df.checkpoint() — Spark's
-    reliable checkpoint recomputes the unpersisted RDD in a second job to
-    write the checkpoint files, so every copy/delete in the sync runner
-    would execute TWICE per tick. materialize(side_effecting=True) routes
-    write-then-read parquet instead: exactly one execution, durable result.
-    This test fails (16 markers, not 8) if that routing is ever removed."""
-    from cloud_data_sync_spark.tables import CHECKPOINT_DIR_CONF, materialize
-
-    fx = tmp_path / "fx"
-    fx.mkdir()
-    spark.conf.set(CHECKPOINT_DIR_CONF, str(tmp_path / "ck3"))
-    try:
-        out = materialize(
-            _effectful_frame(spark, str(fx)),
-            eager=True,
-            side_effecting=True,
-            tag="guard",
-        )
-        assert out.count() == 8
-        assert len(os.listdir(fx)) == 8, (
-            "side effects ran more than once under the reliable-checkpoint "
-            "flag (df.checkpoint's second job re-executed the frame)"
-        )
-        # consuming the returned frame again must scan files, not recompute
-        assert out.count() == 8
-        assert len(os.listdir(fx)) == 8
-    finally:
-        spark.conf.unset(CHECKPOINT_DIR_CONF)
-
-
-def test_side_effecting_materialize_prunes_superseded_generation(spark, tmp_path):
-    """Each (app, tag) keeps one live generation: the continuous sync loop
-    must not grow the checkpoint root per tick (r6 advice, medium)."""
-    from cloud_data_sync_spark.tables import CHECKPOINT_DIR_CONF, materialize
-
-    ck = tmp_path / "ck4"
-    spark.conf.set(CHECKPOINT_DIR_CONF, str(ck))
-    try:
-        a = materialize(
-            spark.range(3), eager=True, side_effecting=True, tag="gen"
-        )
-        assert a.count() == 3
-        b = materialize(
-            spark.range(4), eager=True, side_effecting=True, tag="gen"
-        )
-        assert b.count() == 4
-        app_dirs = list((ck / "effects").iterdir())
-        assert len(app_dirs) == 1
-        gens = [d for d in app_dirs[0].iterdir() if d.name.startswith("gen-")]
-        assert len(gens) == 1, f"superseded generation not pruned: {gens}"
-    finally:
-        spark.conf.unset(CHECKPOINT_DIR_CONF)
-
-
 # -- registry prepared-plan cache (r10) --------------------------------------
 
 
